@@ -320,11 +320,11 @@ object Multimodal {
     * contract exists for): the AudioSystem facade re-resolves its
     * provider list through a SYNCHRONIZED global lookup on EVERY
     * getAudioInputStream call — 31.6 µs/clip single-threaded
-    * (AudioDiag), and a global lock that serializes all 32 executor
-    * threads under load (the sf100 cell read ~7 ms/clip/core before
-    * this). The same SPI readers AudioSystem consults are public API
-    * (javax.sound.sampled.spi.AudioFileReader, discovered via
-    * ServiceLoader); loading them once per partition keeps the decode
+    * (BASELINE.md, "Bug 2"), and a global lock that serializes all 32
+    * executor threads under load (the sf100 cell read ~7 ms/clip/core
+    * before this). The same SPI readers AudioSystem consults are
+    * public API (javax.sound.sampled.spi.AudioFileReader, discovered
+    * via ServiceLoader); loading them once per partition keeps the decode
     * on the real JDK codec with zero shared state. WAVE readers sort
     * first — each non-matching provider costs a thrown
     * UnsupportedAudioFileException per clip. */

@@ -133,7 +133,8 @@ object DedupQueries {
     * go straight to the exact verify. 32 buckets over ~52-gram docs
     * put a non-near-dup pair's Σmin ~4σ below the 7/17 overlap bar,
     * so ~all false candidates die while every true pair provably
-    * survives. (private[graft]: NgramDiag mirrors the geometry.) */
+    * survives. (private[graft]: DedupSpec rebuilds the lanes from
+    * this geometry.) */
   private[graft] val SketchWords = 8
   private[graft] val SketchMaxS = 32768L
 
@@ -158,7 +159,14 @@ object DedupQueries {
     * (collect_list has no map-side combine); the per-doc sort+lambda
     * CPU becomes one codegen'd sort plus a boxing-free linear pass.
     * DedupSpec pins this builder cell-equal to the old aggregate
-    * formulation, and the end-to-end pair set is brute-force-pinned. */
+    * formulation, and the end-to-end pair set is brute-force-pinned.
+    *
+    * Precondition: `ex` holds exactly one row per distinct (doc_id,
+    * gram) and each row's `s` is its doc's row count, as
+    * [[explodedShingles]] emits. The builder sizes `g` from `s`, so a
+    * doc whose row count differs fails the task with an
+    * IllegalStateException naming the doc instead of verifying
+    * against a padded or truncated array. */
   private[graft] def ngramDocArrays(ex: DataFrame, freq2: DataFrame): DataFrame = {
     val spark = ex.sparkSession
     import spark.implicits._
@@ -177,15 +185,17 @@ object DedupQueries {
             Long, Long, Long, Long, Long, Long, Long, Long) = {
           val docId = cur._1
           val s = cur._2
-          // explodedShingles emits exactly one row per distinct gram,
-          // so a doc's row count IS s: exact-size allocations, no
-          // growth or trimming
           val g = new Array[Long](s)
           val sk = new Array[Long](SketchWords)
           val sketchable = s < SketchMaxS
           var i = 0
           var more = true
           while (more) {
+            if (i == s) { // a row past s: count the rest of the doc
+              var rows = i + 1
+              while (it.hasNext && it.next()._1 == docId) rows += 1
+              rowCountMismatch(docId, s, rows)
+            }
             val gram = cur._4
             g(i) = gram
             i += 1
@@ -198,6 +208,7 @@ object DedupQueries {
               if (cur._1 != docId) more = false
             } else { has = false; more = false }
           }
+          if (i != s) rowCountMismatch(docId, s, i)
           // same arithmetic as the SQL int(s - ceil(s * tau) + 1):
           // long-double multiply, ceil, truncate
           val nPrefix = (s - math.ceil(s * Tau).toLong + 1).toInt
@@ -208,6 +219,11 @@ object DedupQueries {
     }.toDF("doc_id" +: "s" +: "g" +: "prefix" +:
       (0 until SketchWords).map(w => s"sk$w"): _*)
   }
+
+  private def rowCountMismatch(docId: Long, s: Int, rows: Int): Nothing =
+    throw new IllegalStateException(
+      s"ngramDocArrays: doc_id $docId has $rows shingle rows but s = $s " +
+        "(expected one row per distinct gram)")
 
   /** The verified (id_a, id_b, j_bp) near-dup pairs behind
     * [[dedupNgramJaccard]], unordered. Returned frame is PERSISTED and

@@ -93,7 +93,7 @@ object GraphQueries {
     * the threshold the extra per-round job + GC would dominate the
     * sub-second rounds, so small corpora skip it; GraphSpec pins both
     * paths equal. */
-  val PagerankCheckpointMinEdges: Long = 10_000_000L
+  private val PagerankCheckpointMinEdges: Long = 10_000_000L
 
   def graphPagerank(spark: SparkSession, dir: String): DataFrame =
     graphPagerank(spark, dir, PagerankCheckpointMinEdges)
@@ -110,9 +110,8 @@ object GraphQueries {
     * falling back to a dimension-sized aggregate with casts inside
     * the agg so an int32-keyed deployment doesn't crash a driver
     * getLong. At 100 TB with >1B customers the layout silently stays
-    * long; same arithmetic either way. Shared with GraphDiag so the
-    * diagnostic replays the exact production layout decision. */
-  private[graft] def pagerankKeyType(spark: SparkSession, dir: String): String = {
+    * long; same arithmetic either way. */
+  private def pagerankKeyType(spark: SparkSession, dir: String): String = {
     def keyBounds(path: String, c: String): (Long, Long) =
       graft.io.GraftIO.footerStatsIndex(spark, path, Seq(c)).flatMap { idx =>
         val rows = idx.collect()
@@ -150,10 +149,8 @@ object GraphQueries {
     * graph; an unreadable/partitioned layout returns None and sorts —
     * the safe default at scale. Threshold shared with the checkpoint
     * gate: below it neither durability nor layout bytes are worth
-    * their fixed cost. GraphDiag's rounds mode shares this decision so
-    * the replay stays plan-for-plan. */
-  private[graft] def pagerankSortedLayout(
-      spark: SparkSession, dir: String, minEdges: Long = PagerankCheckpointMinEdges): Boolean =
+    * their fixed cost. */
+  private def pagerankSortedLayout(spark: SparkSession, dir: String, minEdges: Long): Boolean =
     graft.io.GraftIO.footerRowCount(spark, s"$dir/lineitem.parquet")
       .forall(rows => 2L * rows >= minEdges)
 
@@ -182,12 +179,12 @@ object GraphQueries {
     // the finished per-node contribution.
     //
     // Cache-bytes diet — post-diet the sf100 cache FITS storage
-    // memory outright (GraphDiag rounds tap, r8: 1.17B rows = 4.71 GB
-    // memory-resident, disk 0 B through all rounds, zero spills), so
-    // the diet converted "re-read from disk every round" into
-    // "probe from memory every round"; the remaining per-round cost
-    // is the aggregateMessages-class shuffle measured below, not
-    // storage misses. The levers: (a) SQL caches are
+    // memory outright (r8 rounds measurement, BASELINE.md: 1.17B
+    // rows = 4.71 GB memory-resident, disk 0 B through all rounds,
+    // zero spills), so the diet converted "re-read from disk every
+    // round" into "probe from memory every round"; the remaining
+    // per-round cost is the aggregateMessages-class shuffle measured
+    // below, not storage misses. The levers: (a) SQL caches are
     // already serialized compressed columnar batches — a *_SER
     // storage level changes nothing for an InMemoryRelation — the
     // levers that do work are (b) the int key cast above (8 B → 4 B
@@ -256,8 +253,8 @@ object GraphQueries {
       // scale the corpus-sized side stays put (a broadcast of ranks
       // would be node-count-sized: not scale-safe).
       //
-      // Round cost structure (GraphDiag rounds tap, measured at
-      // sf10/sf100): the groupBy(dst) below is the one per-round
+      // Round cost structure (measured at sf10/sf100, see
+      // BASELINE.md): the groupBy(dst) below is the one per-round
       // exchange — the aggregateMessages shuffle every distributed
       // PageRank pays. Its size is Σ_p min(edges_p, distinct_dst_p):
       // while nodes < edges-per-partition the map-side combine

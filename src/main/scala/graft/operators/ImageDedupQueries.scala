@@ -113,10 +113,8 @@ object ImageDedupQueries {
       blocks)
 
   /** The banding + verify pair pipeline over a prebuilt (media_id,
-    * phash) frame — split out (r12) so the codec A/B diag can time the
-    * FULL query with an alternative decode stage feeding the identical
-    * pair plan. Production always feeds it the fast-path corpus. */
-  private[graft] def pairsFromHashes(hashes0: DataFrame, blocks: Int): DataFrame = {
+    * phash) frame. */
+  private def pairsFromHashes(hashes0: DataFrame, blocks: Int): DataFrame = {
     val spark = hashes0.sparkSession
     import spark.implicits._
     val hashes = hashes0

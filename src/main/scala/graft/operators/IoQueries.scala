@@ -155,19 +155,20 @@ object IoQueries {
     // Plan (r11 optimization): the single-agg form with k countDistinct
     // columns planned an Expand that copies every row k+1 times through
     // two hash aggregates — measured 3.1 s of the 4.1 s sf0.1 cell for
-    // k=9 (ProfileDiag A1 vs B: the non-distinct aggregates alone cost
-    // 0.33 s). Instead: ONE full-width scan computes every non-distinct
-    // aggregate, and each exact distinct count runs as its own
-    // single-COLUMN job (parquet prunes to just that column, and the
-    // two-level hash aggregate dedups map-side — no Expand, no widened
-    // rows). The k+1 independent jobs are submitted concurrently
-    // (guide-§2.6 overlap: actions are only sequential because driver
-    // code calls them sequentially), so wall-clock is the slowest
-    // column, not the sum — measured 0.67 s for the same exact values
-    // (ProfileDiag D). Total bytes read ~2x the one-scan form but each
-    // distinct scan reads ONE column; the Expand form's k+1-fold row
-    // copy through exchange-feeding aggregates is the term that
-    // dominated at every scale.
+    // k=9 (r11 phase attribution, BASELINE.md and OPTIMIZATION_r11.md
+    // §1: the non-distinct aggregates alone cost 0.33 s). Instead: ONE
+    // full-width scan computes every non-distinct aggregate, and each
+    // exact distinct count runs as its own single-COLUMN job (parquet
+    // prunes to just that column, and the two-level hash aggregate
+    // dedups map-side — no Expand, no widened rows). The k+1
+    // independent jobs are submitted concurrently (guide-§2.6 overlap:
+    // actions are only sequential because driver code calls them
+    // sequentially), so wall-clock is the slowest column, not the sum —
+    // measured 0.67 s for the same exact values (same source). Total
+    // bytes read ~2x the one-scan form but each distinct scan reads ONE
+    // column; the Expand form's k+1-fold row copy through
+    // exchange-feeding aggregates is the term that dominated at every
+    // scale.
     val aggsNd: Seq[Column] = count(lit(1)).as("n_rows") +: fields.toSeq.flatMap { f =>
       val c = col(f.name)
       // coalesce: a zero-row input makes sum() null, and getLong on a

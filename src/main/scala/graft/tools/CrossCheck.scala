@@ -16,6 +16,11 @@ import org.apache.spark.sql.SparkSession
   * partitioning-order float drift would be a REAL finding, not noise).
   *
   * Exit code = number of mismatching queries; one line per query.
+  *
+  * Kept as a main because nothing else compares whole result sets
+  * across masters: the gate and the specs run every query in one JVM,
+  * so they cannot catch a plan that breaks under executor-boundary
+  * serialization.
   */
 object CrossCheck {
   def main(args: Array[String]): Unit = {

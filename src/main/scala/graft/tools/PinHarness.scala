@@ -20,6 +20,10 @@ import graft.text.TextFunctions
   * pin, nonzero exit if any fail. The brute-force sides are
   * distributed (all-pairs at sf0.1 is ~12.5M candidate pairs — fine
   * as a once-per-round check, never a library path).
+  *
+  * Kept as a main because it is the only check of these operators'
+  * guarantees at bench scale: the DuckDB gate has no oracle for them,
+  * and the specs run them only on the sf0.001 corpus.
   */
 object PinHarness {
 

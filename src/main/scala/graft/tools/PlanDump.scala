@@ -12,7 +12,10 @@ import java.nio.file.{Files, Paths}
   *
   * Queries that materialize internally (pagerank, k-means report)
   * return a driver-local/cached tail — the file still records it, with
-  * a NOTE header, same caveat as tools.Explain.
+  * a NOTE header.
+  *
+  * Kept as a main because a speed claim needs before/after plan dumps
+  * beside its A/B (ROADMAP), and this is what writes them.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -183,6 +183,22 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(now.keySet === was.keySet)
     now.foreach { case (id, cell) => assert(cell === was(id), s"doc $id") }
     assert(now.nonEmpty)
+
+    // a doc whose row count disagrees with s must fail naming the doc:
+    // a missing row would otherwise verify against a zero-padded g, a
+    // duplicated one would overrun it
+    val (victim, gram0) = ex.filter($"s" >= 2).select($"doc_id", $"gram")
+      .as[(Long, Long)].first()
+    val row = $"doc_id" === victim && $"gram" === gram0
+    Seq("removed" -> ex.filter(!row), "duplicated" -> ex.union(ex.filter(row)))
+      .foreach { case (what, broken) =>
+        val e = intercept[org.apache.spark.SparkException](
+          DedupQueries.ngramDocArrays(broken, freq2).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(_.toString).mkString("\n")
+        assert(msgs.contains("IllegalStateException") && msgs.contains(s"doc_id $victim has"),
+          s"row $what: $msgs")
+      }
   }
 
   test("minhash-LSH clusters: no false positives, high recall vs exact jaccard (sf0.001)") {
