@@ -1,14 +1,45 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
   * One parquet file per table under `sfDir`. All reads are plain
   * `spark.read.parquet` so Catalyst owns pushdown + pruning.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Inferred schemas, per session (parquet inference reads session
+    * conf such as nanosAsLong), keyed on the table's qualified path and
+    * stamped with its version: (name, length, modification time) of
+    * the file, or of each file of a table directory. A rewritten table
+    * no longer matches its stamp and is inferred again. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
+      String, (Seq[(String, Long, Long)], StructType)]]())
+
+  /** `spark.read.parquet` of `dir/name.parquet`, inferring its schema
+    * once per table version: inference is a Spark job of its own (a
+    * footer read), paid on every read of an unchanged table otherwise.
+    * A hit costs one file-status call (plus a listing for a table
+    * directory). */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = s"$dir/$name.parquet"
+    val path = new Path(file)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(path)
+    val version = (if (st.isDirectory) fs.listStatus(path).toSeq else Seq(st))
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
+    val perSession = schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+    val cached = perSession.get(st.getPath.toString)
+    val schema = if (cached != null && cached._1 == version) cached._2 else {
+      val inferred = spark.read.parquet(file).schema
+      perSession.put(st.getPath.toString, (version, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(file)
+  }
 
   /** `events.ts` is epoch-nanos BIGINT everywhere downstream (all event
     * queries and their DuckDB `epoch_ns` oracles do integer nanos

@@ -109,6 +109,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       BloomContains.Info, BloomContains.Builder))
     ext.injectFunction((FunctionIdentifier("graft_text_counts"),
       TextScanCounts.Info, TextScanCounts.Builder))
+    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
+      ShingleHashes.Info, ShingleHashes.Builder))
     ext.injectFunction((FunctionIdentifier("graft_topk"),
       TopK.Info, TopK.Builder))
   }

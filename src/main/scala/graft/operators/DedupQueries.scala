@@ -25,7 +25,10 @@ import graft.similarity.{ConnectedComponents, Similarity}
   *    which costs ~10× on 64-lane signatures (measured 22s → ~4s at
   *    sf0.1).
   *  - Exact dedup shuffles a 32-byte digest + id, never full text.
-  *  - Cluster assembly is iteration-bounded label propagation.
+  *  - Cluster assembly is an exact driver-side union-find over one
+  *    collect of the verified pairs whenever there are at most
+  *    ConnectedComponents.DriverUnionFindMaxEdges (2M) of them, and
+  *    iteration-bounded label propagation above that.
   */
 object DedupQueries {
 
@@ -51,14 +54,13 @@ object DedupQueries {
     * the pipeline author, not buried in this helper. */
   private[graft] def explodedShingles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // ONE Generate evaluation per row: the (count, gram) structs come
-    // pre-paired, so neither a filter nor a size() projection
-    // re-evaluates the shingle expression (explode of an empty array
-    // already drops gram-less docs).
+    graft.functions.ShingleHashes.ensureRegistered(spark)
+    // the native hash array is evaluated ONCE per doc (its own
+    // projection); size and explode only read it, and explode of an
+    // empty array drops gram-less docs
     Tables.widened(Tables.documents(spark, dir))
-      .select($"doc_id",
-        explode(Similarity.wordNgramStructs(TextFunctions.wsTokens($"text"), 3)).as("x"))
-      .select($"doc_id", $"x.s".as("s"), xxhash64($"x.gram").as("gram"))
+      .select($"doc_id", Similarity.shingleHashes($"text", 3).as("h"))
+      .select($"doc_id", size($"h").as("s"), explode($"h").as("gram"))
   }
 
   /** Exact-jaccard verify of candidate (id_a, id_b) pairs against the
@@ -259,9 +261,19 @@ object DedupQueries {
 
     // Prefix rows carry their 1-based POSITION, which — because the
     // prefix is the head of the doc's (df, gram)-sorted gram sequence —
-    // is the gram's rank in that global order within the doc.
-    val preAB = arrays.select($"doc_id", $"s", posexplode($"prefix").as(Seq("p0", "gram")))
-      .select($"doc_id", $"s", ($"p0" + 1).as("p"), $"gram")
+    // is the gram's rank in that global order within the doc. They also
+    // carry the doc's 8 sketch words, so the sketch prune below reads
+    // them off the candidate row instead of joining them back per pair
+    // side. Cost at scale: a prefix row grows from ~28 B to ~92 B (the
+    // gram-keyed self-join exchange and the candidate aggregate's
+    // partial rows carry 64 B more), and in exchange the two
+    // candidate-sized join shuffles that attached the sketches — plus
+    // their two scans of `arrays` — go away.
+    val sk = (0 until SketchWords).map(w => s"sk$w")
+    val preAB = arrays
+      .select(($"doc_id" +: $"s" +: sk.map(col)) :+
+        posexplode($"prefix").as(Seq("p0", "gram")): _*)
+      .select(($"doc_id" +: $"s" +: sk.map(col)) :+ ($"p0" + 1).as("p") :+ $"gram": _*)
     // PPJoin positional filter (Xiao '08), the candidate-volume lever
     // that keeps the verify phase from dominating at scale: J >= tau
     // requires overlap O >= ceil(tau/(1+tau) * (sa+sb)). For the pair's
@@ -278,11 +290,21 @@ object DedupQueries {
     // candidates are the multiplier on that volume, and the unpruned
     // candidate set (~400x the true pairs on this corpus) is what
     // filled the disk.
-    val candidates = preAB.as("a").join(preAB.as("b"),
+    //
+    // The sketch words ride through the aggregate as grouping keys: they
+    // are functions of the doc, so grouping by them next to the doc ids
+    // splits no group.
+    val minSum = (for { w <- 0 until SketchWords; b <- 0 until 4 } yield
+      least(shiftright(col(s"ska$w"), 16 * b).bitwiseAND(lit(0xFFFFL)),
+        shiftright(col(s"skb$w"), 16 * b).bitwiseAND(lit(0xFFFFL))))
+      .reduce(_ + _)
+    val pruned = preAB.as("a").join(preAB.as("b"),
         $"a.gram" === $"b.gram" && $"a.doc_id" < $"b.doc_id" &&
           $"b.s" >= ceil($"a.s" * Tau) && $"a.s" >= ceil($"b.s" * Tau))
-      .groupBy($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
-        $"a.s".as("sa"), $"b.s".as("sb"))
+      .groupBy(Seq($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
+          $"a.s".as("sa"), $"b.s".as("sb")) ++
+        sk.indices.map(w => col(s"a.sk$w").as(s"ska$w")) ++
+        sk.indices.map(w => col(s"b.sk$w").as(s"skb$w")): _*)
       .agg(min($"a.p").as("pa"), min($"b.p").as("pb"),
         max($"a.p").as("qa"), max($"b.p").as("qb"), count(lit(1)).as("c"))
       // second bound, same reasoning anchored on the LAST shared prefix
@@ -293,31 +315,19 @@ object DedupQueries {
         expr("(7 * (sa + sb) + 16) div 17") &&
         $"c" + least($"sa" - $"qa", $"sb" - $"qb") >=
         expr("(7 * (sa + sb) + 16) div 17"))
-      .select($"id_a", $"id_b", $"sa", $"sb")
-
-    // Sketch prune BEFORE any gram array is attached per pair: at sf100
-    // the unpruned verify exchange carried (pair, two ~52-gram long
-    // arrays) ≈ 25 GB through one shuffle — candidates outnumber true
-    // pairs ~100:1, so per-pair payload is the whole bill. The sketch
-    // joins ship 64 B of packed counts per pair instead; candidates
-    // whose exact intersection upper bound cannot reach the 7/17
-    // overlap bar (the same integer arithmetic as the positional
-    // filter) die here, and only the survivors — essentially the true
-    // pair set — ever fetch full arrays. Provably lossless: see
-    // SketchWords. Docs with s >= 32768 skip the prune (lane carry /
-    // ANSI overflow would void the bound — see SketchMaxS) and go
-    // straight to the exact verify.
-    val skA = arrays.select($"doc_id".as("id_a") +:
-      (0 until SketchWords).map(w => col(s"sk$w").as(s"ska$w")): _*)
-    val skB = arrays.select($"doc_id".as("id_b") +:
-      (0 until SketchWords).map(w => col(s"sk$w").as(s"skb$w")): _*)
-    val minSum = (for { w <- 0 until SketchWords; b <- 0 until 4 } yield
-      least(shiftright(col(s"ska$w"), 16 * b).bitwiseAND(lit(0xFFFFL)),
-        shiftright(col(s"skb$w"), 16 * b).bitwiseAND(lit(0xFFFFL))))
-      .reduce(_ + _)
-    val pruned = candidates
-      .join(skA, "id_a")
-      .join(skB, "id_b")
+      // Sketch prune BEFORE any gram array is attached per pair: at
+      // sf100 the unpruned verify exchange carried (pair, two ~52-gram
+      // long arrays) ≈ 25 GB through one shuffle — candidates outnumber
+      // true pairs ~100:1, so per-pair payload is the whole bill.
+      // Candidates whose exact intersection upper bound cannot reach
+      // the 7/17 overlap bar (the same integer arithmetic as the
+      // positional filter) die here, and only the survivors —
+      // essentially the true pair set — ever fetch full arrays.
+      // Provably lossless: see SketchWords. Docs with s >= 32768 skip
+      // the prune (lane carry / ANSI overflow would void the bound — see
+      // SketchMaxS) and go straight to the exact verify. The predicate
+      // reads grouping keys only, so Catalyst pushes it below the
+      // aggregate into the self-join condition.
       .filter($"sa" >= SketchMaxS || $"sb" >= SketchMaxS ||
         lit(17L) * minSum >= lit(7L) * ($"sa" + $"sb"))
       .select($"id_a", $"id_b")
@@ -384,8 +394,9 @@ object DedupQueries {
 
   /** MinHash + LSH near-dup clustering: 64 codegen'd min-aggregate
     * lanes over hashed shingles → 16 bands × 4 rows → bucket join for
-    * candidates → exact jaccard verify (>= tau) → bounded
-    * label-propagation components. Output: every clustered doc with
+    * candidates → exact jaccard verify (>= tau) → connected components
+    * (driver union-find / bounded label propagation, as in
+    * [[dedupClusterRep]]). Output: every clustered doc with
     * its cluster representative. */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -445,14 +456,13 @@ object DedupQueries {
       .distinct()
     // persisted: verifyJaccard joins this frame once per pair side,
     // and AQE exchange reuse across the two references is not
-    // guaranteed — without the cache the candidate shingle scan and
-    // the collect_list shuffle can run twice. Candidate-doc-sized.
+    // guaranteed — without the cache the candidate shingle scan can
+    // run twice. Candidate-doc-sized. The arrays are one map-side
+    // projection of the native hashes (already distinct per doc), so
+    // no explode and no collect_list shuffle.
     val arrays = Tables.documents(spark, dir)
       .join(candIds, Seq("doc_id"), "left_semi")
-      .select($"doc_id",
-        explode(Similarity.wordNgramStructs(TextFunctions.wsTokens($"text"), 3)).as("x"))
-      .select($"doc_id", xxhash64($"x.gram").as("gram"))
-      .groupBy($"doc_id").agg(sort_array(collect_list($"gram")).as("g"))
+      .select($"doc_id", sort_array(Similarity.shingleHashes($"text", 3)).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val edges = verifyJaccard(candidates, arrays)

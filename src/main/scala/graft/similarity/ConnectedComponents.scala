@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -67,18 +67,26 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // Materialize the edge list FIRST: it is tiny (verified near-dup
+    // Persist the edge list FIRST: it is tiny (verified near-dup
     // pairs), but its lineage is the whole candidate+verify pipeline —
-    // without this, building the adjacency re-executes that pipeline a
-    // second time.
+    // without this, the distributed path below re-executes that
+    // pipeline once per reference.
     val e = edges.select($"src", $"dst").persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = e.count()
 
-    if (edgeCount <= driverThreshold) {
-      val result = unionFindLocal(e)
-      e.unpersist()
-      // exact (full path compression): always converged
-      return Result(result, converged = true, iterations = 0)
+    // ONE collect, with no count before it, decides the path and, when
+    // the edges fit, fetches them: at most driverThreshold + 1 edges
+    // either are the whole list (driver union-find) or prove it is over
+    // the threshold (distributed loop, over the same persisted frame).
+    // A negative threshold skips the collect and forces the distributed
+    // path.
+    if (driverThreshold >= 0) {
+      val fetched = e.select($"src".cast("long"), $"dst".cast("long")).as[(Long, Long)]
+        .limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+      if (fetched.length <= driverThreshold) {
+        e.unpersist()
+        // exact (full path compression): always converged
+        return Result(unionFindLocal(spark, fetched), converged = true, iterations = 0)
+      }
     }
 
     val adj = e
@@ -205,10 +213,10 @@ object ConnectedComponents {
   /** Exact union-find over a collected edge list: component = minimum
     * reachable id (path compression + union by min keeps the invariant
     * the distributed loop converges to). One pass over the edges, one
-    * createDataFrame back out. */
-  private def unionFindLocal(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
+    * createDataFrame back out. The edges arrive from a typed collect:
+    * specialized Tuple2[Long, Long], primitive fields, no per-row Row
+    * object or boxing. */
+  private def unionFindLocal(spark: SparkSession, edges: Array[(Long, Long)]): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var root = x
@@ -219,11 +227,7 @@ object ConnectedComponents {
       }
       root
     }
-    // collect(), not toLocalIterator(): the latter launches one job PER
-    // PARTITION (32 sequential tiny jobs here). Typed collect returns
-    // specialized Tuple2[Long, Long] — primitive fields, no per-row Row
-    // object or boxing.
-    e.select($"src".cast("long"), $"dst".cast("long")).as[(Long, Long)].collect().foreach { t =>
+    edges.foreach { t =>
       val (a, b) = (find(t._1), find(t._2))
       // every endpoint must appear in the map (roots map to themselves)
       parent.putIfAbsent(a, a)

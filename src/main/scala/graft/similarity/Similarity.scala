@@ -54,6 +54,15 @@ object Similarity {
       transform(gs, g => struct(size(gs).as("s"), g.as("gram")))
     }
 
+  /** Distinct `xxhash64` values of the word n-grams of `text` under
+    * `wordNgrams(TextFunctions.wsTokens(text), n)`, as `array<bigint>`
+    * — the native expression graft.functions.ShingleHashes (one byte
+    * walk, no gram strings; distinct is taken on the hashes). Requires
+    * the graft extensions or `ShingleHashes.ensureRegistered`, like
+    * [[cosine]]. */
+  def shingleHashes(text: Column, n: Int): Column =
+    call_function("graft_shingle_hashes", text, lit(n))
+
   /** k-permutation MinHash signature: element i is
     * min over grams of xxhash64(i, gram) — one draw per "permutation"
     * seeded by the lane index. Empty gram set → null-free empty guard

@@ -24,6 +24,16 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val lp = ConnectedComponents.labelWithStatus(edges, driverThreshold = -1L)
     assert(lp.converged)
     assert(lp.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === expected)
+    // one collect of driverThreshold + 1 edges picks the path: the
+    // 3-edge triangle fits a threshold of 3 (driver union-find, no
+    // iterations), the 4-edge chain does not (distributed loop)
+    Seq(Set(10L, 11L, 12L) -> true, Set(1L, 2L, 3L, 4L, 5L) -> false).foreach { case (ids, driver) =>
+      val sub = edges.filter($"src".isin(ids.toSeq: _*))
+      val r = ConnectedComponents.labelWithStatus(sub, driverThreshold = 3L)
+      assert(r.converged && (r.iterations == 0) === driver, s"component of ${ids.min}")
+      assert(r.labels.collect().map(row => row.getLong(0) -> row.getLong(1)).toMap ===
+        expected.filter(kv => ids(kv._1)))
+    }
   }
 
   test("connected components: distributed path surfaces non-convergence on a long chain") {
@@ -145,6 +155,42 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
     assert(exact === brute)
     assert(brute.nonEmpty, "corpus should contain near-dup pairs")
+  }
+
+  test("graft_shingle_hashes rows == wordNgramStructs + xxhash64 rows (n = 3 and 5)") {
+    import spark.implicits._
+    // adversarial edges of the wsTokens contract: Spark's trim strips
+    // 0x20 only and split keeps limit -1's edge tokens (so a leading or
+    // trailing \t or \x0B adds an empty token), Java's ASCII \s run
+    // splitting, fewer than n tokens, empty/blank/null text, CJK and
+    // astral code points, and repeated grams
+    val adversarial = Seq(
+      "\tlead tab then several more words", "trailing tab after words here\t",
+      "\u000Bvertical tab edges a b\u000B", " \t mixed \n\r ws \f runs \u000B here \t ",
+      "two words", "", "      ", null, "\t", " \t ",
+      "一二三 四五六 七八九 十 🙂 𝄞 astral 🚀 grams 😀😀 end",
+      "a b c a b c a b c a b c a b c", "x\t\ty\n\nz  w\r\nv u",
+      "\u00a0nbsp is not java whitespace at all")
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+      .union(adversarial.zipWithIndex.map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Int, Long)].collect().groupBy(identity).map { case (k, v) => k -> v.length }
+    for (n <- Seq(3, 5)) {
+      val was = docs.select($"doc_id",
+          explode(Similarity.wordNgramStructs(TextFunctions.wsTokens($"text"), n)).as("x"))
+        .select($"doc_id", $"x.s".as("s"), xxhash64($"x.gram").as("gram"))
+      val now = docs.select($"doc_id", Similarity.shingleHashes($"text", n).as("h"))
+        .select($"doc_id", size($"h").as("s"), explode($"h").as("gram"))
+      val (w, h) = (rows(was), rows(now))
+      assert(h === w, s"n = $n")
+      assert(w.keySet.exists(_._1 < 0) && w.size > 1000, s"n = $n: ${w.size} rows")
+    }
+    // distinct is on hashes, in first-occurrence order; null in, null out
+    val r = Seq[String]("a b c a b c", null).toDF("t")
+      .select(Similarity.shingleHashes($"t", 3)).collect()
+    assert(r(0).getSeq[Long](0) ===
+      Seq("a b c", "b c a", "c a b").map(g => Seq(g).toDF("g").select(xxhash64($"g")).first().getLong(0)))
+    assert(r(1).isNullAt(0))
   }
 
   test("ngramDocArrays == old collect_list/array_sort aggregate, cell for cell (sf0.001)") {
