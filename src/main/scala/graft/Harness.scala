@@ -9,6 +9,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Harness {
 
+  /** Local core count of every main: SPARK_GRAFT_CPUS when set, else
+    * all cores the JVM sees. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   /** Reduce-stage parallelism sized to the DATA, the way a production
     * job sizes spark.sql.shuffle.partitions to its input: one initial
     * partition per 64 MB of corpus, floored at the core count (small

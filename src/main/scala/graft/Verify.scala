@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     // session recipe (data-sized reduce parallelism, adaptive scan
     // splits) shared with Bench — see Harness for the rationale
     val spark = Harness.buildSession(sfDir, cpus)

@@ -81,6 +81,8 @@ object AnnQueries {
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val bucketed = Similarity.hyperplaneBucketsDf(emb, "vec_id", "embedding", 16, 4)
       .join(emb, "vec_id")
+      .select($"vec_id", $"embedding", explode($"bands").as("bb"))
+      .select($"vec_id", $"embedding", $"bb.band", $"bb.band_bits")
 
     val queries = bucketed.filter($"vec_id" < NQueries)
       .select($"vec_id".as("qid"), $"embedding".as("qvec"), $"band", $"band_bits")

@@ -15,6 +15,12 @@ import graft.similarity.{ConnectedComponents, Similarity}
   *    keyed on a blocking value — (band, band_hash) for MinHash LSH and
   *    SimHash, a frequency-ordered rare-token prefix for the exact
   *    jaccard join — so the shuffle is uniform and buckets stay small.
+  *  - The banded families (MinHash, SimHash, embedding cosine, and
+  *    image dHash / semantic decontamination elsewhere) all block
+  *    through Similarity.lshPairs, the one kernel that owns the
+  *    one-row-per-item cache, the hot-bucket cap, the band self-join,
+  *    the pair dedupe and the release of the cache; each family
+  *    supplies only its band expression and pair step.
   *  - Shingles are 64-bit hashes from the first shuffle on: set
   *    intersection and frequency counting run on longs, never on
   *    document strings (collision odds over the whole corpus are
@@ -35,12 +41,6 @@ object DedupQueries {
   private[graft] val Tau = 0.7
   private val MinhashLanes = 64
   private val MinhashBands = 16 // 4 rows per band
-
-  /** Hot-bucket cap for every LSH candidate join (see
-    * Similarity.boundBuckets): far above any bucket this corpus
-    * produces — the gate results are unchanged — but at 100 TB it is
-    * the guard that keeps one degenerate bucket from going quadratic. */
-  private val MaxBucket = 10000
 
   /** Exploded word-3-gram shingles, hashed to 64 bits: one row per
     * (doc_id, gram_hash), with the doc's distinct-shingle count `s`.
@@ -236,8 +236,8 @@ object DedupQueries {
     import spark.implicits._
     // persisted: the exploded-shingle pipeline feeds the document-
     // frequency aggregate and the per-doc array aggregate — two
-    // executions without the cache (same reasoning as the signature
-    // persists in the other dedup paths). Released once the verified
+    // executions without the cache (same reasoning as the item cache
+    // in Similarity.lshPairs). Released once the verified
     // pairs are materialized.
     val ex = explodedShingles(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -413,32 +413,21 @@ object DedupQueries {
     // below.)
     val laneAggs = (0 until MinhashLanes).map(i =>
       min(xxhash64(lit(i), $"gram")).as(s"h$i"))
-    // persisted: referenced by both sides of the band self-join, and
-    // fixed-width (one 520-byte row per doc) at any scale.
-    // Unpersisted below once the edge list is materialized.
-    val sigs = ex.groupBy($"doc_id").agg(laneAggs.head, laneAggs.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     val r = MinhashLanes / MinhashBands
     val bandStructs = (0 until MinhashBands).map { b =>
       val laneCols: Seq[Column] = (b * r until (b + 1) * r).map(i => col(s"h$i"))
       struct(lit(b).as("band"), xxhash64(lit(b) +: laneCols: _*).as("band_hash"))
     }
-    val buckets = Similarity.boundBuckets(
-      sigs.select($"doc_id", explode(array(bandStructs: _*)).as("bb"))
-        .select($"doc_id", $"bb.band", $"bb.band_hash"),
-      Seq("band", "band_hash"), MaxBucket)
+    // one row per doc: its 16 band structs, hashed once from the lanes
+    val items = ex.groupBy($"doc_id").agg(laneAggs.head, laneAggs.tail: _*)
+      .select($"doc_id".as("id"), array(bandStructs: _*).as("bands"))
 
-    // persisted: referenced three times below (both candIds union
-    // legs AND the verify join) — without the cache the band
-    // self-join re-executes per reference. Candidate-pair-sized, far
-    // below the corpus.
-    val candidates = buckets.as("a").join(buckets.as("b"),
-        $"a.band" === $"b.band" && $"a.band_hash" === $"b.band_hash" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // candidates come back persisted: they are referenced three times
+    // below (both candIds union legs AND the verify join)
+    val candidates = Similarity.lshPairs("dedup_minhash_lsh", items, $"bands",
+        $"a.id" < $"b.id") {
+      _.select($"a.id".as("id_a"), $"b.id".as("id_b"))
+    }
 
     // Verify arrays for CANDIDATE docs only: semi-join the RAW
     // documents scan down to candidate ids BEFORE shingling (a left
@@ -469,10 +458,8 @@ object DedupQueries {
       .select($"id_a".as("src"), $"id_b".as("dst"))
 
     // label() materializes (and persists) the edge list up front, after
-    // which nothing re-reads sigs, candidates or arrays: safe to
-    // release here
+    // which nothing re-reads candidates or arrays: safe to release here
     val labels = ConnectedComponents.label(edges)
-    sigs.unpersist()
     candidates.unpersist()
     arrays.unpersist()
     labels
@@ -521,41 +508,10 @@ object DedupQueries {
 
     val sigBits = (0 until 64).map(j =>
       when(col(s"c$j") * 2 >= $"n", lit(1L << j)).otherwise(lit(0L)))
-    // persisted: the bucket frame feeds the hot-bucket aggregation, its
-    // anti-join, and both sides of the candidate self-join — without
-    // the cache the token-explode + 65-agg pipeline can execute 4x
-    // (same hazard the minhash path persists against). Released after
-    // the verified pairs are materialized below.
-    val sigs = counted.select($"doc_id",
-        sigBits.reduce((a, b) => a.bitwiseOR(b)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val buckets = Similarity.boundBuckets(
-      sigs.select($"doc_id", $"sig",
-          explode(Similarity.simhashBlockCombos($"sig", blocks, maxHamming)).as("bb"))
-        .select($"doc_id", $"sig", $"bb.band", $"bb.band_bits"),
-      Seq("band", "band_bits"), MaxBucket)
-
-    // comboAgrees kills band-key coincidences map-side before the
-    // dedup exchange (the same emission discipline as
-    // dedup_image_phash: aggregate over every truly-agreeing band so a
-    // pair survives boundBuckets dropping any one of its buckets)
-    val pairs = buckets.as("a").join(buckets.as("b"),
-        $"a.band" === $"b.band" && $"a.band_bits" === $"b.band_bits" &&
-          $"a.doc_id" < $"b.doc_id")
-      .filter(Similarity.comboAgrees(
-        $"a.sig".bitwiseXOR($"b.sig"), $"a.band", blocks, maxHamming))
-      .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"),
-        Similarity.hamming64($"a.sig", $"b.sig").cast("long").as("hamming"))
-      .filter($"hamming" <= maxHamming)
-      .groupBy($"id_a", $"id_b").agg(min($"hamming").as("hamming"))
-      // materialized + persisted so sigs can be released eagerly (the
-      // returned frame is PERSISTED — long-lived sessions should
-      // unpersist once consumed, as with ConnectedComponents.label)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    sigs.unpersist()
-    pairs.orderBy($"id_a", $"id_b")
+    val sigs = counted.select($"doc_id".as("id"),
+      sigBits.reduce((a, b) => a.bitwiseOR(b)).as("sig"))
+    Similarity.hammingPairs("dedup_simhash", sigs, blocks, maxHamming)
+      .orderBy($"id_a", $"id_b")
   }
 
   /** Bounded edit-distance near-dup join via shift-tolerant pigeonhole
@@ -672,8 +628,8 @@ object DedupQueries {
     // persisted + materialized: the candidate subtree feeds both text
     // joins of the verify step, and without the cache the whole
     // segment/probe join pipeline re-executes per branch (measured
-    // 51.6 s → ~11 s on a 10× corpus). Same hazard the minhash and
-    // simhash paths persist against; released after the verified
+    // 51.6 s → ~11 s on a 10× corpus). Same hazard Similarity.lshPairs
+    // caches its items against; released after the verified
     // pairs exist.
     // tiny-bucket path: the segment pigeonhole is vacuous when the
     // shorter side has < k+1 chars — pair those docs directly against
@@ -716,7 +672,9 @@ object DedupQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pairs.count()
     candidates.unpersist()
-    pairs.orderBy($"id_a", $"id_b")
+    // the returned pairs stay persisted: registered for the caller to
+    // release (graft.CacheLedger)
+    graft.CacheLedger.register("dedup_edit_blocked", pairs).orderBy($"id_a", $"id_b")
   }
 
   /** Exact Levenshtein distance when it is <= k, else -1, in O(k·n):
@@ -784,33 +742,19 @@ object DedupQueries {
       zip_with($"embedding", sequence(lit(0), size($"embedding") - 1),
         (x, d) => x * when(d % 2 === 0, lit(1.02f)).otherwise(lit(0.98f))).as("embedding"))
     val corpus = base.union(perturbed)
-
-    // persisted for the same 4-reference reason as the simhash/minhash
-    // signature frames; released once CC has materialized the edges.
-    // The embedding rides along in the cached frame so the verify step
-    // scores directly off the self-join — no re-join against the corpus
-    // (a 64-float payload per band is cheap; the minhash path makes the
-    // opposite call because its payload is the full shingle array).
-    val rawBuckets = Similarity.hyperplaneBucketsDf(corpus, "vec_id", "embedding", 64, 4)
+    // the embedding rides in the cached items so pairs score straight
+    // off the self-join — no re-join against the corpus (a 64-float
+    // payload is cheap; the minhash path makes the opposite call
+    // because its payload is the full shingle array)
+    val items = Similarity.hyperplaneBucketsDf(corpus, "vec_id", "embedding", 64, 4)
       .join(corpus, "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = Similarity.boundBuckets(rawBuckets, Seq("band", "band_bits"), MaxBucket)
-
-    // score BEFORE the multi-band distinct: cosine is deterministic, so
-    // distinct over (src, dst, cos) == distinct over the pair, and the
-    // shuffle carries scalars instead of embedding arrays
-    val edges = buckets.as("a").join(buckets.as("b"),
-        $"a.band" === $"b.band" && $"a.band_bits" === $"b.band_bits" &&
-          $"a.vec_id" < $"b.vec_id")
-      .select($"a.vec_id".as("src"), $"b.vec_id".as("dst"),
-        Similarity.cosine($"a.embedding", $"b.embedding").as("cos"))
-      .distinct()
-      .filter($"cos" >= tau)
-      .select($"src", $"dst")
+      .select($"vec_id".as("id"), $"bands", $"embedding")
+    val pairs = Similarity.cosinePairs("dedup_embedding_cosine", items,
+      $"a.id" < $"b.id", tau)
 
     // label() materializes (and persists) the edge list up front
-    val labels = ConnectedComponents.label(edges)
-    rawBuckets.unpersist()
+    val labels = ConnectedComponents.label(pairs.select($"id_a".as("src"), $"id_b".as("dst")))
+    pairs.unpersist()
     labels
       .select($"id".as("vec_id"), $"component".as("cluster_rep"))
       .orderBy($"vec_id")

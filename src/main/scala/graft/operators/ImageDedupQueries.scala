@@ -107,48 +107,11 @@ object ImageDedupQueries {
     * widths and pins pair-set equality (completeness does not depend
     * on the width, so the adaptive switch can never change results). */
   private[graft] def dedupImagePhashBlocks(
-      spark: SparkSession, dir: String, blocks: Int): DataFrame =
-    pairsFromHashes(
-      Multimodal.decodeImagePhash(encodedCorpus(spark, dir)).toDF("media_id", "phash"),
-      blocks)
-
-  /** The banding + verify pair pipeline over a prebuilt (media_id,
-    * phash) frame. */
-  private def pairsFromHashes(hashes0: DataFrame, blocks: Int): DataFrame = {
-    val spark = hashes0.sparkSession
+      spark: SparkSession, dir: String, blocks: Int): DataFrame = {
     import spark.implicits._
-    val hashes = hashes0
-      // persisted: the bucket frame feeds both sides of the candidate
-      // self-join (and the hot-bucket anti-join) — without the cache
-      // the encode+decode+hash pipeline executes up to 4x
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = Similarity.boundBuckets(
-      hashes.select($"media_id", $"phash",
-          explode(Similarity.simhashBlockCombos($"phash", blocks, MaxHamming)).as("bb"))
-        .select($"media_id", $"phash", $"bb.band", $"bb.band_bits"),
-      Seq("band", "band_bits"), 10000)
-    // candidate rows whose band key collided WITHOUT true slice
-    // agreement die in the comboAgrees filter (map-side, before any
-    // exchange — this is what killed the corpus-sized distinct that
-    // filled the disk on the first sf100 attempt); the survivors are
-    // <= C(blocks, blocks-k) rows per TRUE pair, deduplicated by a
-    // partial-agg min. Aggregating over every truly-agreeing band —
-    // rather than keeping only the FIRST agreeing combo — keeps a pair
-    // alive when boundBuckets drops the bucket its first combo landed
-    // in but another agreeing band survives (the r10 first-combo
-    // filter silently lost exactly those pairs).
-    val pairs = buckets.as("a").join(buckets.as("b"),
-        $"a.band" === $"b.band" && $"a.band_bits" === $"b.band_bits" &&
-          $"a.media_id" < $"b.media_id")
-      .filter(Similarity.comboAgrees(
-        $"a.phash".bitwiseXOR($"b.phash"), $"a.band", blocks, MaxHamming))
-      .select($"a.media_id".as("id_a"), $"b.media_id".as("id_b"),
-        Similarity.hamming64($"a.phash", $"b.phash").cast("long").as("hamming"))
-      .filter($"hamming" <= MaxHamming)
-      .groupBy($"id_a", $"id_b").agg(min($"hamming").as("hamming"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // materialize so the hash frame can release eagerly
-    hashes.unpersist()
-    pairs.orderBy($"id_a", $"id_b")
+    Similarity.hammingPairs("dedup_image_phash",
+        Multimodal.decodeImagePhash(encodedCorpus(spark, dir)).toDF("id", "sig"),
+        blocks, MaxHamming)
+      .orderBy($"id_a", $"id_b")
   }
 }

@@ -101,11 +101,11 @@ object PipelineQueries {
     *
     * Plan at 100 TB: both sides band under the SAME deterministic
     * hyperplane signatures (64 planes, 4 bands of 16 bits);
-    * candidates come from the bipartite band-equality join — never
-    * all-pairs — with degenerate buckets capped
-    * (Similarity.boundBuckets); cosine is scored BEFORE the
-    * multi-band distinct so the distinct shuffle carries scalars, not
-    * embedding arrays; the per-corpus-item closest-eval reduction is
+    * candidates come from the bipartite band-equality join of
+    * Similarity.cosinePairs (dedup_embedding_cosine's pair step with an
+    * eval-to-corpus side) — never all-pairs, hot buckets capped, cosine
+    * scored before the multi-band distinct so its shuffle carries
+    * scalars; the per-corpus-item closest-eval reduction is
     * a combiner-reduced aggregate. The eval side is a benchmark —
     * small by nature, independent of corpus scale — so at scale its
     * banded signatures broadcast, and the corpus is never shuffled
@@ -124,36 +124,21 @@ object PipelineQueries {
 
     val tagged = eval.select($"vec_id", $"embedding", lit(true).as("is_eval"))
       .union(corpus.select($"vec_id", $"embedding", lit(false).as("is_eval")))
-    // persisted: the banded frame feeds both sides of the bipartite
-    // join (same multi-reference hazard the dedup family documents)
-    val rawBuckets = Similarity.hyperplaneBucketsDf(tagged, "vec_id", "embedding", 64, 4)
+    val items = Similarity.hyperplaneBucketsDf(tagged, "vec_id", "embedding", 64, 4)
       .join(tagged, "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = Similarity.boundBuckets(rawBuckets, Seq("band", "band_bits"), 10000)
-
-    val flagged = buckets.as("a").join(buckets.as("b"),
-        $"a.band" === $"b.band" && $"a.band_bits" === $"b.band_bits" &&
-          $"a.is_eval" && !$"b.is_eval")
-      .select($"b.vec_id".as("vec_id"), $"a.vec_id".as("eval_id"),
-        Similarity.cosine($"a.embedding", $"b.embedding").as("cos"))
-      // filter BEFORE the multi-band distinct: cos is deterministic per
-      // (vec_id, eval_id), so the flagged set is identical, and the
-      // distinct exchange carries only the rare >= tau survivors
-      // instead of every band collision
-      .filter($"cos" >= tau)
-      .distinct()
-      .groupBy($"vec_id")
+      .select($"vec_id".as("id"), $"bands", $"embedding", $"is_eval")
+    // bipartite: the a side is the eval item, the b side the corpus item
+    Similarity.cosinePairs("text_decontaminate_semantic", items,
+        $"a.is_eval" && !$"b.is_eval", tau)
+      .groupBy($"id_b".as("vec_id"))
       // closest eval item; exact-cosine ties resolve to the smallest
       // eval id (struct max: cos desc, then -eval_id asc)
-      .agg(max(struct($"cos".as("c"), (-$"eval_id").as("nid"))).as("m"),
+      .agg(max(struct($"cos".as("c"), (-$"id_a").as("nid"))).as("m"),
         count(lit(1)).as("n_eval_hits"))
       .select($"vec_id", (-$"m.nid").cast("long").as("eval_id"),
         floor(lit(10000.0) * $"m.c" + lit(0.5)).cast("long").as("cos_dmbp"),
         $"n_eval_hits")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    flagged.count()
-    rawBuckets.unpersist()
-    flagged.orderBy($"vec_id")
+      .orderBy($"vec_id")
   }
 
   /** Ordered funnel analysis over the events stream: view → click →

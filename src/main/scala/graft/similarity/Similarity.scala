@@ -1,7 +1,9 @@
 package graft.similarity
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Similarity / sketching primitives for dedup and ANN, all as pure
   * Column expressions (no UDFs — everything stays inside whole-stage
@@ -12,6 +14,12 @@ import org.apache.spark.sql.functions._
   * Massive Datasets ch.3), SimHash (Charikar '02), random-hyperplane
   * signatures for cosine (Charikar '02), prefix filtering for exact
   * set-similarity joins (Chaudhuri et al. '06, Bayardo et al. '07).
+  *
+  * Every banded family — MinHash, SimHash, image dHash, embedding
+  * cosine, semantic decontamination — finds its candidates through
+  * the one blocking kernel [[lshPairs]]; the families differ only in
+  * their band expression and their pair step ([[hammingPairs]],
+  * [[cosinePairs]], or MinHash's bare id pairs).
   */
 object Similarity {
 
@@ -70,26 +78,6 @@ object Similarity {
   def minhashSignature(grams: Column, k: Int): Column =
     transform(sequence(lit(0), lit(k - 1)), i =>
       array_min(transform(grams, g => xxhash64(i, g))))
-
-  /** LSH banding of a MinHash signature: b bands of r rows each →
-    * array of (band, bandHash) structs. Docs sharing any (band,
-    * bandHash) are candidates — the ONLY shuffle key the dedup join
-    * uses; nothing is ever compared all-pairs. */
-  def lshBands(sig: Column, b: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(b - 1)), i =>
-      struct(i.as("band"), xxhash64(i, slice(sig, i * r + 1, lit(r))).as("band_hash")))
-
-  /** MinHash LSH bands computed DIRECTLY from the gram set, skipping
-    * the materialized signature. `lshBands(minhashSignature(g))` looks
-    * equivalent, but after Catalyst collapses projections each band's
-    * slice re-evaluates the ENTIRE k-lane signature expression — a b×
-    * blowup (measured 16× → ~50s at sf0.01). Here band i hashes only
-    * its own r lanes, so every lane is computed exactly once. */
-  def minhashLshBands(grams: Column, b: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(b - 1)), i =>
-      struct(i.as("band"),
-        xxhash64(i, transform(sequence(i * r, (i + 1) * r - 1), lane =>
-          array_min(transform(grams, g => xxhash64(lane, g))))).as("band_hash")))
 
   /** Exact dot product of two numeric arrays (double accumulation). */
   def dot(a: Column, b: Column): Column =
@@ -202,12 +190,12 @@ object Similarity {
     * TRULY agrees between two signatures, from their XOR — the
     * candidate-join filter that drops band-key hash coincidences
     * map-side. Unlike keeping only `band === firstAgreeingCombo`,
-    * keeping EVERY truly-agreeing row and aggregating per pair stays
+    * keeping EVERY truly-agreeing row and deduping per pair stays
     * correct when [[boundBuckets]] drops a hot bucket: a pair whose
     * first-agreeing combo landed in a dropped bucket still surfaces
     * from any surviving agreeing band (the r10 first-combo-only filter
-    * silently lost such pairs — gate corpora were safe only because
-    * ImageDedupSpec pins max bucket far below the cap). */
+    * silently lost such pairs; DedupSpec drives [[hammingPairs]]
+    * through a dropped bucket to pin this). */
   def comboAgrees(
       xorCol: Column, band: Column, blocks: Int, maxHamming: Int,
       bits: Int = 64): Column = {
@@ -242,38 +230,19 @@ object Similarity {
         acc.bitwiseOR(when(proj >= 0, shlDyn(lit(1L), p)).otherwise(lit(0L)))
       })
 
-  /** Hyperplane signature banded directly from the vector (see
-    * minhashLshBands for why: banding a materialized signature
-    * re-evaluates the whole signature expression per band after
-    * projection collapse). Band i covers planes [i*w, (i+1)*w). */
-  def hyperplaneBands(vec: Column, planes: Int, bands: Int): Column = {
-    val width = planes / bands
-    transform(sequence(lit(0), lit(bands - 1)), i =>
-      struct(i.as("band"),
-        aggregate(
-          sequence(i * width, (i + 1) * width - 1),
-          lit(0L),
-          (acc, p) => {
-            val proj = aggregate(
-              zip_with(vec, sequence(lit(0), size(vec) - 1), (x, d) =>
-                x.cast("double") * when(xxhash64(p, d).bitwiseAND(lit(1L)) === 1L, lit(1.0))
-                  .otherwise(lit(-1.0))),
-              lit(0.0), (a, x) => a + x)
-            acc.bitwiseOR(when(proj >= 0, shlDyn(lit(1L), p - i * width)).otherwise(lit(0L)))
-          }).as("band_bits")))
-  }
-
-  /** DataFrame-level hyperplane bucketing: one row per (id, band,
-    * band_bits). Same construction as `hyperplaneBands` but computed
-    * as CODEGEN'D SUM AGGREGATES over posexploded vector components —
-    * higher-order lambdas are interpreted per element, which is the
-    * difference between 8k interpreted ops and 32 codegen'd hashes
-    * per row (see DedupQueries scale notes). */
+  /** DataFrame-level hyperplane banding: one row per item, (id,
+    * bands), where `bands` is array<struct<band, band_bits>> and band b
+    * holds bits [b*w, (b+1)*w) of [[hyperplaneSignature]] (w =
+    * planes / bands). The projections are CODEGEN'D SUM AGGREGATES over
+    * posexploded vector components, not the signature's higher-order
+    * lambdas — those are interpreted per element, which is the
+    * difference between 8k interpreted ops and 32 codegen'd hashes per
+    * row (see DedupQueries scale notes). Callers explode the array
+    * themselves ([[lshPairs]] does, after its one-row-per-item cache). */
   def hyperplaneBucketsDf(
-      df: org.apache.spark.sql.DataFrame,
+      df: DataFrame,
       idCol: String, vecCol: String,
-      planes: Int, bands: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, posexplode}
+      planes: Int, bands: Int): DataFrame = {
     val ex = df.select(col(idCol), posexplode(col(vecCol)).as(Seq("d", "x")))
     val projAggs = (0 until planes).map { p =>
       sum(when(xxhash64(lit(p), col("d")).bitwiseAND(lit(1L)) === 1L, col("x").cast("double"))
@@ -286,8 +255,7 @@ object Similarity {
         when(col(s"p${b * width + i}") >= 0, lit(1L << i)).otherwise(lit(0L)))
       struct(lit(b).as("band"), bits.reduce(_.bitwiseOR(_)).as("band_bits"))
     }
-    projs.select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"), col("bb.band_bits").as("band_bits"))
+    projs.select(col(idCol), array(bandStructs: _*).as("bands"))
   }
 
   /** Cap LSH bucket sizes before a candidate self-join: a degenerate
@@ -299,15 +267,94 @@ object Similarity {
     * pairs in a dropped bucket usually still meet in another band).
     * Cost: one partial-agg pass over the buckets + a broadcast
     * anti-join against the (tiny) hot-bucket list. */
-  def boundBuckets(
-      buckets: org.apache.spark.sql.DataFrame,
+  private[graft] def boundBuckets(
+      buckets: DataFrame,
       keyCols: Seq[String],
-      maxBucket: Int): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int): DataFrame = {
     val keys = keyCols.map(col)
     val hot = buckets.groupBy(keys: _*).agg(count(lit(1)).as("__bn"))
       .filter(col("__bn") > maxBucket).drop("__bn")
     buckets.join(broadcast(hot), keyCols, "left_anti")
   }
+
+  /** Hot-bucket cap of [[lshPairs]]: far above any bucket the gate
+    * corpora produce — their results are unchanged — but at 100 TB it
+    * is the guard that keeps one degenerate bucket from going
+    * quadratic. */
+  val MaxBucket = 10000
+
+  /** The LSH blocking kernel. `items` has ONE row per item: its id,
+    * whatever `bands` reads, and the payload `pair` reads. It is
+    * persisted here because it feeds the hot-bucket aggregate, its
+    * anti-join and both sides of the self-join — uncached, the
+    * upstream pipeline (decode, tokenize, signature aggregates) runs up
+    * to 4x. `bands` is an array<struct<band, key>> expression over
+    * `items` (any two field names), exploded only AFTER the cache, so
+    * the 4–20 band rows per item never sit in it.
+    *
+    * Buckets over `maxBucket` rows are dropped ([[boundBuckets]]); the
+    * rest self-join on (band, key) under `side`, a predicate over the
+    * `a`/`b` aliases (`a.id < b.id` within one set, a flag test for a
+    * bipartite join). `pair` maps the aliased join to output rows and
+    * `distinct()` then collapses a pair met in several bands — so
+    * `pair` may only emit columns the pair determines. The result is
+    * persisted and materialized, so `items` is released before
+    * returning, and registered in [[graft.CacheLedger]] under `tag`.
+    *
+    * The hot-bucket guard stays a separate partial-count aggregate
+    * rather than a `count(*) over (partition by band, key)` sharing
+    * the join's exchange: a window shuffles EVERY row of a hot bucket
+    * to one task before it can drop it — the skew the guard exists to
+    * prevent. */
+  private[graft] def lshPairs(
+      tag: String, items: DataFrame, bands: Column, side: Column,
+      maxBucket: Int = MaxBucket)(pair: DataFrame => DataFrame): DataFrame = {
+    val cached = items.persist(StorageLevel.MEMORY_AND_DISK)
+    val exploded = cached.select(col("*"), explode(bands).as("__bb"))
+    val keys = exploded.schema("__bb").dataType.asInstanceOf[StructType].fieldNames.toSeq
+    val buckets = boundBuckets(
+      exploded.select(col("*"), col("__bb.*")).drop("__bb"), keys, maxBucket)
+    val sameBucket = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    val out = pair(buckets.as("a").join(buckets.as("b"), sameBucket && side))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    cached.unpersist()
+    graft.CacheLedger.register(tag, out)
+  }
+
+  /** Near-dup pairs of 64-bit codes within hamming `maxHamming`, from
+    * `items(id, sig)`: [[simhashBlockCombos]] blocking through
+    * [[lshPairs]], then (id_a, id_b, hamming) with id_a < id_b. Band-key
+    * coincidences die in the [[comboAgrees]] filter map-side, before
+    * the dedupe exchange. Shared by SimHash text dedup and image dHash
+    * dedup. */
+  private[graft] def hammingPairs(
+      tag: String, items: DataFrame, blocks: Int, maxHamming: Int,
+      maxBucket: Int = MaxBucket): DataFrame =
+    lshPairs(tag, items, simhashBlockCombos(col("sig"), blocks, maxHamming),
+        col("a.id") < col("b.id"), maxBucket) { j =>
+      j.filter(comboAgrees(col("a.sig").bitwiseXOR(col("b.sig")), col("a.band"),
+          blocks, maxHamming))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          hamming64(col("a.sig"), col("b.sig")).cast("long").as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+    }
+
+  /** Embedding pairs with exact [[cosine]] >= `tau`, from
+    * `items(id, embedding, bands)` (bands from [[hyperplaneBucketsDf]])
+    * through [[lshPairs]] under `side`: (id_a, id_b, cos). The
+    * embedding rides in the cached items so pairs score straight off
+    * the self-join, and scoring + filtering run BEFORE the dedupe, so
+    * its exchange carries only surviving scalars, never embedding
+    * arrays. */
+  private[graft] def cosinePairs(
+      tag: String, items: DataFrame, side: Column, tau: Double): DataFrame =
+    lshPairs(tag, items, col("bands"), side) { j =>
+      j.select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+        .filter(col("cos") >= tau)
+    }
 
   /** Dynamic-count bit shifts: the SQL ShiftRight/ShiftLeft expressions
     * accept an expression count; only the Scala `functions` wrappers

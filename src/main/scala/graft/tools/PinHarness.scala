@@ -29,7 +29,7 @@ object PinHarness {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = Harness.buildSession(dir, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Harness.buildSession(dir, Harness.cpus)
     import spark.implicits._
     graft.functions.CosineSimilarity.ensureRegistered(spark)
 

@@ -7,7 +7,8 @@ import java.nio.file.{Files, Paths}
   * the plan evidence the optimization rounds commit under plans/.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> [query ...]
-  * Env:   SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_CPUS (8),
+  * Env:   SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_CPUS
+  *        (default: all cores, see Harness.cpus),
   *        SPARK_GRAFT_SUFFIX (default "", e.g. "_before"/"_after").
   *
   * Queries that materialize internally (pagerank, k-means report)
@@ -21,9 +22,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(sys.error("usage: PlanDump <outDir> [query ...]"))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_SUFFIX", "")
-    val spark = graft.Harness.buildSession(dir, cpus)
+    val spark = graft.Harness.buildSession(dir, graft.Harness.cpus)
     Files.createDirectories(Paths.get(outDir))
     val names = if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.map(_._1)
     names.foreach { n =>

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
+import graft.operators.{DedupQueries, ImageDedupQueries, PipelineQueries}
+
 /** The ledger contract operators rely on when they return persisted
   * frames: registration is visible, releaseAll unpersists, and a frame
   * the caller already released is a safe no-op to release again.
@@ -31,5 +33,19 @@ class CacheLedgerSpec extends SparkSpec {
     df2.unpersist()
     CacheLedger.releaseAll()
     assert(!CacheLedger.registered.contains("cache-ledger-spec-2"))
+  }
+
+  test("operators returning persisted pair frames register them; releaseAll drains the tags") {
+    val ops = Seq(
+      "dedup_simhash" -> DedupQueries.dedupSimhash _,
+      "dedup_image_phash" -> ImageDedupQueries.dedupImagePhash _,
+      "text_decontaminate_semantic" -> PipelineQueries.textDecontaminateSemantic _,
+      "dedup_edit_blocked" -> DedupQueries.dedupEditBlocked _)
+    for ((tag, op) <- ops) {
+      op(spark, sf)
+      assert(CacheLedger.registered.contains(tag), tag)
+      CacheLedger.releaseAll()
+      assert(!CacheLedger.registered.contains(tag), tag)
+    }
   }
 }

@@ -371,6 +371,34 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(all.count() === 7)
   }
 
+  test("hammingPairs through a dropped hot bucket: lone-bucket pairs vanish, others keep their hamming") {
+    import spark.implicits._
+    // C(5,2) blocking splits 64 bits into blocks of 13,13,13,13,12 at
+    // offsets 0,13,26,39,52; combo 0 is blocks (0, 1). Every item below
+    // has blocks 0 and 1 all-zero, so all of them share ONE combo-0
+    // bucket — six members, over a cap of 4.
+    //  - 1 vs 2: one flipped bit in each of blocks 2, 3, 4 (hamming 3),
+    //    so combo 0 is the ONLY combo they agree on: dropped with it.
+    //  - 1 vs 6: flips in blocks 2 and 3 only (hamming 2), so they also
+    //    agree on combo (0, 4), a two-member bucket that survives.
+    //  - 3, 4, 5: random upper bits, far from everything, padding the
+    //    hot bucket.
+    val rnd = new scala.util.Random(7)
+    val fillers = (3L to 5L).map(_ -> (rnd.nextLong() & ~((1L << 26) - 1)))
+    val items = (Seq(1L -> 0L, 2L -> ((1L << 26) | (1L << 39) | (1L << 52)),
+      6L -> ((1L << 27) | (1L << 40))) ++ fillers).toDF("id", "sig")
+    def pairs(maxBucket: Int): Set[(Long, Long, Long)] = {
+      val out = Similarity.hammingPairs("hot-bucket-spec", items, 5, 3, maxBucket)
+      try out.as[(Long, Long, Long)].collect().toSet finally out.unpersist()
+    }
+    val brute = items.as("a").join(items.as("b"), $"a.id" < $"b.id")
+      .select($"a.id", $"b.id", Similarity.hamming64($"a.sig", $"b.sig").cast("long").as("h"))
+      .filter($"h" <= 3).as[(Long, Long, Long)].collect().toSet
+    assert(brute === Set((1L, 2L, 3L), (1L, 6L, 2L)), "fixture")
+    assert(pairs(Similarity.MaxBucket) === brute)
+    assert(pairs(4) === Set((1L, 6L, 2L)))
+  }
+
   test("minhash signature similarity estimates jaccard") {
     import spark.implicits._
     val a = (1 to 60).map(i => s"tok$i")
