@@ -189,12 +189,6 @@ object BloomAgg {
     require(exprs.length == 2, s"graft_bloom_agg expects 2 arguments, got ${exprs.length}")
     BloomAgg(exprs.head, exprs(1))
   }
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_agg")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
-  }
 }
 
 object BloomContains {
@@ -205,11 +199,5 @@ object BloomContains {
   val Builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"graft_bloom_contains expects 2 arguments, got ${exprs.length}")
     BloomContains(exprs.head, exprs(1))
-  }
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_contains")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
   }
 }

@@ -167,10 +167,4 @@ object BottomK {
     require(exprs.length == 3, s"graft_bottomk expects 3 arguments, got ${exprs.length}")
     BottomK(exprs.head, exprs(1), exprs(2))
   }
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bottomk")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
-  }
 }

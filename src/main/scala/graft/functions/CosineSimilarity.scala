@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: cosine similarity of two float-array
   * columns, with real `doGenCode` — the scoring kernel of the ANN and
@@ -81,37 +79,5 @@ object CosineSimilarity {
   val Builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 2, s"graft_cosine expects 2 arguments, got ${exprs.length}")
     CosineSimilarity(exprs.head, exprs(1))
-  }
-
-  /** Idempotent imperative registration — for sessions not built with
-    * `spark.sql.extensions=graft.GraftExtensions` (e.g. a session the
-    * caller constructed elsewhere). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_cosine")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
-  }
-}
-
-/** SparkSessionExtensions entry point:
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      CosineSimilarity.Info, CosineSimilarity.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_bottomk"),
-      BottomK.Info, BottomK.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_topfreq"),
-      TopFreq.Info, TopFreq.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_agg"),
-      BloomAgg.Info, BloomAgg.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      BloomContains.Info, BloomContains.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_text_counts"),
-      TextScanCounts.Info, TextScanCounts.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      ShingleHashes.Info, ShingleHashes.Builder))
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      TopK.Info, TopK.Builder))
   }
 }

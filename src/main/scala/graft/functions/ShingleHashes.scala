@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -154,12 +153,5 @@ object ShingleHashes {
     require(n.foldable && n.dataType == IntegerType,
       "graft_shingle_hashes: n must be an integer literal")
     ShingleHashes(exprs.head, n.eval().asInstanceOf[Int])
-  }
-
-  /** Idempotent imperative registration (see CosineSimilarity). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_shingle_hashes")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -177,12 +176,5 @@ object TextScanCounts {
   val Builder: Seq[Expression] => Expression = { exprs =>
     require(exprs.length == 1, s"graft_text_counts expects 1 argument, got ${exprs.length}")
     TextScanCounts(exprs.head)
-  }
-
-  /** Idempotent imperative registration (see CosineSimilarity). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_text_counts")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
   }
 }

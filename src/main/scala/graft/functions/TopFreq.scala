@@ -294,10 +294,4 @@ object TopFreq {
     require(exprs.length == 2, s"graft_topfreq expects 2 arguments, got ${exprs.length}")
     TopFreq(exprs.head, exprs(1))
   }
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topfreq")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
-  }
 }

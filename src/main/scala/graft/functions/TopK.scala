@@ -204,10 +204,4 @@ object TopK {
     require(exprs.length == 4, s"graft_topk expects 4 arguments, got ${exprs.length}")
     TopK(exprs.head, exprs(1), exprs(2), exprs(3))
   }
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topk")
-    if (!registry.functionExists(id)) registry.registerFunction(id, Info, Builder)
-  }
 }

@@ -338,35 +338,6 @@ object GraftIO {
     }
   }
 
-  /** Footer fast path for [[buildStatsIndex]]: per-file min/max read
-    * from parquet metadata. Returns None (caller falls back to the
-    * scan) when a stat column is not an integral type, absent from a
-    * file, or written without statistics. Only INTEGRAL columns take
-    * the fast path: string min/max can be TRUNCATED in footers (sound
-    * for pruning but not equal to the scan the contract states), and
-    * float/double footer stats have writer-dependent NaN / -0.0
-    * semantics (NaN may be skipped or poison the bounds; Spark's own
-    * scan aggregates order NaN greatest) — the footer==scan contract
-    * this index promises is only safe where parquet and Spark agree
-    * on ordering, which is exactly the integral types PruneSpec pins.
-    *
-    * The `file` column is rendered as `Path.toUri.toString` — the
-    * SAME canonical URI encoding `input_file_name()` emits in the
-    * scan fallback (Spark's PartitionedFile path is built from
-    * `Path.toUri`), so consumers may join either index form against
-    * a live scan's `input_file_name()` without scheme or URL-encoding
-    * mismatches. PruneSpec pins full-URI equality of the two builders.
-    *
-    * The driver-side footer loop is metadata-scale (one
-    * ranged read of a few KB per file); a deployment with millions of
-    * files would distribute it, same as its file listing. */
-  /** Total row count of a flat parquet directory from FOOTER metadata
-    * only — zero Spark jobs, a few-KB ranged read per file. None when
-    * the layout has subdirectories (partitioned/appended trees this
-    * flat listing would subset) or no data files; callers treat None
-    * as "unknown, assume large". Used for driver-side plan decisions
-    * (e.g. whether a cache layout is worth a sort) where an upper
-    * bound beats a data pass. */
   /** Flat data files of `path` — no subdirectories, underscore/dot
     * metadata names excluded: the ONE definition of what the
     * footer-based metadata readers may enumerate. None when the layout
@@ -391,6 +362,13 @@ object GraftIO {
     if (files.isEmpty) None else Some(files)
   }
 
+  /** Total row count of a flat parquet directory from FOOTER metadata
+    * only — zero Spark jobs, a few-KB ranged read per file. None when
+    * the layout has subdirectories (partitioned/appended trees this
+    * flat listing would subset) or no data files; callers treat None
+    * as "unknown, assume large". Used for driver-side plan decisions
+    * (e.g. whether a cache layout is worth a sort) where an upper
+    * bound beats a data pass. */
   private[graft] def footerRowCount(spark: SparkSession, path: String): Option[Long] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
@@ -405,6 +383,28 @@ object GraftIO {
     }
   }
 
+  /** Footer fast path for [[buildStatsIndex]]: per-file min/max read
+    * from parquet metadata. Returns None (caller falls back to the
+    * scan) when a stat column is not an integral type, absent from a
+    * file, or written without statistics. Only INTEGRAL columns take
+    * the fast path: string min/max can be TRUNCATED in footers (sound
+    * for pruning but not equal to the scan the contract states), and
+    * float/double footer stats have writer-dependent NaN / -0.0
+    * semantics (NaN may be skipped or poison the bounds; Spark's own
+    * scan aggregates order NaN greatest) — the footer==scan contract
+    * this index promises is only safe where parquet and Spark agree
+    * on ordering, which is exactly the integral types PruneSpec pins.
+    *
+    * The `file` column is rendered as `Path.toUri.toString` — the
+    * SAME canonical URI encoding `input_file_name()` emits in the
+    * scan fallback (Spark's PartitionedFile path is built from
+    * `Path.toUri`), so consumers may join either index form against
+    * a live scan's `input_file_name()` without scheme or URL-encoding
+    * mismatches. PruneSpec pins full-URI equality of the two builders.
+    *
+    * The driver-side footer loop is metadata-scale (one
+    * ranged read of a few KB per file); a deployment with millions of
+    * files would distribute it, same as its file listing. */
   private[graft] def footerStatsIndex(
       spark: SparkSession, path: String, statCols: Seq[String]): Option[DataFrame] = {
     import scala.jdk.CollectionConverters._

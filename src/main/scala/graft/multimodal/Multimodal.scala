@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * preserving `mapPartitions` stages shaped like real codec batches.
   *
   * ALL THREE codec classes decode REAL bytes. IMAGE (round 9):
-  * [[decodeImageStats]] decodes actual encoded bytes via the JDK's
-  * ImageIO (PNG/JPEG/BMP/GIF) and extracts exact integer pixel
-  * statistics. AUDIO (round 10): [[decodeAudioStats]] decodes
+  * [[decodeImageStats]] decodes actual encoded bytes — truecolor PNG
+  * through the zero-dependency [[Png.decodeRgb]] (r11), everything
+  * else (JPEG/BMP/GIF, other PNGs) through the JDK's ImageIO — and
+  * extracts exact integer pixel statistics. AUDIO (round 10): [[decodeAudioStats]] decodes
   * WAV/AIFF/AU PCM via the JDK's javax.sound.sampled. VIDEO (round
   * 11): the JDK ships no video codec, but an uncompressed BI_RGB AVI
   * is a RIFF container (public spec) around exact integer DIB frames —
@@ -58,21 +59,14 @@ object Multimodal {
       g_sum: Long,
       b_sum: Long)
 
-  /** Deterministic RGB test image: pixel (x,y) of image `mediaId` has
-    * channels ((7·id+3x+5y) mod 256, (11·id+5x+7y) mod 256,
-    * (13·id+7x+11y) mod 256) — pure integer arithmetic restatable in
-    * any SQL engine, which is what lets a REAL codec roundtrip sit
-    * under a hash-exact gate: the oracle enumerates the pixel grid
-    * arithmetically while Spark actually encodes and decodes bytes. */
-  def pixelChannels(mediaId: Long, x: Int, y: Int): (Int, Int, Int) = {
-    val p = pixelPacked(mediaId, x, y)
-    ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
-  }
-
-  /** [[pixelChannels]] as one packed 0xRRGGBB int — the corpus-encode
-    * hot path's form (a tuple would box per PIXEL; Function2[Int,Int]
-    * -> Int stays primitive). The tuple variant delegates here so the
-    * two can never drift. */
+  /** Deterministic RGB test image as one packed 0xRRGGBB int: pixel
+    * (x,y) of image `mediaId` has channels ((7·id+3x+5y) mod 256,
+    * (11·id+5x+7y) mod 256, (13·id+7x+11y) mod 256) — pure integer
+    * arithmetic restatable in any SQL engine, which is what lets a
+    * REAL codec roundtrip sit under a hash-exact gate: the oracle
+    * enumerates the pixel grid arithmetically while Spark actually
+    * encodes and decodes bytes. Packed, not an (r, g, b) tuple: the
+    * corpus encoders call it per PIXEL, and a tuple would box there. */
   def pixelPacked(mediaId: Long, x: Int, y: Int): Int =
     ((((mediaId * 7 + 3L * x + 5L * y) % 256).toInt) << 16) |
       ((((mediaId * 11 + 5L * x + 7L * y) % 256).toInt) << 8) |
@@ -89,8 +83,7 @@ object Multimodal {
     while (y < h) {
       var x = 0
       while (x < w) {
-        val (r, g, b) = pixelChannels(mediaId, x, y)
-        px(y * w + x) = (r << 16) | (g << 8) | b
+        px(y * w + x) = pixelPacked(mediaId, x, y)
         x += 1
       }
       y += 1
@@ -140,8 +133,15 @@ object Multimodal {
     * the "decode is a stub" caveat for every codec the JDK ships:
     * PNG, JPEG, BMP, GIF, WBMP). The decoder sniffs the container
     * from the bytes ([[decodeRaster]]), so the column needs no format
-    * tag. Exact integer pixel stats per image: dimensions from the
-    * DECODED image and per-channel sums over every pixel.
+    * tag. Exact integer pixel stats per image: dimensions and
+    * per-channel sums of the DECODED image, or of its REAL
+    * nearest-neighbor resize when the longer side exceeds `maxSide` —
+    * the image a training pipeline would actually store. The resize
+    * clamps the longer side to `maxSide` with exact integer output dims
+    * `ceil(side·maxSide / longer)`, and destination (dx,dy) reads
+    * source pixel (dx·w div ow, dy·h div oh): all-integer arithmetic,
+    * so an arithmetic oracle enumerates the same sample grid. Images
+    * within `maxSide` pass through with a linear sum over the raster.
     *
     * Plumbing is the same partition-preserving mapPartitions contract
     * as [[decodeAndFeaturize]]: no shuffle, per-partition init (the
@@ -150,7 +150,8 @@ object Multimodal {
     * zero-stats row instead of killing the stage — at 100 TB some
     * fraction of any crawl's media bytes IS corrupt, and one bad file
     * must not fail a task that has decoded a million good ones. */
-  def decodeImageStats(media: Dataset[(Long, Array[Byte])]): Dataset[ImagePixelStats] = {
+  def decodeImageStats(media: Dataset[(Long, Array[Byte])], maxSide: Int = Int.MaxValue)
+      : Dataset[ImagePixelStats] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
       // per-PARTITION init: ImageIO's default stream cache spools
@@ -162,91 +163,22 @@ object Multimodal {
         val ras = decodeRaster(payload)
         if (ras == null) ImagePixelStats(id, 0L, 0L, 0L, 0L, 0L, 0L)
         else {
-          val px = ras.px
+          val w = ras.w; val h = ras.h
+          val m = math.max(w, h)
+          val (ow, oh, px) =
+            if (m <= maxSide) (w, h, ras.px)
+            else {
+              val ow = (w * maxSide + m - 1) / m
+              val oh = (h * maxSide + m - 1) / m
+              (ow, oh, Array.tabulate(ow * oh)(i =>
+                ras.px((i / ow) * h / oh * w + (i % ow) * w / ow)))
+            }
           var r = 0L; var g = 0L; var b = 0L
           var i = 0
           while (i < px.length) {
             val p = px(i)
             r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
             i += 1
-          }
-          ImagePixelStats(id, ras.w.toLong, ras.h.toLong, ras.w.toLong * ras.h, r, g, b)
-        }
-      }
-    }
-  }
-
-  /** REAL nearest-neighbor pixel resize on a decoded raster (round 9 —
-    * makes the resize stage real pixel work, not just the metadata
-    * plan of [[resizePlan]]): clamp the longer side to `maxSide`, exact
-    * integer output dims `ceil(side·maxSide / longer)`, source pixel
-    * for destination (dx,dy) = (dx·w div ow, dy·h div oh). All-integer
-    * arithmetic so an arithmetic oracle can enumerate the same sample
-    * grid — the same trick that puts the codec roundtrip under a hash
-    * gate. Images already within `maxSide` pass through untouched. */
-  def resizeNearest(img: java.awt.image.BufferedImage, maxSide: Int)
-      : java.awt.image.BufferedImage = {
-    val w = img.getWidth; val h = img.getHeight
-    val m = math.max(w, h)
-    if (m <= maxSide) return img
-    val ow = (w * maxSide + m - 1) / m
-    val oh = (h * maxSide + m - 1) / m
-    val src = img.getRGB(0, 0, w, h, null, 0, w)
-    val dst = new Array[Int](ow * oh)
-    var dy = 0
-    while (dy < oh) {
-      val sy = dy * h / oh
-      var dx = 0
-      while (dx < ow) {
-        dst(dy * ow + dx) = src(sy * w + dx * w / ow)
-        dx += 1
-      }
-      dy += 1
-    }
-    val out = new java.awt.image.BufferedImage(
-      ow, oh, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    out.setRGB(0, 0, ow, oh, dst, 0, ow)
-    out
-  }
-
-  /** Decode + REAL resize + feature extraction in one partition-
-    * preserving stage: [[decodeImageStats]]'s contract (NonFatal-
-    * tolerant decode, zero-stats degradation) with [[resizeNearest]]
-    * applied to the decoded raster before the channel sums, so the
-    * stats describe the RESIZED image a training pipeline would
-    * actually store. */
-  def decodeResizeStats(media: Dataset[(Long, Array[Byte])], maxSide: Int)
-      : Dataset[ImagePixelStats] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { case (id, payload) =>
-        val ras = decodeRaster(payload)
-        if (ras == null) ImagePixelStats(id, 0L, 0L, 0L, 0L, 0L, 0L)
-        else {
-          // sample the source raster directly on [[resizeNearest]]'s
-          // exact grid instead of materializing the resized image —
-          // the stats are the output here, so building a second
-          // BufferedImage (+ setRGB/getRGB color-model passes) per
-          // image is pure overhead; ResizeSampleSpec-pinned equal to
-          // resizeNearest's pixels
-          val w = ras.w; val h = ras.h
-          val m = math.max(w, h)
-          val (ow, oh) =
-            if (m <= maxSide) (w, h)
-            else ((w * maxSide + m - 1) / m, (h * maxSide + m - 1) / m)
-          val src = ras.px
-          var r = 0L; var g = 0L; var b = 0L
-          var dy = 0
-          while (dy < oh) {
-            val rowOff = (dy * h / oh) * w
-            var dx = 0
-            while (dx < ow) {
-              val p = src(rowOff + dx * w / ow)
-              r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
-              dx += 1
-            }
-            dy += 1
           }
           ImagePixelStats(id, ow.toLong, oh.toLong, ow.toLong * oh, r, g, b)
         }
@@ -270,7 +202,7 @@ object Multimodal {
     * of clip `mediaId` is ((7·id + 13·i + 31·ch) mod 65536) − 32768 —
     * pure integer arithmetic restatable in any SQL engine, the same
     * trick that puts the PNG codec roundtrip under a hash-exact gate
-    * ([[pixelChannels]]). */
+    * ([[pixelPacked]]). */
   def waveSample(mediaId: Long, i: Long, ch: Int): Int =
     ((mediaId * 7 + i * 13 + ch * 31L) % 65536 - 32768).toInt
 
@@ -328,7 +260,7 @@ object Multimodal {
     * on the real JDK codec with zero shared state. WAVE readers sort
     * first — each non-matching provider costs a thrown
     * UnsupportedAudioFileException per clip. */
-  private[multimodal] def audioReaders(): Array[javax.sound.sampled.spi.AudioFileReader] = {
+  private def audioReaders(): Array[javax.sound.sampled.spi.AudioFileReader] = {
     val it = java.util.ServiceLoader
       .load(classOf[javax.sound.sampled.spi.AudioFileReader],
         classOf[javax.sound.sampled.spi.AudioFileReader].getClassLoader)
@@ -338,26 +270,59 @@ object Multimodal {
     buf.sortBy(r => if (r.getClass.getSimpleName.startsWith("Wave")) 0 else 1).toArray
   }
 
-  private[multimodal] def sniffAudio(
+  private final case class PcmDims(sampleRate: Long, channels: Int, frames: Int)
+
+  /** The one PCM reader behind [[decodeAudioStats]] and
+    * [[decodeAndFeaturize]]: sniffs the container with the partition's
+    * SPI `readers` (each non-matching provider throws
+    * UnsupportedAudioFileException), requires 16-bit signed PCM, reads
+    * the whole stream and calls `sample(channel, value)` once per
+    * sample in frame order. AudioInputStream reads whole frames only,
+    * so every frame carries all its channels. Returns null for a
+    * NULL/empty payload, an unrecognized container or any other sample
+    * format; the callers catch NonFatal decode errors. */
+  private def readPcm16(
       readers: Array[javax.sound.sampled.spi.AudioFileReader],
-      payload: Array[Byte]): javax.sound.sampled.AudioInputStream = {
-    var i = 0
-    while (i < readers.length) {
-      try return readers(i).getAudioInputStream(new java.io.ByteArrayInputStream(payload))
+      payload: Array[Byte])(sample: (Int, Int) => Unit): PcmDims = {
+    if (payload == null || payload.length == 0) return null
+    var ais: javax.sound.sampled.AudioInputStream = null
+    var k = 0
+    while (ais == null && k < readers.length) {
+      try ais = readers(k).getAudioInputStream(new java.io.ByteArrayInputStream(payload))
       catch { case _: javax.sound.sampled.UnsupportedAudioFileException => () }
-      i += 1
+      k += 1
     }
-    null
+    if (ais == null) return null
+    try {
+      val f = ais.getFormat
+      if (f.getSampleSizeInBits != 16 ||
+          f.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) return null
+      val bytes = ais.readAllBytes()
+      val ch = f.getChannels
+      val be = f.isBigEndian
+      val frames = bytes.length / (2 * ch)
+      val end = frames * ch * 2
+      var off = 0
+      while (off < end) {
+        val s =
+          if (be) ((bytes(off) << 8) | (bytes(off + 1) & 0xff)).toShort
+          else ((bytes(off + 1) << 8) | (bytes(off) & 0xff)).toShort
+        sample((off >> 1) % ch, s)
+        off += 2
+      }
+      PcmDims(f.getSampleRate.toLong, ch, frames)
+    } finally ais.close()
   }
 
   /** REAL audio decode + feature extraction (round 10 — closes the
     * "JDK lacks audio" half of the old stub claim, which was wrong:
     * AudioSystem decodes PCM containers out of the box). Sniffs the
-    * container from the bytes, decodes the PCM stream, and extracts
-    * exact integer stats: frame count, declared rate/channels, and the
-    * per-channel sum of absolute 16-bit amplitudes (channels beyond
-    * the second fold into nothing — the corpus is mono/stereo, and a
-    * production swap widens the struct, not the plumbing).
+    * container from the bytes, decodes the PCM stream ([[readPcm16]]),
+    * and extracts exact integer stats: frame count, declared
+    * rate/channels, and the per-channel sum of absolute 16-bit
+    * amplitudes (channels beyond the second fold into nothing — the
+    * corpus is mono/stereo, and a production swap widens the struct,
+    * not the plumbing).
     *
     * Same partition-preserving contract as [[decodeImageStats]]: no
     * shuffle, and an undecodable / NULL / non-16-bit-PCM payload
@@ -367,53 +332,23 @@ object Multimodal {
     media.mapPartitions { rows =>
       // per-PARTITION init — see audioReaders
       val readers = audioReaders()
-      def sniff(payload: Array[Byte]): javax.sound.sampled.AudioInputStream =
-        sniffAudio(readers, payload)
       rows.map { case (id, payload) =>
-        val st =
-          try {
-            if (payload == null || payload.length == 0) null
-            else {
-              val ais = sniff(payload)
-              if (ais == null) null
-              else
-              try {
-                val f = ais.getFormat
-                if (f.getSampleSizeInBits != 16 ||
-                    f.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) null
-                else {
-                  val bytes = ais.readAllBytes()
-                  val ch = f.getChannels
-                  val be = f.isBigEndian
-                  val frames = bytes.length / (2 * ch)
-                  var c0 = 0L; var c1 = 0L
-                  var i = 0
-                  while (i < frames) {
-                    var c = 0
-                    while (c < ch) {
-                      val off = (i * ch + c) * 2
-                      val s =
-                        if (be) ((bytes(off) << 8) | (bytes(off + 1) & 0xff)).toShort
-                        else ((bytes(off + 1) << 8) | (bytes(off) & 0xff)).toShort
-                      val a = math.abs(s.toLong)
-                      if (c == 0) c0 += a else if (c == 1) c1 += a
-                      c += 1
-                    }
-                    i += 1
-                  }
-                  AudioStats(id, f.getSampleRate.toLong, ch.toLong, frames.toLong, c0, c1)
-                }
-              } finally ais.close()
-            }
-          } catch { case scala.util.control.NonFatal(_) => null }
-        if (st == null) AudioStats(id, 0L, 0L, 0L, 0L, 0L) else st
+        var c0 = 0L; var c1 = 0L
+        val dims =
+          try readPcm16(readers, payload) { (c, s) =>
+            if (c == 0) c0 += math.abs(s) else if (c == 1) c1 += math.abs(s)
+          }
+          catch { case scala.util.control.NonFatal(_) => null }
+        if (dims == null) AudioStats(id, 0L, 0L, 0L, 0L, 0L)
+        else AudioStats(id, dims.sampleRate, dims.channels.toLong, dims.frames.toLong, c0, c1)
       }
     }
   }
 
-  /** Deterministic RGB pixel for the PERCEPTUAL-HASH gate corpus. The
-    * decode gate's linear grid ([[pixelChannels]]) is unusable here:
-    * its per-step luma delta along a row is under one mod-256 wrap for
+  /** Deterministic packed-RGB pixel for the PERCEPTUAL-HASH gate
+    * corpus. The decode gate's linear grid ([[pixelPacked]]) is
+    * unusable here: its
+    * per-step luma delta along a row is under one mod-256 wrap for
     * every gate image size, so luma rises monotonically and every
     * image would hash to (near) dHash zero — one degenerate LSH bucket
     * for the whole corpus. The `x·y` cross term makes the row slope
@@ -423,58 +358,31 @@ object Multimodal {
     * otherwise repeat rasters every 3072 ids and turn exact-dup
     * classes quadratic at scale. Still pure integer arithmetic — the
     * oracle enumerates it verbatim. */
-  def phashPixelChannels(mediaId: Long, x: Int, y: Int): (Int, Int, Int) = {
-    val p = phashPixelPacked(mediaId, x, y)
-    ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
-  }
-
-  /** [[phashPixelChannels]] as one packed 0xRRGGBB int (see
-    * [[pixelPacked]] for why the hot encode path avoids the tuple). */
   def phashPixelPacked(mediaId: Long, x: Int, y: Int): Int =
     ((((mediaId * 7 + 73L * x + 151L * y + 29L * x * y + mediaId % 997) % 256).toInt) << 16) |
       ((((mediaId * 11 + 97L * x + 131L * y + 41L * x * y + mediaId % 991) % 256).toInt) << 8) |
       (((mediaId * 13 + 59L * x + 173L * y + 37L * x * y + mediaId % 983) % 256).toInt)
 
-  /** Encode an arbitrary deterministic pixel function as real PNG
-    * bytes. r11: delegates to the fast zero-dependency encoder
-    * ([[Png.encodeRgbFast]] — filter-0 rows, deflate BEST_SPEED);
-    * ImageIO's default-level adaptive-filter encode was the phash
-    * corpus's largest per-task cost, and every consumer of this
-    * function observes only DECODED PIXELS (identical for any
-    * conformant encoder — PNG is lossless), never payload bytes.
-    * [[encodePng]] keeps its ImageIO body: multimodal_pipeline's gate
-    * aggregates payload lengths, so its byte stream must not move. */
-  def encodePngPixels(w: Int, h: Int, pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] =
-    Png.encodeRgbFast(w, h, pixel)
-
   /** 64-bit difference hash (dHash) of a decoded raster — the standard
     * perceptual fingerprint an image near-dup pass keys on: sample a
-    * 9×8 luma grid on [[resizeNearest]]'s exact integer coordinates
-    * (sample (gx,gy) reads source pixel (gx·w div 9, gy·h div 8)) and
-    * set bit gy·8+gx iff luma(gx,gy) > luma(gx+1,gy). Integer luma
-    * 299r+587g+114b (no divide — comparisons are scale-free), so the
-    * whole hash restates arithmetically in the oracle. Scale-invariant
-    * by construction: an upscaled re-encode samples the same source
-    * pixels (floor(floor(k·a)/k) = floor(a)), so true re-encodes
-    * collide at hamming 0 and near-variants land within a few bits. */
-  def dHash64(img: java.awt.image.BufferedImage): Long = {
-    val w = img.getWidth; val h = img.getHeight
-    dHash64(w, h, (x, y) => img.getRGB(x, y))
-  }
-
-  /** [[dHash64]] over a packed-RGB raster (the [[Png.Raster]] fast
-    * path) — same sample grid, same luma, same bits. */
-  def dHash64(ras: Png.Raster): Long =
-    dHash64(ras.w, ras.h, (x, y) => ras.px(y * ras.w + x))
-
-  private def dHash64(w: Int, h: Int, rgb: (Int, Int) => Int): Long = {
+    * 9×8 luma grid on [[decodeImageStats]]' nearest-neighbor integer
+    * coordinates (sample (gx,gy) reads source pixel (gx·w div 9, gy·h
+    * div 8)) and set bit gy·8+gx iff luma(gx,gy) > luma(gx+1,gy).
+    * Integer luma 299r+587g+114b (no divide — comparisons are
+    * scale-free), so the whole hash restates arithmetically in the
+    * oracle. Scale-invariant by construction: an upscaled re-encode
+    * samples the same source pixels (floor(floor(k·a)/k) = floor(a)),
+    * so true re-encodes collide at hamming 0 and near-variants land
+    * within a few bits. */
+  def dHash64(ras: Png.Raster): Long = {
+    val w = ras.w; val h = ras.h
     val lum = new Array[Long](9 * 8)
     var gy = 0
     while (gy < 8) {
-      val sy = gy * h / 8
+      val row = (gy * h / 8) * w
       var gx = 0
       while (gx < 9) {
-        val p = rgb(gx * w / 9, sy)
+        val p = ras.px(row + gx * w / 9)
         lum(gy * 9 + gx) =
           299L * ((p >> 16) & 0xff) + 587L * ((p >> 8) & 0xff) + 114L * (p & 0xff)
         gx += 1
@@ -514,7 +422,7 @@ object Multimodal {
 
   /** Deterministic RGB pixel for VIDEO frame `f` of clip `mediaId` —
     * pure integer arithmetic restatable in any SQL engine, the same
-    * trick as [[pixelChannels]]/[[waveSample]]: the frame term makes
+    * trick as [[pixelPacked]]/[[waveSample]]: the frame term makes
     * every sampled frame distinct, so a frame-sampling bug shows up in
     * the channel sums. */
   def videoPixelChannels(mediaId: Long, f: Int, x: Int, y: Int): (Int, Int, Int) = (
@@ -721,7 +629,7 @@ object Multimodal {
 
   /** REAL decode + featurize across ALL THREE codec classes (round 11
     * — this replaces the round-1 byte-histogram stub: image decodes
-    * via ImageIO, audio via the javax.sound SPI readers, video via the
+    * via [[decodeRaster]], audio via [[readPcm16]], video via the
     * zero-dependency AVI parse). The features are a 16-bin histogram
     * digest + mean (basis points) over the DECODED content's 8-bit
     * units — pixel channel values for image and video (video over the
@@ -759,24 +667,9 @@ object Multimodal {
                 framesSampled = 1L; ok = true
               }
             case "audio" =>
-              val ais = sniffAudio(readers, m.payload)
-              if (ais != null) try {
-                val f = ais.getFormat
-                if (f.getSampleSizeInBits == 16 &&
-                    f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) {
-                  val bytes = ais.readAllBytes()
-                  val be = f.isBigEndian
-                  var i = 0
-                  while (i + 1 < bytes.length) {
-                    val s =
-                      if (be) ((bytes(i) << 8) | (bytes(i + 1) & 0xff)).toShort
-                      else ((bytes(i + 1) << 8) | (bytes(i) & 0xff)).toShort
-                    add((s + 32768) >> 8)
-                    i += 2
-                  }
-                  framesSampled = 1L; ok = true
-                }
-              } finally ais.close()
+              if (readPcm16(readers, m.payload)((_, s) => add((s + 32768) >> 8)) != null) {
+                framesSampled = 1L; ok = true
+              }
             case "video" =>
               val dims = aviSampledPixels(m.payload, FrameStride) { (r, g, b) =>
                 add(r); add(g); add(b)
@@ -807,9 +700,10 @@ object Multimodal {
   def frameSampleCount(nFrames: Int, every: Int = FrameStride): Int =
     if (nFrames <= 0) 0 else (nFrames + every - 1) / every
 
-  /** Resize metadata transform (pure column math — the pixel work
-    * happens inside the stubbed decode at scale): clamp the longer
-    * side to `maxSide` preserving aspect ratio. */
+  /** Resize metadata transform (pure column math over the width and
+    * height columns; no payload is read — [[decodeImageStats]] with a
+    * `maxSide` does the pixel resize): clamp the longer side to
+    * `maxSide` preserving aspect ratio. */
   def resizePlan(df: DataFrame, maxSide: Int): DataFrame = {
     // zero-dim media (audio rows in a mixed-kind table) has no spatial
     // plan: scale 0 keeps out dims at 0 instead of an ANSI

@@ -20,7 +20,7 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * the operators' format generality and corruption contracts are
   * unchanged.
   *
-  * [[encodeRgbFast]] writes filter-0 rows at deflate BEST_SPEED — a
+  * [[encodeRgb]] writes filter-0 rows at deflate BEST_SPEED — a
   * valid PNG whose DECODED PIXELS are identical to the ImageIO
   * encoder's for the same raster (PNG is lossless), used only by gate
   * corpora whose oracles observe pixels, never payload bytes
@@ -189,26 +189,21 @@ object Png {
     new Raster(w, h, px)
   }
 
-  /** Encode an RGB pixel function as a real, valid PNG: 8-bit color
-    * type 2, filter 0 on every row, one IDAT, deflate BEST_SPEED.
-    * Decoded pixels are identical to any conformant encoder's for the
-    * same raster (PNG is lossless); only the byte stream differs. */
-  def encodeRgbFast(w: Int, h: Int, pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] =
-    encodeRgbFastPacked(w, h, (x, y) => {
-      val (r, g, b) = pixel(x, y); (r << 16) | (g << 8) | b
-    })
-
-  /** [[encodeRgbFast]] with a packed-0xRRGGBB pixel function — the hot
-    * corpus encoders use this form because a `(Int, Int, Int)` tuple
-    * allocates per PIXEL (billions of boxes over an sf10 corpus); a
-    * packed int stays primitive through the specialized Function2. */
-  def encodeRgbFastPacked(w: Int, h: Int, pixel: (Int, Int) => Int): Array[Byte] = {
+  /** Encode a packed-0xRRGGBB pixel function as a real, valid PNG:
+    * 8-bit color type 2, filter 0 on every row, one IDAT, deflate
+    * BEST_SPEED. Decoded pixels are identical to any conformant
+    * encoder's for the same raster (PNG is lossless); only the byte
+    * stream differs. The pixel function returns a packed int, not an
+    * (r, g, b) tuple: a tuple allocates per PIXEL (billions of boxes
+    * over an sf10 corpus), a packed int stays primitive through the
+    * specialized Function2. */
+  def encodeRgb(w: Int, h: Int, pixel: (Int, Int) => Int): Array[Byte] = {
     // mirror decodeRgb's size guard (r12, ADVICE): (1 + 3w)·h silently
     // overflows Int for large rasters, surfacing as a
     // NegativeArraySizeException from a public API; fail with the
     // actual constraint instead
     require(w > 0 && h > 0 && (1L + 3L * w) * h <= Int.MaxValue - 64,
-      s"encodeRgbFastPacked: raster ${w}x$h outside the fast-path byte bound")
+      s"encodeRgb: raster ${w}x$h outside the fast-path byte bound")
     val rowBytes = 1 + 3 * w
     val raw = new Array[Byte](rowBytes * h)
     var y = 0
@@ -222,15 +217,20 @@ object Png {
       }
       y += 1
     }
+    // n + n/512 + 64 exceeds zlib's deflateBound for the default window
+    // and memLevel (n + n/4096 + n/16384 + n/2^25 + 13) at every n, so
+    // the single pass always fits; a full buffer means the bound broke
     val def_ = new Deflater(Deflater.BEST_SPEED)
     val comp = new Array[Byte](raw.length + (raw.length >> 9) + 64)
-    def_.setInput(raw); def_.finish()
     var compLen = 0
-    while (!def_.finished()) {
-      if (compLen == comp.length) { def_.end(); return encodeViaStream(raw, w, h) }
-      compLen += def_.deflate(comp, compLen, comp.length - compLen)
-    }
-    def_.end()
+    try {
+      def_.setInput(raw); def_.finish()
+      while (!def_.finished()) {
+        if (compLen == comp.length) throw new IllegalStateException(
+          s"encodeRgb: deflate output for ${w}x$h outran its ${comp.length}-byte bound")
+        compLen += def_.deflate(comp, compLen, comp.length - compLen)
+      }
+    } finally def_.end()
 
     val out = new Array[Byte](8 + 25 + 12 + compLen + 12)
     System.arraycopy(Sig, 0, out, 0, 8)
@@ -259,38 +259,5 @@ object Png {
     chunk("IDAT", comp, compLen)
     chunk("IEND", Array.emptyByteArray, 0)
     out
-  }
-
-  // overflow escape hatch for encodeRgbFast's fixed-bound deflate
-  // buffer (cannot trigger for gate-sized images; kept total)
-  private def encodeViaStream(raw: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val dos = new java.util.zip.DeflaterOutputStream(bos, new Deflater(Deflater.BEST_SPEED))
-    dos.write(raw); dos.close()
-    val comp = bos.toByteArray
-    val out = new java.io.ByteArrayOutputStream(8 + 25 + 24 + comp.length)
-    out.write(Sig, 0, 8)
-    val crc = new CRC32()
-    def w32(v: Int): Unit = {
-      out.write(v >>> 24); out.write((v >>> 16) & 0xff)
-      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-    }
-    def chunk(tag: String, body: Array[Byte]): Unit = {
-      w32(body.length)
-      val tb = tag.getBytes("ISO-8859-1")
-      out.write(tb, 0, 4); out.write(body, 0, body.length)
-      crc.reset(); crc.update(tb, 0, 4); crc.update(body, 0, body.length)
-      w32(crc.getValue.toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = (w >>> 24).toByte; ihdr(1) = (w >>> 16).toByte
-    ihdr(2) = (w >>> 8).toByte; ihdr(3) = w.toByte
-    ihdr(4) = (h >>> 24).toByte; ihdr(5) = (h >>> 16).toByte
-    ihdr(6) = (h >>> 8).toByte; ihdr(7) = h.toByte
-    ihdr(8) = 8; ihdr(9) = 2
-    chunk("IHDR", ihdr)
-    chunk("IDAT", comp)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
   }
 }

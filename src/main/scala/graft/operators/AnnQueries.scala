@@ -31,7 +31,7 @@ object AnnQueries {
     * this corpus). */
   def annBruteforceTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val queries = emb.filter($"vec_id" < NQueries)
       .select($"vec_id".as("qid"), $"embedding".as("qvec"))
@@ -57,7 +57,7 @@ object AnnQueries {
     * list_cosine_similarity with the label filter — hash-exact. */
   def embedHardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding", $"label")
     val queries = emb.filter($"vec_id" < NQueries)
       .select($"vec_id".as("qid"), $"embedding".as("qvec"), $"label".as("qlabel"))
@@ -77,7 +77,7 @@ object AnnQueries {
     * approximate recall is not SQL-expressible). */
   def annLshTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val bucketed = Similarity.hyperplaneBucketsDf(emb, "vec_id", "embedding", 16, 4)
       .join(emb, "vec_id")
@@ -116,7 +116,7 @@ object AnnQueries {
     * SQL-expressible). */
   def annMmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val base = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val perturbed = base.select(
       graft.Tables.synthId($"vec_id").as("vec_id"),

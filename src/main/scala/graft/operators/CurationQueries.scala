@@ -312,7 +312,7 @@ object CurationQueries {
     */
   def docsSourceCap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.BottomK.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val Pack = 10000000000L // quality_bp * Pack + doc_id, both recoverable
     Tables.widened(Tables.documents(spark, dir))
       .select($"source", $"doc_id", TextFunctions.qualityScoreBp($"text").as("q_bp"))

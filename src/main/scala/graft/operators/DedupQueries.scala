@@ -54,7 +54,7 @@ object DedupQueries {
     * the pipeline author, not buried in this helper. */
   private[graft] def explodedShingles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ShingleHashes.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     // the native hash array is evaluated ONCE per doc (its own
     // projection); size and explode only read it, and explode of an
     // empty array drops gram-less docs
@@ -732,7 +732,7 @@ object DedupQueries {
     * with exact cosine. */
   def dedupEmbeddingCosine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val tau = 0.99
 
     val base = Tables.widened(Tables.embeddings(spark, dir)).select($"vec_id", $"embedding")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{BloomAgg, BloomContains, TopFreq}
 import graft.text.TextFunctions
 
 /** Frequency-sketch operators: SpaceSaving heavy hitters and
@@ -37,7 +36,7 @@ object HeavyHitterQueries {
     */
   def qHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    TopFreq.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val summary = Tables.widened(Tables.documents(spark, dir))
       .filter(length(trim($"text")) > 0)
       .select(explode(TextFunctions.wsTokens($"text")).as("token"))
@@ -65,8 +64,7 @@ object HeavyHitterQueries {
     */
   def qBloomPruneJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    BloomAgg.ensureRegistered(spark)
-    BloomContains.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
 
     val cust = Tables.customer(spark, dir)
       .filter($"c_mktsegment" === "BUILDING")

@@ -35,7 +35,7 @@ object ImageDedupQueries {
 
   /** Encoded phash gate corpus: (media_id, png bytes).
     *  - every doc: the base image (w = id%48+16, h = id%32+16) on the
-    *    high-frequency [[Multimodal.phashPixelChannels]] grid;
+    *    high-frequency [[Multimodal.phashPixelPacked]] grid;
     *  - every doc: a 2× nearest-neighbor UPSCALE re-encode (+1e6) —
     *    raster (x,y) = base(x div 2, y div 2), the cheap re-host
     *    variant an image crawl sees constantly;
@@ -61,7 +61,7 @@ object ImageDedupQueries {
         // packed-int pixel fn: a (r,g,b) tuple boxes per PIXEL —
         // billions of allocations over an sf10 corpus (255-c per
         // channel == ~p masked to 24 bits)
-        val bytes = graft.multimodal.Png.encodeRgbFastPacked(w * sc, h * sc, (x, y) => {
+        val bytes = graft.multimodal.Png.encodeRgb(w * sc, h * sc, (x, y) => {
           val p = Multimodal.phashPixelPacked(b, x / sc, y / sc)
           if (pert && x < 4 && y < 4) ~p & 0xffffff else p
         })

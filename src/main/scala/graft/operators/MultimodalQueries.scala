@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.multimodal.Multimodal
+import graft.multimodal.{Multimodal, Png}
 import graft.multimodal.Multimodal.MediaRow
 
 /** Gate query for the multimodal pipeline (SURVEY §2.8 item 31).
@@ -36,12 +36,14 @@ object MultimodalQueries {
   }
 
   /** REAL codec roundtrip under a hash-exact gate (round 9): each
-    * document becomes a deterministic RGB image, ENCODED to actual PNG
-    * bytes and DECODED back via the JDK's ImageIO, with exact integer
-    * pixel stats (dims + per-channel sums) extracted from the decoded
-    * raster. The DuckDB oracle never touches a codec — it enumerates
-    * the same pixel grid arithmetically — so a hash match proves the
-    * encode→decode→featurize path is bit-exact end to end.
+    * document becomes a deterministic RGB image ([[gateImages]]),
+    * ENCODED to actual PNG bytes and DECODED back through the fast
+    * zero-dependency [[Png.decodeRgb]] (a real inflate + unfilter
+    * pass; ImageIO is the fallback for formats it does not take), with
+    * exact integer pixel stats (dims + per-channel sums) extracted from
+    * the decoded raster. The DuckDB oracle never touches a codec — it
+    * enumerates the same pixel grid arithmetically — so a hash match
+    * proves the encode→decode→featurize path is bit-exact end to end.
     *
     * Scale: encode and decode are back-to-back partition-preserving
     * mapPartitions stages over the scan — zero shuffles before the
@@ -50,31 +52,14 @@ object MultimodalQueries {
     * and the decode stage is unchanged. */
   def multimodalDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = Tables.widened(Tables.documents(spark, dir))
-      .select($"doc_id".as("media_id"),
-        (pmod($"doc_id", lit(48)) + 16).cast("int").as("w"),
-        (pmod($"doc_id", lit(32)) + 16).cast("int").as("h"))
-      .as[(Long, Int, Int)]
-    // r11: gate scaffolding encodes via the fast zero-dependency
-    // encoder — this gate's oracle observes decoded PIXELS only
-    // (identical for any conformant PNG encoder), and ImageIO's
-    // default-level adaptive-filter encode dominated the cell's
-    // per-task cost. The DECODE under test stays a real inflate +
-    // unfilter pass (Png.decodeRgb, ImageIO fallback).
-    val encoded = media.mapPartitions { rows =>
-      rows.map { case (id, w, h) =>
-        (id, graft.multimodal.Png.encodeRgbFastPacked(w, h,
-          (x, y) => Multimodal.pixelPacked(id, x, y)))
-      }
-    }
-    Multimodal.decodeImageStats(encoded).toDF().orderBy($"media_id")
+    Multimodal.decodeImageStats(gateImages(spark, dir)).toDF().orderBy($"media_id")
   }
 
   /** REAL pixel resize under a hash-exact gate (round 9 companion to
-    * [[multimodalDecode]]): encode the deterministic image to actual
-    * PNG bytes, decode, nearest-neighbor-resize the raster to max
-    * side 16 (exact integer output dims and source-pixel selection —
-    * Multimodal.resizeNearest), and report the RESIZED image's exact
+    * [[multimodalDecode]]): the same encoded corpus, decoded and
+    * nearest-neighbor-resized to max side 16 inside
+    * [[Multimodal.decodeImageStats]] (exact integer output dims and
+    * source-pixel selection), reporting the RESIZED image's exact
     * channel sums. The oracle enumerates the identical sample grid
     * arithmetically (dst pixel (dx,dy) reads source (dx·w div ow,
     * dy·h div oh)), so a hash match proves the decode→resize kernel
@@ -83,23 +68,31 @@ object MultimodalQueries {
     * zero shuffles before the output ordering. */
   def multimodalResize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = Tables.widened(Tables.documents(spark, dir))
+    Multimodal.decodeImageStats(gateImages(spark, dir), maxSide = 16).toDF()
+      .withColumnRenamed("width", "out_width")
+      .withColumnRenamed("height", "out_height")
+      .orderBy($"media_id")
+  }
+
+  /** Encoded image corpus of the decode and resize gates: document
+    * `doc_id` becomes the [[Multimodal.pixelPacked]] image of w =
+    * doc_id mod 48 + 16, h = doc_id mod 32 + 16, as PNG bytes. The
+    * encode is the fast zero-dependency [[Png.encodeRgb]] (r11): both
+    * gates observe decoded PIXELS only (identical for any conformant
+    * PNG encoder), and ImageIO's default-level adaptive-filter encode
+    * dominated the cells' per-task cost. */
+  private def gateImages(spark: SparkSession, dir: String) = {
+    import spark.implicits._
+    Tables.widened(Tables.documents(spark, dir))
       .select($"doc_id".as("media_id"),
         (pmod($"doc_id", lit(48)) + 16).cast("int").as("w"),
         (pmod($"doc_id", lit(32)) + 16).cast("int").as("h"))
       .as[(Long, Int, Int)]
-    // r11: fast zero-dependency encode, same reasoning as
-    // multimodalDecode — only decoded pixels are observable here
-    val encoded = media.mapPartitions { rows =>
-      rows.map { case (id, w, h) =>
-        (id, graft.multimodal.Png.encodeRgbFastPacked(w, h,
-          (x, y) => Multimodal.pixelPacked(id, x, y)))
+      .mapPartitions { rows =>
+        rows.map { case (id, w, h) =>
+          (id, Png.encodeRgb(w, h, (x, y) => Multimodal.pixelPacked(id, x, y)))
+        }
       }
-    }
-    Multimodal.decodeResizeStats(encoded, maxSide = 16).toDF()
-      .withColumnRenamed("width", "out_width")
-      .withColumnRenamed("height", "out_height")
-      .orderBy($"media_id")
   }
 
   /** REAL audio-codec roundtrip under a hash-exact gate (round 10 —

@@ -113,7 +113,7 @@ object PipelineQueries {
     * equality with all-pairs brute force at sf0.001. */
   def textDecontaminateSemantic(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     val tau = 0.99
     val base = Tables.widened(Tables.embeddings(spark, dir)).select($"vec_id", $"embedding")
     val eval = base.filter($"vec_id" % 20 === 0)
@@ -346,7 +346,7 @@ object PipelineQueries {
     * sort-based aggregation: identical results, slower path. */
   def textKeywordsTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TopK.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     // ObjectHashAggregate falls back to SORT-BASED aggregation after
     // 128 distinct groups (guarding unbounded per-group buffers);
     // graft_topk's buffer is 3 entries per doc, so the guard would

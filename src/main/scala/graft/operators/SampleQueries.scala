@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.BottomK
 
 /** Deterministic group-wise sampling (SURVEY §2 item 37): the k rows
   * per group with the smallest cryptographic-hash key — a consistent
@@ -22,7 +21,7 @@ object SampleQueries {
     * full SQL hash gate despite the custom aggregate. */
   def qSampleDeterministic(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    BottomK.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     Tables.events(spark, dir)
       .groupBy($"event_type")
       .agg(call_function("graft_bottomk",

@@ -94,7 +94,7 @@ object UrlQueries {
     * (doc_id, source, n_chars). */
   def urlDomainStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.BottomK.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
     // n_chars rides the bottom-k value packed under the doc_id; the
     // pack requires n_chars in [0, 1e5) and doc_id in [0, 9.2e13) —
     // fail loudly instead of silently mis-summing (docs_source_cap

@@ -66,7 +66,7 @@ object Similarity {
     * `wordNgrams(TextFunctions.wsTokens(text), n)`, as `array<bigint>`
     * — the native expression graft.functions.ShingleHashes (one byte
     * walk, no gram strings; distinct is taken on the hashes). Requires
-    * the graft extensions or `ShingleHashes.ensureRegistered`, like
+    * the graft extensions or `GraftExtensions.ensureRegistered`, like
     * [[cosine]]. */
   def shingleHashes(text: Column, n: Int): Column =
     call_function("graft_shingle_hashes", text, lit(n))
@@ -93,8 +93,8 @@ object Similarity {
     * lambda calls per 64-dim pair). Resolved through the function
     * registry: sessions built with
     * `spark.sql.extensions=graft.functions.GraftExtensions` have it;
-    * other sessions call `CosineSimilarity.ensureRegistered(spark)`
-    * once (the graft operators do this themselves). */
+    * other sessions call `GraftExtensions.ensureRegistered(spark)` once
+    * (the graft operators do this themselves). */
   def cosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 

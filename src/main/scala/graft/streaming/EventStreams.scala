@@ -137,7 +137,7 @@ object EventStreams {
     * overestimate bounds hold for the union of all batches. */
   def topFreq(events: DataFrame, itemCol: String, k: Int = 64): DataFrame = {
     import events.sparkSession.implicits._
-    graft.functions.TopFreq.ensureRegistered(events.sparkSession)
+    graft.functions.GraftExtensions.ensureRegistered(events.sparkSession)
     events
       .agg(expr(s"graft_topfreq($itemCol, $k)").as("hh"))
       .select(explode($"hh").as("e"))

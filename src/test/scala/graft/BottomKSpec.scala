@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.BottomK
+import graft.functions.GraftExtensions
 
 /** BottomK aggregate: equivalence with the rank-window formulation,
   * partitioning invariance (merge correctness), and null handling. */
@@ -12,7 +12,7 @@ class BottomKSpec extends AnyFunSuite with SparkSpec {
 
   test("equals the rank-window formulation on real events; partitioning-invariant") {
     import spark.implicits._
-    BottomK.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark)
     val ev = Tables.events(spark, sf).select($"event_type", $"event_id")
 
     def viaAgg(df: org.apache.spark.sql.DataFrame) = df
@@ -40,7 +40,7 @@ class BottomKSpec extends AnyFunSuite with SparkSpec {
 
   test("groups smaller than k return all rows; null keys/values skipped") {
     import spark.implicits._
-    BottomK.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark)
     val df = Seq(
       ("a", Some(3L)), ("a", Some(1L)),
       ("b", Some(9L)), ("b", None)).toDF("g", "v")
@@ -55,7 +55,7 @@ class BottomKSpec extends AnyFunSuite with SparkSpec {
 
   test("k must be a positive literal") {
     import spark.implicits._
-    BottomK.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark)
     val df = Seq(("a", 1L)).toDF("g", "v")
     assertThrows[Exception] {
       df.groupBy($"g")

@@ -14,9 +14,7 @@ class FrequencySpec extends SparkSpec {
   import spark.implicits._
 
   private def registered(): Unit = {
-    graft.functions.TopFreq.ensureRegistered(spark)
-    graft.functions.BloomAgg.ensureRegistered(spark)
-    graft.functions.BloomContains.ensureRegistered(spark)
+    graft.functions.GraftExtensions.ensureRegistered(spark)
   }
 
   test("topfreq with capacity >= distinct is exact with zero error, any partitioning") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CosineSimilarity, TextScanCounts}
+import graft.functions.{CosineSimilarity, GraftExtensions, TextScanCounts}
 import graft.similarity.Similarity
 
 /** Native CosineSimilarity expression: equivalence with the
@@ -50,8 +50,39 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     val df = Seq((Some(Seq(1.0f, 2.0f)), Option.empty[Seq[Float]])).toDF("a", "b")
     val r = df.select(Similarity.cosine($"a", $"b").as("c")).collect()(0)
     assert(r.isNullAt(0))
-    CosineSimilarity.ensureRegistered(spark)
-    CosineSimilarity.ensureRegistered(spark) // second call is a no-op
+    GraftExtensions.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark) // second call is a no-op
+  }
+
+  test("one ensureRegistered call restores all eight functions; a second changes nothing") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val ids = GraftExtensions.Functions.map(_._1)
+    assert(ids.map(_.funcName).toSet === Set("graft_cosine", "graft_bottomk",
+      "graft_topfreq", "graft_bloom_agg", "graft_bloom_contains", "graft_text_counts",
+      "graft_shingle_hashes", "graft_topk"))
+    ids.foreach(id => assert(registry.dropFunction(id), s"$id was not injected"))
+    ids.foreach(id => assert(!registry.functionExists(id), s"$id still resolves"))
+    assert(spark.sessionState.functionRegistry.functionExists(ids.head),
+      "dropping from the new session must not touch the shared one")
+
+    GraftExtensions.ensureRegistered(session)
+    ids.foreach(id => assert(registry.functionExists(id), s"$id not restored"))
+    val cos = session.sql("SELECT graft_cosine(array(CAST(1.0 AS FLOAT)), " +
+      "array(CAST(2.0 AS FLOAT)))").collect()(0).getDouble(0)
+    assert(cos === 1.0)
+
+    // a second call leaves every registered builder as it is — even
+    // one a caller replaced in between
+    val sentinel: Seq[Expression] => Expression = _ => Literal(42)
+    registry.registerFunction(ids.head, GraftExtensions.Functions.head._2, sentinel)
+    val builders = ids.map(id => registry.lookupFunctionBuilder(id).get)
+    val listed = registry.listFunction().size
+    GraftExtensions.ensureRegistered(session)
+    assert(ids.map(id => registry.lookupFunctionBuilder(id).get) === builders)
+    assert(registry.lookupFunctionBuilder(ids.head).get eq sentinel)
+    assert(registry.listFunction().size === listed)
   }
 
   test("text scan counts: interpreted eval matches codegen; null yields null") {
@@ -79,13 +110,13 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     val nullRow = Seq(Option.empty[String]).toDF("t")
       .select(graft.text.TextFunctions.scanCounts(col("t"))).collect()(0)
     assert(nullRow.isNullAt(0))
-    TextScanCounts.ensureRegistered(spark)
-    TextScanCounts.ensureRegistered(spark) // second call is a no-op
+    GraftExtensions.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark) // second call is a no-op
   }
 
   test("graft_topk keeps the k largest (score desc, tag asc) across partitions") {
     import spark.implicits._
-    graft.functions.TopK.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark)
     // ties on score exercise the byte-lexicographic tag tie-break; the
     // null-score row must be skipped; repartition(7) forces partial
     // buffers + serialize/merge on the combine path
@@ -112,7 +143,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    graft.functions.TopK.ensureRegistered(spark)
+    GraftExtensions.ensureRegistered(spark)
     // small score/tag alphabets force score ties (tag tie-break) and
     // include a supplementary-plane tag, where UTF-8 byte order and
     // Java String order DISAGREE with each other's neighbors

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.Multimodal
+import graft.multimodal.{Multimodal, Png}
 import graft.multimodal.Multimodal.MediaRow
 
 class MultimodalSpec extends AnyFunSuite with SparkSpec {
@@ -12,14 +12,16 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
       frames: Int = 30): MediaRow =
     MediaRow(id, "image", payload, w, h, 16000, frames)
 
+  private def rgb(p: Int): (Int, Int, Int) = ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
+
   test("featurize REALLY decodes all three kinds; undecodable payloads zero out") {
     import spark.implicits._
-    // arithmetic truths, no codec anywhere: image = pixelChannels
+    // arithmetic truths, no codec anywhere: image = pixelPacked
     // units, audio = (waveSample+32768)>>8 units, video =
     // videoPixelChannels units over SAMPLED frames only
     var iSum = 0L; var iCnt = 0L
     for (y <- 0 until 10; x <- 0 until 12) {
-      val (r, g, b) = Multimodal.pixelChannels(1L, x, y)
+      val (r, g, b) = rgb(Multimodal.pixelPacked(1L, x, y))
       iSum += r + g + b; iCnt += 3
     }
     var aSum = 0L; var aCnt = 0L
@@ -73,7 +75,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     def truth(id: Long, w: Int, h: Int): (Long, Long, Long) = {
       var r = 0L; var g = 0L; var b = 0L
       for (y <- 0 until h; x <- 0 until w) {
-        val (pr, pg, pb) = Multimodal.pixelChannels(id, x, y)
+        val (pr, pg, pb) = rgb(Multimodal.pixelPacked(id, x, y))
         r += pr; g += pg; b += pb
       }
       (r, g, b)
@@ -136,15 +138,16 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
         else ((w * maxSide + m - 1) / m, (h * maxSide + m - 1) / m)
       var r = 0L; var g = 0L; var b = 0L
       for (dy <- 0 until oh; dx <- 0 until ow) {
-        val (pr, pg, pb) = Multimodal.pixelChannels(id, dx * w / ow, dy * h / oh)
+        val (pr, pg, pb) = rgb(Multimodal.pixelPacked(id, dx * w / ow, dy * h / oh))
         r += pr; g += pg; b += pb
       }
       (ow, oh, r, g, b)
     }
-    val dims = Seq((3L, 17, 23), (4L, 63, 20), (7L, 12, 9) /* within maxSide: pass-through */)
+    val dims = Seq((3L, 17, 23), (4L, 63, 20), (7L, 12, 9) /* within maxSide: pass-through */,
+      (8L, 16, 16) /* longer side == maxSide: pass-through */)
     val encoded = spark.createDataset(dims).repartition(2)
       .map { case (id, w, h) => (id, Multimodal.encodePng(id, w, h)) }
-    val got = Multimodal.decodeResizeStats(encoded, maxSide = 16).collect()
+    val got = Multimodal.decodeImageStats(encoded, maxSide = 16).collect()
       .map(s => s.media_id -> s).toMap
     dims.foreach { case (id, w, h) =>
       val (ow, oh, r, g, b) = truth(id, w, h, 16)
@@ -155,28 +158,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     // pass-through really is untouched: full-image sums for the small one
     val s7 = got(7L)
     assert((s7.width, s7.height) === (12L, 9L))
-  }
-
-  test("decodeResizeStats' direct sampling == resizeNearest's materialized pixels") {
-    // the stats path skips building the resized BufferedImage; this
-    // pins that its sample grid IS resizeNearest's, so the reusable
-    // image API and the stats fast path can never drift
-    import spark.implicits._
-    val dims = Seq((11L, 33, 47), (12L, 63, 17), (13L, 16, 16))
-    dims.foreach { case (id, w, h) =>
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(Multimodal.encodePng(id, w, h)))
-      val small = Multimodal.resizeNearest(img, 16)
-      val ow = small.getWidth; val oh = small.getHeight
-      val px = small.getRGB(0, 0, ow, oh, null, 0, ow)
-      var r = 0L; var g = 0L; var b = 0L
-      px.foreach { p => r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff }
-      val stats = Multimodal.decodeResizeStats(
-        spark.createDataset(Seq((id, Multimodal.encodePng(id, w, h)))), 16)
-        .collect()(0)
-      assert((stats.width, stats.height) === (ow.toLong, oh.toLong), s"image $id dims")
-      assert((stats.r_sum, stats.g_sum, stats.b_sum) === (r, g, b), s"image $id sums")
-    }
   }
 
   test("frame sampling and resize plan") {
@@ -305,7 +286,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     // base-id pixel grid, bit gy*8+gx iff L(gx) > L(gx+1)
     def truth(id: Long, w: Int, h: Int): Long = {
       def luma(x: Int, y: Int): Long = {
-        val (r, g, b) = Multimodal.phashPixelChannels(id, x, y)
+        val (r, g, b) = rgb(Multimodal.phashPixelPacked(id, x, y))
         299L * r + 587L * g + 114L * b
       }
       var hash = 0L
@@ -315,20 +296,29 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
       }
       hash
     }
+    // both decoders of the real bytes: the fast path's raster and
+    // one built from ImageIO's getRGB pixels (the fallback's form)
+    def rasters(png: Array[Byte]): Seq[(String, Png.Raster)] = {
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
+      val (w, h) = (img.getWidth, img.getHeight)
+      Seq("fast" -> Png.decodeRgb(png),
+        "ImageIO" -> new Png.Raster(w, h, img.getRGB(0, 0, w, h, null, 0, w)))
+    }
     val dims = Seq((3L, 17, 23), (4L, 63, 20), (9L, 16, 16))
     dims.foreach { case (id, w, h) =>
-      val png = Multimodal.encodePngPixels(w, h,
-        (x, y) => Multimodal.phashPixelChannels(id, x, y))
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-      assert(Multimodal.dHash64(img) === truth(id, w, h), s"image $id dHash")
+      val png = Png.encodeRgb(w, h, (x, y) => Multimodal.phashPixelPacked(id, x, y))
+      rasters(png).foreach { case (dec, ras) =>
+        assert(Multimodal.dHash64(ras) === truth(id, w, h), s"image $id dHash ($dec)")
+      }
       // 2x nearest-neighbor upscale re-encode: floor(floor(2a)/2) =
       // floor(a), so the sample grid reads the SAME source pixels and
       // the hash must be IDENTICAL (the property the phash dedup's
       // planted pairs rely on)
-      val up = Multimodal.encodePngPixels(w * 2, h * 2,
-        (x, y) => Multimodal.phashPixelChannels(id, x / 2, y / 2))
-      val upImg = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(up))
-      assert(Multimodal.dHash64(upImg) === truth(id, w, h), s"image $id upscaled dHash")
+      val up = Png.encodeRgb(w * 2, h * 2,
+        (x, y) => Multimodal.phashPixelPacked(id, x / 2, y / 2))
+      rasters(up).foreach { case (dec, ras) =>
+        assert(Multimodal.dHash64(ras) === truth(id, w, h), s"image $id upscaled dHash ($dec)")
+      }
     }
     // the phash pixel grid must not be luma-monotone (the decode
     // gate's LINEAR grid is, which would collapse every image to

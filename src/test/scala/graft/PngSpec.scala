@@ -34,12 +34,10 @@ class PngSpec extends AnyFunSuite {
 
   test("fast encode round-trips bit-exactly under BOTH decoders") {
     for (id <- Seq(3L, 500L); (w, h) <- Seq((16, 16), (41, 29))) {
-      def pixel(x: Int, y: Int) = Multimodal.phashPixelChannels(id, x, y)
-      val bytes = Png.encodeRgbFast(w, h, pixel)
+      def pixel(x: Int, y: Int) = Multimodal.phashPixelPacked(id, x, y)
+      val bytes = Png.encodeRgb(w, h, pixel)
       // truth raster from the pixel function
-      val truth = (0 until h).flatMap(y => (0 until w).map(x => {
-        val (r, g, b) = pixel(x, y); (r << 16) | (g << 8) | b
-      }))
+      val truth = (0 until h).flatMap(y => (0 until w).map(x => pixel(x, y)))
       val ras = Png.decodeRgb(bytes)
       assert(ras != null && ras.w == w && ras.h == h)
       assert(ras.px.toSeq === truth)
@@ -55,7 +53,7 @@ class PngSpec extends AnyFunSuite {
     assert(Png.decodeRgb(null) == null)
     assert(Png.decodeRgb(Array.emptyByteArray) == null)
     assert(Png.decodeRgb("definitely not a png".getBytes) == null)
-    val good = Png.encodeRgbFast(20, 20, (x, y) => (x, y, x + y))
+    val good = Png.encodeRgb(20, 20, (x, y) => (x << 16) | (y << 8) | (x + y))
     assert(Png.decodeRgb(good.take(40)) == null, "truncated mid-chunk")
     assert(Png.decodeRgb(good.take(good.length - 8)) == null, "missing IEND tail")
     val zlibCorrupt = good.clone()
@@ -80,10 +78,7 @@ class PngSpec extends AnyFunSuite {
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     val px = new Array[Int](w * h)
-    for (y <- 0 until h; x <- 0 until w) {
-      val (r, g, b) = Multimodal.phashPixelChannels(9001L, x, y)
-      px(y * w + x) = (r << 16) | (g << 8) | b
-    }
+    for (y <- 0 until h; x <- 0 until w) px(y * w + x) = Multimodal.phashPixelPacked(9001L, x, y)
     img.setRGB(0, 0, w, h, px, 0, w)
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
@@ -104,16 +99,19 @@ class PngSpec extends AnyFunSuite {
   }
 
   test("dHash64 over the fast raster == dHash64 over the BufferedImage") {
+    // the BufferedImage side is ImageIO's decode of the same bytes,
+    // bulk getRGB'd into a raster (the decodeRaster fallback's form)
     for (id <- Seq(7L, 123L); (w, h) <- Seq((24, 18), (61, 33))) {
-      val bytes = Png.encodeRgbFast(w, h, (x, y) => Multimodal.phashPixelChannels(id, x, y))
+      val bytes = Png.encodeRgb(w, h, (x, y) => Multimodal.phashPixelPacked(id, x, y))
       val ras = Png.decodeRgb(bytes)
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      assert(Multimodal.dHash64(ras) === Multimodal.dHash64(img))
+      val (iw, ih, ipx) = imageIoPixels(bytes)
+      assert(Multimodal.dHash64(ras) === Multimodal.dHash64(new Png.Raster(iw, ih, ipx)))
     }
   }
 
   test("a tampered zlib Adler-32 trailer is rejected, not decoded to garbage (r12)") {
-    val bytes = Png.encodeRgbFast(20, 15, (x, y) => ((x * 7) % 256, (y * 11) % 256, 40))
+    val bytes = Png.encodeRgb(20, 15,
+      (x, y) => (((x * 7) % 256) << 16) | (((y * 11) % 256) << 8) | 40)
     assert(Png.decodeRgb(bytes) != null, "untampered fixture must decode")
     // the zlib trailer is the last 4 bytes of the (single) IDAT body;
     // flipping a bit there leaves the deflate DATA fully inflatable —
@@ -136,10 +134,26 @@ class PngSpec extends AnyFunSuite {
 
   test("encoder size guard: oversized rasters fail loudly, not with a negative array") {
     intercept[IllegalArgumentException] {
-      Png.encodeRgbFastPacked(46341, 46341, (_, _) => 0) // (1+3w)h overflows Int
+      Png.encodeRgb(46341, 46341, (_, _) => 0) // (1+3w)h overflows Int
     }
     intercept[IllegalArgumentException] {
-      Png.encodeRgbFastPacked(0, 10, (_, _) => 0)
+      Png.encodeRgb(0, 10, (_, _) => 0)
+    }
+  }
+
+  test("incompressible rasters encode within the deflate bound and decode bit-exactly") {
+    // seeded random pixels do not compress: deflate's output is then
+    // closest to the fixed buffer bound that encodeRgb throws past
+    val rng = new scala.util.Random(20240611L)
+    for ((w, h) <- Seq((1, 1), (64, 64), (1024, 33))) {
+      val truth = Array.fill(w * h)(rng.nextInt() & 0xffffff)
+      val bytes = Png.encodeRgb(w, h, (x, y) => truth(y * w + x))
+      val ras = Png.decodeRgb(bytes)
+      assert(ras != null && ras.w == w && ras.h == h, s"fast decode of $w x $h")
+      assert(ras.px.toSeq === truth.toSeq, s"fast decode pixels at $w x $h")
+      val (iw, ih, ipx) = imageIoPixels(bytes)
+      assert((iw, ih) === ((w, h)))
+      assert(ipx.toSeq === truth.toSeq, s"ImageIO pixels at $w x $h")
     }
   }
 }
