@@ -133,4 +133,15 @@ object Tables {
       .otherwise(raise_error(concat(
         lit(s"synthId: id outside [0, $SynthIdOffset): "), id.cast("string"))))
   }
+
+  /** Planted near-duplicates of a (vec_id, embedding) frame: each
+    * vector under its [[synthId]], alternate dimensions scaled by ±2%
+    * (cosine ≈ 0.9996 to its source). The one construction the
+    * embedding-dedup, semantic-decontamination and MMR queries plant. */
+  def nearDupTwins(vecs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    vecs.select(synthId(col("vec_id")).as("vec_id"),
+      zip_with(col("embedding"), sequence(lit(0), size(col("embedding")) - 1),
+        (x, d) => x * when(d % 2 === 0, lit(1.02f)).otherwise(lit(0.98f))).as("embedding"))
+  }
 }

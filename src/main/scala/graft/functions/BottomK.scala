@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Im
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.{ByteArray, UTF8String}
 
 /** Deterministic bottom-k sample aggregate: keeps the `k` rows with the
   * SMALLEST (key, value) — used with a cryptographic-hash key this is a
@@ -114,21 +114,15 @@ object BottomK {
 
   /** One sample entry: key as RAW UTF-8 BYTES so ordering is unsigned
     * byte-lexicographic — the collation Spark's UTF8String sort and
-    * DuckDB's VARCHAR sort use. Java String compareTo orders by UTF-16
-    * code units, which DISAGREES for supplementary-plane characters
-    * and would break the documented rank-window equivalence. */
+    * DuckDB's VARCHAR sort use, compared by Spark's own binary
+    * comparator. Java String compareTo orders by UTF-16 code units,
+    * which DISAGREES for supplementary-plane characters and would
+    * break the documented rank-window equivalence. */
   final case class Entry(key: Array[Byte], value: Long)
 
   val EntryOrdering: Ordering[Entry] = new Ordering[Entry] {
     override def compare(a: Entry, b: Entry): Int = {
-      val n = math.min(a.key.length, b.key.length)
-      var i = 0
-      while (i < n) {
-        val d = (a.key(i) & 0xff) - (b.key(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      val d = a.key.length - b.key.length
+      val d = ByteArray.compareBinary(a.key, b.key)
       if (d != 0) d else java.lang.Long.compare(a.value, b.value)
     }
   }

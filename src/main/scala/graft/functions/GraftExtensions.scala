@@ -24,8 +24,7 @@ object GraftExtensions {
     ("graft_bloom_agg", BloomAgg.Info, BloomAgg.Builder),
     ("graft_bloom_contains", BloomContains.Info, BloomContains.Builder),
     ("graft_text_counts", TextScanCounts.Info, TextScanCounts.Builder),
-    ("graft_shingle_hashes", ShingleHashes.Info, ShingleHashes.Builder),
-    ("graft_topk", TopK.Info, TopK.Builder)
+    ("graft_shingle_hashes", ShingleHashes.Info, ShingleHashes.Builder)
   ).map { case (name, info, builder) => (FunctionIdentifier(name), info, builder) }
 
   /** Idempotent imperative registration of every function in

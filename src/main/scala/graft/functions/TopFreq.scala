@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Im
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.{ByteArray, UTF8String}
 
 /** SpaceSaving heavy-hitters aggregate (Metwally et al. '05, merge per
   * Agarwal et al. "Mergeable Summaries" '12): a fixed-capacity summary
@@ -120,27 +120,17 @@ case class TopFreq(
 object TopFreq {
 
   /** Item bytes are raw UTF-8 so tie-break ordering is unsigned
-    * byte-lexicographic — the collation of Spark's UTF8String sort and
-    * DuckDB's VARCHAR sort (see BottomK.Entry for why not String). */
+    * byte-lexicographic (Spark's binary comparator) — the collation of
+    * Spark's UTF8String sort and DuckDB's VARCHAR sort (see
+    * BottomK.Entry for why not String). */
   final case class Entry(item: Array[Byte], var cnt: Long, var err: Long)
-
-  private def byteCompare(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
 
   /** Output/trim order: largest count first, item bytes ascending on
     * ties — a total order, so eval and trimming are deterministic. */
   val EntryOrdering: Ordering[Entry] = new Ordering[Entry] {
     override def compare(a: Entry, b: Entry): Int = {
       val d = java.lang.Long.compare(b.cnt, a.cnt)
-      if (d != 0) d else byteCompare(a.item, b.item)
+      if (d != 0) d else ByteArray.compareBinary(a.item, b.item)
     }
   }
 
@@ -159,7 +149,7 @@ object TopFreq {
   final class Buffer {
     private val map = new java.util.HashMap[java.nio.ByteBuffer, Entry]()
     private val itemOrd = new java.util.Comparator[Entry] {
-      override def compare(a: Entry, b: Entry): Int = byteCompare(a.item, b.item)
+      override def compare(a: Entry, b: Entry): Int = ByteArray.compareBinary(a.item, b.item)
     }
     // LAZY: the bucket index only exists once the summary has filled
     // and an eviction-order question has actually been asked. In the

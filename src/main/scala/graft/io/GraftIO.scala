@@ -842,7 +842,8 @@ object GraftIO {
   }
 
   /** Read a dataset (single file, directory tree, or glob) written by
-    * `write` — or by anything else speaking the same formats.
+    * `write` — or by anything else speaking the same formats. The
+    * compression codec comes from each file's extension.
     *
     * @param schema optional explicit schema (reference reads dsv as
     *               all-string by default — pass None + inferSchema=false
@@ -858,7 +859,6 @@ object GraftIO {
       spark: SparkSession,
       path: String,
       format: Format = Parquet,
-      gzip: Boolean = false, // codec auto-detected by extension; kept for API parity
       sep: String = "\t",
       header: Boolean = true,
       schema: Option[StructType] = None,

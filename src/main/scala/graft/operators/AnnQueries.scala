@@ -118,11 +118,7 @@ object AnnQueries {
     import spark.implicits._
     graft.functions.GraftExtensions.ensureRegistered(spark)
     val base = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val perturbed = base.select(
-      graft.Tables.synthId($"vec_id").as("vec_id"),
-      zip_with($"embedding", sequence(lit(0), size($"embedding") - 1),
-        (x, d) => x * when(d % 2 === 0, lit(1.02f)).otherwise(lit(0.98f))).as("embedding"))
-    val corpus = base.union(perturbed)
+    val corpus = base.union(Tables.nearDupTwins(base))
     val queries = base.filter($"vec_id" < NQueries)
       .select($"vec_id".as("qid"), $"embedding".as("qvec"))
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -145,24 +145,24 @@ object CorpusQueries {
     * variant thresholds the model (c2 >= minCount) and broadcasts the
     * surviving head — the long tail of singleton bigrams scores ~0
     * anyway. */
-  def textLmScore(spark: SparkSession, dir: String): DataFrame = {
+  def textLmScore(spark: SparkSession, dir: String): DataFrame =
+    lmScoreHashed(spark, dir, 1L, "text_lm_score", broadcastModel = false)
+
+  /** The one hashed-key scoring body of [[textLmScore]] and
+    * [[textLmScoreHead]]: per-doc gram counts persisted once feed both
+    * the model and the scoring join. The two differ only in
+    * `minCount`, the ledger `tag`, and the join: the full model
+    * (minCount = 1) is vocabulary-sized and joins unhinted; the head
+    * broadcasts. */
+  private def lmScoreHashed(
+      spark: SparkSession, dir: String, minCount: Long, tag: String,
+      broadcastModel: Boolean): DataFrame = {
     import spark.implicits._
     val docGrams = hashedDocGramCounts(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model = hashedModelFromCounts(
-      docGrams.groupBy($"gh", $"w1h").agg(sum($"cnt").as("c2")))
-    val scored = docGrams.join(model, "gh")
-      .groupBy($"doc_id")
-      .agg(sum($"cnt").as("n_bigrams"), sum($"cnt" * $"bp").as("sum_bp"))
-      .select($"doc_id", $"n_bigrams", $"sum_bp",
-        floor($"sum_bp" / $"n_bigrams").cast("long").as("avg_bp"))
-      // materialized + persisted so docGrams can be released eagerly
-      // (the dedup-family discipline; the returned frame is PERSISTED —
-      // ledger-registered so long-lived sessions can release it)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count()
-    docGrams.unpersist()
-    graft.CacheLedger.register("text_lm_score", scored).orderBy($"doc_id")
+    val model = lmModelFromCounts(
+      docGrams.groupBy($"gh", $"w1h").agg(sum($"cnt").as("c2")), "gh", $"w1h", minCount)
+    keepScored(tag, scoreDocGrams(docGrams, model, "gh", broadcastModel), docGrams)
   }
 
   /** Hashed-gram per-doc counts (doc_id, gh, w1h, cnt) — the r11
@@ -184,18 +184,6 @@ object CorpusQueries {
       .select($"doc_id", xxhash64($"g").as("gh"),
         xxhash64(substring_index($"g", " ", 1)).as("w1h"))
       .groupBy($"doc_id", $"gh", $"w1h").agg(count(lit(1)).as("cnt"))
-  }
-
-  /** [[lmBigramModelFromCounts]] restated over hashed gram keys: bp =
-    * floor(10000·c2/c1) with c1 summing the FULL table per left
-    * context before any head threshold — identical arithmetic, long
-    * keys. */
-  private def hashedModelFromCounts(c2: DataFrame, minCount: Long = 1L): DataFrame = {
-    import c2.sparkSession.implicits._
-    val c1 = c2.groupBy($"w1h").agg(sum($"c2").as("c1"))
-    c2.filter($"c2" >= minCount)
-      .join(c1, "w1h")
-      .select($"gh", floor(lit(10000L) * $"c2" / $"c1").cast("long").as("bp"))
   }
 
   /** CCNet-style quality bucketing: split each language's corpus into
@@ -470,41 +458,28 @@ object CorpusQueries {
       explode(graft.similarity.Similarity.wordNgramsAll(wsTokens($"text"), 2)).as("g"))
   }
 
-  /** The (g, bp) conditional-frequency model [[textLmScore]] trains,
-    * exposed so the streaming twin (streaming/DocStreams.lmScoreStream)
-    * can join the SAME model as a static side. Input: any (.., g)
-    * bigram-instance frame. */
-  def lmBigramModel(grams: DataFrame): DataFrame = {
-    val spark = grams.sparkSession
-    import spark.implicits._
-    lmBigramModelFromCounts(grams.groupBy($"g").agg(count(lit(1)).as("c2")))
-  }
-
-  /** The model formula over a pre-counted (g, c2) gram-frequency frame —
-    * the ONE definition of bp both [[textLmScore]] (which already holds
-    * counts at (doc, g) granularity) and [[lmBigramModel]] (instance
-    * granularity, the streaming twin's entry point) reduce to, so the
-    * batch and streaming models cannot drift.
+  /** The model formula over a pre-counted (key, c2) gram-frequency
+    * frame: bp = floor(10000·c2/c1), c1 summing c2 per left context
+    * `w1`. The ONE definition of bp every LM path reduces to — the
+    * hashed scorers pass `key = "gh"` with the carried `w1h`; the
+    * string-keyed trainers pass `key = "g"` with
+    * `substring_index(g, " ", 1)` (tokens contain no spaces, so
+    * everything before the first space IS the left context; identical
+    * derivation stated in the oracle via split_part).
     *
     * `minCount` keeps only the model HEAD (bigrams seen >= minCount
     * times) — the [[textLmScoreHead]] scale posture. The threshold is
     * applied AFTER the c1 denominator sums the FULL table, so a
     * surviving bigram's bp is bit-identical to the unthresholded
-    * model's; dropping is the only approximation. Default 1 = keep
-    * everything (the exact paths are unchanged). */
-  private[graft] def lmBigramModelFromCounts(
-      c2: DataFrame, minCount: Long = 1L): DataFrame = {
-    val spark = c2.sparkSession
-    import spark.implicits._
-    // w1 recovered from the gram key: tokens contain no spaces, so
-    // everything before the first space IS the left context (identical
-    // derivation stated in the oracle via split_part)
-    val c1 = c2.groupBy(substring_index($"g", " ", 1).as("w1"))
-      .agg(sum($"c2").as("c1"))
-    c2.filter($"c2" >= minCount)
-      .withColumn("w1", substring_index($"g", " ", 1))
+    * model's; dropping is the only approximation. minCount = 1 keeps
+    * everything. */
+  private[graft] def lmModelFromCounts(
+      c2: DataFrame, key: String, w1: Column, minCount: Long): DataFrame = {
+    val withW1 = c2.withColumn("w1", w1)
+    val c1 = withW1.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
+    withW1.filter(col("c2") >= minCount)
       .join(c1, "w1")
-      .select($"g", floor(lit(10000L) * $"c2" / $"c1").cast("long").as("bp"))
+      .select(col(key), floor(lit(10000L) * col("c2") / col("c1")).cast("long").as("bp"))
   }
 
   /** The production 100 TB variant of [[textLmScore]] — the posture the
@@ -525,30 +500,21 @@ object CorpusQueries {
     *    with corpus count < minCount. avg_bp can therefore only
     *    round DOWN relative to the exact score, never up. */
   def textLmScoreHead(
-      spark: SparkSession, dir: String, minCount: Long = 2L): DataFrame = {
-    import spark.implicits._
-    val docGrams = hashedDocGramCounts(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val head = hashedModelFromCounts(
-      docGrams.groupBy($"gh", $"w1h").agg(sum($"cnt").as("c2")), minCount)
-    // materialize-then-release (the dedup-family discipline); the
-    // returned frame stays persisted, ledger-registered for callers
-    val scored = scoreUnderHeadKeyed(docGrams, head, "gh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count()
-    docGrams.unpersist()
-    graft.CacheLedger.register("text_lm_score_head", scored).orderBy($"doc_id")
-  }
+      spark: SparkSession, dir: String, minCount: Long = 2L): DataFrame =
+    lmScoreHashed(spark, dir, minCount, "text_lm_score_head", broadcastModel = true)
 
-  /** The one scoring plan every head-model variant shares: per-doc
-    * gram counts left-joined to the BROADCAST head (the corpus side
-    * never shuffles for the model), absent grams scoring 0 bp without
+  /** The one scoring plan every LM variant shares: per-doc gram counts
+    * left-joined to the model, absent grams scoring 0 bp without
     * leaving the n_bigrams denominator. `key` is "gh" on the hashed
-    * fast path and "g" for the string-keyed persisted-model path. */
-  private def scoreUnderHeadKeyed(
-      docGrams: DataFrame, model: DataFrame, key: String): DataFrame = {
+    * fast path and "g" for the string-keyed persisted-model path; a
+    * BROADCAST model (every head variant) never shuffles the corpus
+    * side. */
+  private def scoreDocGrams(
+      docGrams: DataFrame, model: DataFrame, key: String,
+      broadcastModel: Boolean = true): DataFrame = {
     import docGrams.sparkSession.implicits._
-    docGrams.join(broadcast(model.select(col(key), $"bp")), Seq(key), "left")
+    val m = model.select(col(key), $"bp")
+    docGrams.join(if (broadcastModel) broadcast(m) else m, Seq(key), "left")
       .groupBy($"doc_id")
       .agg(sum($"cnt").as("n_bigrams"),
         sum($"cnt" * coalesce($"bp", lit(0L))).as("sum_bp"))
@@ -556,20 +522,37 @@ object CorpusQueries {
         floor($"sum_bp" / $"n_bigrams").cast("long").as("avg_bp"))
   }
 
-  private def scoreUnderHead(docGrams: DataFrame, model: DataFrame): DataFrame =
-    scoreUnderHeadKeyed(docGrams, model, "g")
+  /** Materialize-then-release: persist and count the scored frame so
+    * its gram-count input can be unpersisted now; the returned frame
+    * stays persisted, ledger-registered under `tag` for callers. */
+  private def keepScored(tag: String, scored: DataFrame, docGrams: DataFrame): DataFrame = {
+    val kept = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    kept.count()
+    docGrams.unpersist()
+    graft.CacheLedger.register(tag, kept).orderBy(col("doc_id"))
+  }
+
+  /** String-keyed per-doc gram counts (doc_id, g, cnt) — the input of
+    * the persisted-model paths, whose artifact keys on the gram string. */
+  private def stringDocGramCounts(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    bigramInstances(Tables.widened(Tables.documents(spark, dir)))
+      .groupBy($"doc_id", $"g").agg(count(lit(1)).as("cnt"))
+  }
 
   /** Training half of the LM-head train/serve split: fit the
     * thresholded bigram head alone (one corpus scan), e.g. to persist
     * via [[graft.io.ModelIO.saveLmHead]] and serve from in later runs.
     * Identical model to the one [[textLmScoreHead]] fits inline: both
-    * reduce to [[lmBigramModelFromCounts]] over the same instance
-    * counts. */
+    * reduce to [[lmModelFromCounts]] over the same instance counts.
+    * minCount = 1 trains the FULL model [[textLmScore]] scores under —
+    * the static side streaming/DocStreams.lmScoreStream joins. */
   def trainLmHead(spark: SparkSession, dir: String, minCount: Long = 2L): DataFrame = {
     import spark.implicits._
-    lmBigramModelFromCounts(
+    lmModelFromCounts(
       bigramInstances(Tables.widened(Tables.documents(spark, dir)))
-        .groupBy($"g").agg(count(lit(1)).as("c2")), minCount)
+        .groupBy($"g").agg(count(lit(1)).as("c2")),
+      "g", substring_index($"g", " ", 1), minCount)
   }
 
   /** Serving half: score the corpus under a PRE-TRAINED head model
@@ -578,14 +561,8 @@ object CorpusQueries {
     * corpus work is the one scoring scan: zero training jobs. Unlike
     * [[textLmScoreHead]] there is no persist here — the gram frame has
     * a single consumer when the model arrives from disk. */
-  def textLmScoreHeadWith(spark: SparkSession, dir: String, model: DataFrame): DataFrame = {
-    import spark.implicits._
-    scoreUnderHead(
-      bigramInstances(Tables.widened(Tables.documents(spark, dir)))
-        .groupBy($"doc_id", $"g").agg(count(lit(1)).as("cnt")),
-      model)
-      .orderBy($"doc_id")
-  }
+  def textLmScoreHeadWith(spark: SparkSession, dir: String, model: DataFrame): DataFrame =
+    scoreDocGrams(stringDocGramCounts(spark, dir), model, "g").orderBy(col("doc_id"))
 
   /** Gate query for the full persisted-model round trip: train → save
     * → load → serve, with the serving result flowing from the LOADED
@@ -613,18 +590,14 @@ object CorpusQueries {
   def textLmScoreHeadServed(spark: SparkSession, dir: String, minCount: Long = 2L): DataFrame = {
     import spark.implicits._
     val path = s"/tmp/graft_io/lm_head_${math.abs(dir.hashCode)}"
-    val docGrams = bigramInstances(Tables.widened(Tables.documents(spark, dir)))
-      .groupBy($"doc_id", $"g").agg(count(lit(1)).as("cnt"))
+    val docGrams = stringDocGramCounts(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.io.ModelIO.saveLmHead(lmBigramModelFromCounts(
-      docGrams.groupBy($"g").agg(sum($"cnt").as("c2")), minCount), path)
-    val scored = scoreUnderHeadKeyed(
+    graft.io.ModelIO.saveLmHead(lmModelFromCounts(
+      docGrams.groupBy($"g").agg(sum($"cnt").as("c2")),
+      "g", substring_index($"g", " ", 1), minCount), path)
+    keepScored("text_lm_score_head_served", scoreDocGrams(
       docGrams.withColumn("gh", xxhash64($"g")),
       graft.io.ModelIO.loadLmHead(spark, path).select(xxhash64($"g").as("gh"), $"bp"),
-      "gh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count()
-    docGrams.unpersist()
-    graft.CacheLedger.register("text_lm_score_head_served", scored).orderBy($"doc_id")
+      "gh"), docGrams)
   }
 }

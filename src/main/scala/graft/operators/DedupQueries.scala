@@ -736,12 +736,7 @@ object DedupQueries {
     val tau = 0.99
 
     val base = Tables.widened(Tables.embeddings(spark, dir)).select($"vec_id", $"embedding")
-    // perturb: flip alternate dims by ±2% — cosine vs source ≈ 0.9996
-    val perturbed = base.select(
-      graft.Tables.synthId($"vec_id").as("vec_id"),
-      zip_with($"embedding", sequence(lit(0), size($"embedding") - 1),
-        (x, d) => x * when(d % 2 === 0, lit(1.02f)).otherwise(lit(0.98f))).as("embedding"))
-    val corpus = base.union(perturbed)
+    val corpus = base.union(Tables.nearDupTwins(base))
     // the embedding rides in the cached items so pairs score straight
     // off the self-join — no re-join against the corpus (a 64-float
     // payload is cheap; the minhash path makes the opposite call

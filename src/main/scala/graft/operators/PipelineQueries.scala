@@ -117,10 +117,7 @@ object PipelineQueries {
     val tau = 0.99
     val base = Tables.widened(Tables.embeddings(spark, dir)).select($"vec_id", $"embedding")
     val eval = base.filter($"vec_id" % 20 === 0)
-    val planted = eval.select(graft.Tables.synthId($"vec_id").as("vec_id"),
-      zip_with($"embedding", sequence(lit(0), size($"embedding") - 1),
-        (x, d) => x * when(d % 2 === 0, lit(1.02f)).otherwise(lit(0.98f))).as("embedding"))
-    val corpus = base.filter($"vec_id" % 20 =!= 0).union(planted)
+    val corpus = base.filter($"vec_id" % 20 =!= 0).union(Tables.nearDupTwins(eval))
 
     val tagged = eval.select($"vec_id", $"embedding", lit(true).as("is_eval"))
       .union(corpus.select($"vec_id", $"embedding", lit(false).as("is_eval")))
@@ -290,10 +287,11 @@ object PipelineQueries {
     * Plan: tf = groupBy(doc, token) with map-side combine; df derived
     * from tf (already one row per doc-token); the ranking window keys
     * on doc_id — cardinality scales with the corpus, and each
-    * partition sort is bounded by one document's vocabulary. A
-    * shuffle-lighter per-doc top-k via the `graft_topk` aggregate
-    * exists as [[textKeywordsTopK]] — see its docstring for the
-    * measured tradeoff and when each formulation wins. */
+    * partition sort is bounded by one document's vocabulary. A per-doc
+    * top-k aggregate would shuffle fewer rows, but measured slower in
+    * local mode (sf1: 3.7 s vs the window's 3.2 s): the window sort is
+    * whole-stage codegen, an imperative aggregate is interpreted per
+    * row. */
   def textKeywords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = Tables.widened(Tables.documents(spark, dir))
@@ -314,70 +312,6 @@ object PipelineQueries {
       .filter($"rk" <= 3)
       .select($"doc_id", $"rk".cast("long").as("rk"), $"token", $"tf", $"df")
       .orderBy($"doc_id", $"rk")
-  }
-
-  /** [[textKeywords]] with the per-doc top-3 as the `graft_topk`
-    * aggregate (functions/TopK.scala) instead of a rank window:
-    * size-3 buffers per doc per task, so the rank step shuffles at
-    * most 3 rows per document per partition where the window
-    * re-shuffles EVERY distinct (doc, token) pair and sorts. Results
-    * are IDENTICAL (PipelineSpec equivalence test): the aggregate
-    * compares scores as IEEE doubles and tokens as raw UTF-8 bytes —
-    * the window's and the DuckDB oracle's exact ORDER BY semantics.
-    *
-    * Which to use, measured honestly: at local corpus scale the
-    * WINDOW wins (sf1: 3.2 s vs 3.7 s) — TypedImperativeAggregate
-    * eval is interpreted per row while the window sort is whole-stage
-    * codegen, and one document's vocabulary is a small per-partition
-    * sort. The aggregate's shuffle math wins when the ranked input is
-    * wide relative to k and the NETWORK, not per-row CPU, is the
-    * bottleneck — the multi-executor regime the window cannot reach
-    * without moving every candidate row. The gate query stays the
-    * window (fastest measured plan at bench scale); this variant is
-    * the documented cluster-scale escape hatch, same pattern as
-    * text_vocab vs text_vocab_sketch.
-    *
-    * The ObjectHashAggregate sort-fallback threshold (an
-    * execution-time conf) is raised only around an eager
-    * materialization inside this call and RESTORED before returning —
-    * the session keeps its spill guard for foreign unbounded-buffer
-    * object aggregates. If the persisted result is later evicted, a
-    * recomputation under the restored threshold falls back to
-    * sort-based aggregation: identical results, slower path. */
-  def textKeywordsTopK(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
-    // ObjectHashAggregate falls back to SORT-BASED aggregation after
-    // 128 distinct groups (guarding unbounded per-group buffers);
-    // graft_topk's buffer is 3 entries per doc, so the guard would
-    // only re-buy the sort the aggregate exists to avoid
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "100000000")
-    try {
-    val toks = Tables.widened(Tables.documents(spark, dir))
-      .select($"doc_id", explode(wsTokens($"text")).as("token"))
-    val tf = toks.groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy($"token").agg(count(lit(1)).as("df"))
-    val out = tf.join(broadcast(df), "token") // vocabulary-sized side (see textKeywords)
-      .groupBy($"doc_id")
-      .agg(call_function("graft_topk",
-        $"tf".cast("double") / $"df", $"token",
-        concat_ws("\u0001", $"tf", $"df"), lit(3)).as("top"))
-      .select($"doc_id", posexplode($"top").as(Seq("pos", "e")))
-      .select($"doc_id", ($"pos" + 1).cast("long").as("rk"),
-        $"e.tag".as("token"),
-        split($"e.extra", "\u0001").getItem(0).cast("long").as("tf"),
-        split($"e.extra", "\u0001").getItem(1).cast("long").as("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // run the object-hash aggregate under the raised threshold
-      out.orderBy($"doc_id", $"rk")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
   }
 
   /** Session path mining: the top-10 most frequent event-type

@@ -48,7 +48,9 @@ object RangeAggregate {
   /** For each `intervals` row, the sum of every `measures` column over
     * points whose `pointCol` lies in `[loCol, hiCol]`. Output = all
     * interval columns plus `<measure>_sum` for each measure (zero when
-    * the band is empty). */
+    * the band is empty). The per-interval sums it reads stay
+    * persisted, registered in [[graft.CacheLedger]] as
+    * `range_band_sums`. */
   def bandSums(
       points: DataFrame, pointCol: String, measures: Seq[String],
       intervals: DataFrame, idCol: String, loCol: String, hiCol: String): DataFrame = {
@@ -108,6 +110,7 @@ object RangeAggregate {
       .persist(StorageLevel.MEMORY_AND_DISK)
     bands.count() // materialize so the event table can be released now
     evs.unpersist()
+    graft.CacheLedger.register("range_band_sums", bands)
 
     intervals.join(bands, intervals(idCol) === bands("__id"), "left")
       .drop("__id")

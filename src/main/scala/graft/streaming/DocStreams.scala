@@ -16,7 +16,8 @@ object DocStreams {
     * model — the stream/batch twin of CorpusQueries.textLmScore's
     * scoring phase. Documents arrive on a stream with an event-time
     * column; the model (g, bp) — trained offline by
-    * CorpusQueries.lmBigramModel, refreshed on whatever cadence the
+    * CorpusQueries.trainLmHead (minCount = 1 is the full model the
+    * batch query scores under), refreshed on whatever cadence the
     * pipeline retrains — joins as a STATIC side; per-doc scores
     * aggregate under an event-time window + watermark so streaming
     * state is bounded by in-flight windows, never the stream's

@@ -112,11 +112,7 @@ object PinHarness {
       val got = DedupQueries.dedupEmbeddingCosine(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val base = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-      val perturbed = base.select(
-        ($"vec_id" + 1000000000L).as("vec_id"),
-        zip_with($"embedding", sequence(lit(0), size($"embedding") - 1),
-          (x, d) => x * when(d % 2 === 0, lit(1.02f)).otherwise(lit(0.98f))).as("embedding"))
-      val corpus = base.union(perturbed)
+      val corpus = base.union(Tables.nearDupTwins(base))
       val edges = corpus.as("a").crossJoin(corpus.as("b"))
         .filter($"a.vec_id" < $"b.vec_id")
         .filter(Similarity.cosine($"a.embedding", $"b.embedding") >= 0.99)

@@ -13,29 +13,42 @@ class BottomKSpec extends AnyFunSuite with SparkSpec {
   test("equals the rank-window formulation on real events; partitioning-invariant") {
     import spark.implicits._
     GraftExtensions.ensureRegistered(spark)
-    val ev = Tables.events(spark, sf).select($"event_type", $"event_id")
+    // (g, key, v) inputs: real events under sha2 hex keys, and
+    // adversarial keys on one value where only the UTF-8 byte order
+    // decides — the U+FF61 / U+1F600 pair (UTF-16 order would keep the
+    // emoji), keys that differ only after a 9-byte shared prefix, a key
+    // that is a prefix of another, and a repeated key the value breaks
+    val ev = Tables.events(spark, sf)
+      .select($"event_type".as("g"), sha2($"event_id".cast("string"), 256).as("key"),
+        $"event_id".as("v"))
+    val adversarial = Seq(("\ud83d\ude00", 7L), ("\uff61", 7L), ("abcdefghi1", 7L),
+      ("abcdefghi0", 7L), ("abcdefghi", 7L), ("\uff61", 1L))
+      .map { case (k, v) => ("adv", k, v) }.toDF("g", "key", "v")
 
     def viaAgg(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy($"event_type")
-      .agg(call_function("graft_bottomk",
-        sha2($"event_id".cast("string"), 256), $"event_id", lit(5)).as("sample"))
-      .select($"event_type", posexplode($"sample").as(Seq("pos", "s")))
-      .select($"event_type", $"pos", $"s.value".as("event_id"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+      .groupBy($"g")
+      .agg(call_function("graft_bottomk", $"key", $"v", lit(5)).as("sample"))
+      .select($"g", posexplode($"sample").as(Seq("pos", "s")))
+      .select($"g", $"pos", $"s.key", $"s.value")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
 
-    val w = Window.partitionBy($"event_type")
-      .orderBy(sha2($"event_id".cast("string"), 256), $"event_id")
-    val viaWindow = ev
+    val w = Window.partitionBy($"g").orderBy($"key", $"v")
+    def viaWindow(df: org.apache.spark.sql.DataFrame) = df
       .withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-      .select($"event_type", ($"rk" - 1).as("pos"), $"event_id")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+      .select($"g", ($"rk" - 1).as("pos"), $"key", $"v")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
 
-    val base = viaAgg(ev)
-    assert(base === viaWindow)
-    assert(base.nonEmpty)
-    // merge correctness: wildly different partitionings, same sample
-    assert(viaAgg(ev.repartition(17, $"event_id")) === base)
-    assert(viaAgg(ev.coalesce(1)) === base)
+    for (df <- Seq(ev, adversarial)) {
+      val base = viaAgg(df)
+      assert(base === viaWindow(df))
+      assert(base.nonEmpty)
+      // merge correctness: wildly different partitionings, same sample
+      assert(viaAgg(df.repartition(17, $"v")) === base)
+      assert(viaAgg(df.coalesce(1)) === base)
+    }
+    assert(viaAgg(adversarial).map(r => (r._2, r._3, r._4)) === Set(
+      (0, "abcdefghi", 7L), (1, "abcdefghi0", 7L), (2, "abcdefghi1", 7L),
+      (3, "\uff61", 1L), (4, "\uff61", 7L)))
   }
 
   test("groups smaller than k return all rows; null keys/values skipped") {

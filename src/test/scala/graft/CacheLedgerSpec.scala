@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.{DedupQueries, ImageDedupQueries, PipelineQueries}
+import graft.operators.{Analytics, DedupQueries, ImageDedupQueries, PipelineQueries}
 
 /** The ledger contract operators rely on when they return persisted
   * frames: registration is visible, releaseAll unpersists, and a frame
@@ -40,7 +40,8 @@ class CacheLedgerSpec extends SparkSpec {
       "dedup_simhash" -> DedupQueries.dedupSimhash _,
       "dedup_image_phash" -> ImageDedupQueries.dedupImagePhash _,
       "text_decontaminate_semantic" -> PipelineQueries.textDecontaminateSemantic _,
-      "dedup_edit_blocked" -> DedupQueries.dedupEditBlocked _)
+      "dedup_edit_blocked" -> DedupQueries.dedupEditBlocked _,
+      "range_band_sums" -> Analytics.qRangeJoin _)
     for ((tag, op) <- ops) {
       op(spark, sf)
       assert(CacheLedger.registered.contains(tag), tag)

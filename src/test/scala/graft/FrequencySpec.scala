@@ -20,18 +20,24 @@ class FrequencySpec extends SparkSpec {
   test("topfreq with capacity >= distinct is exact with zero error, any partitioning") {
     registered()
     val items = (1 to 500).map(i => s"item${i % 13}")
-    Seq(1, 7).foreach { parts =>
-      val got = items.toDF("x").repartition(parts)
+    // adversarial keys tied on count, so only the UTF-8 byte order
+    // decides their output order: the U+FF61 / U+1F600 pair (UTF-16
+    // order disagrees), keys differing only after a 9-byte shared
+    // prefix, and a key that is a prefix of another
+    val adversarial = Seq("\ud83d\ude00", "\uff61", "abcdefghi1", "abcdefghi0",
+      "abcdefghi").flatMap(Seq.fill(3)(_)) ++ Seq("z", "z")
+    for (input <- Seq(items, adversarial); parts <- Seq(1, 7)) {
+      val got = input.toDF("x").repartition(parts)
         .agg(expr("graft_topfreq(x, 64)").as("hh"))
-        .select(explode($"hh").as("e"))
+        .select(posexplode($"hh").as(Seq("pos", "e")))
+        .orderBy($"pos")
         .select($"e.item", $"e.cnt", $"e.err")
         .as[(String, Long, Long)].collect()
-      val exact = items.groupBy(identity).map { case (k, vs) => k -> vs.size.toLong }
-      assert(got.length === 13)
-      got.foreach { case (item, cnt, err) =>
-        assert(err === 0L, s"$item err")
-        assert(cnt === exact(item), s"$item cnt")
-      }
+      // output order (cnt desc, item asc) equals Spark's own string sort
+      val exact = input.toDF("x").groupBy($"x").agg(count(lit(1)).as("n"))
+        .orderBy($"n".desc, $"x").as[(String, Long)].collect()
+      assert(got.map(g => (g._1, g._2)).toSeq === exact.toSeq)
+      assert(got.forall(_._3 == 0L), "err")
     }
   }
 

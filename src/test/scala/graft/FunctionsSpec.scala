@@ -54,14 +54,14 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     GraftExtensions.ensureRegistered(spark) // second call is a no-op
   }
 
-  test("one ensureRegistered call restores all eight functions; a second changes nothing") {
+  test("one ensureRegistered call restores all seven functions; a second changes nothing") {
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
     val session = spark.newSession()
     val registry = session.sessionState.functionRegistry
     val ids = GraftExtensions.Functions.map(_._1)
     assert(ids.map(_.funcName).toSet === Set("graft_cosine", "graft_bottomk",
       "graft_topfreq", "graft_bloom_agg", "graft_bloom_contains", "graft_text_counts",
-      "graft_shingle_hashes", "graft_topk"))
+      "graft_shingle_hashes"))
     ids.foreach(id => assert(registry.dropFunction(id), s"$id was not injected"))
     ids.foreach(id => assert(!registry.functionExists(id), s"$id still resolves"))
     assert(spark.sessionState.functionRegistry.functionExists(ids.head),
@@ -112,77 +112,5 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(nullRow.isNullAt(0))
     GraftExtensions.ensureRegistered(spark)
     GraftExtensions.ensureRegistered(spark) // second call is a no-op
-  }
-
-  test("graft_topk keeps the k largest (score desc, tag asc) across partitions") {
-    import spark.implicits._
-    GraftExtensions.ensureRegistered(spark)
-    // ties on score exercise the byte-lexicographic tag tie-break; the
-    // null-score row must be skipped; repartition(7) forces partial
-    // buffers + serialize/merge on the combine path
-    val rows = Seq(
-      ("g1", Some(0.5), "bb", "x1"), ("g1", Some(0.5), "ab", "x2"),
-      ("g1", Some(0.9), "zz", "x3"), ("g1", Some(0.1), "aa", "x4"),
-      ("g1", None, "nn", "x5"), ("g1", Some(0.5), "aa", "x6"),
-      ("g2", Some(-0.0), "a", "y1"), ("g2", Some(0.0), "b", "y2"),
-    ).toDF("g", "s", "t", "e").repartition(7)
-    val out = rows.groupBy($"g")
-      .agg(call_function("graft_topk", $"s", $"t", $"e", lit(3)).as("top"))
-      .select($"g", posexplode($"top").as(Seq("pos", "x")))
-      .select($"g", $"pos", $"x.score", $"x.tag", $"x.extra")
-      .as[(String, Int, Double, String, String)].collect().sorted
-    assert(out.filter(_._1 == "g1").sortBy(_._2).map(r => (r._3, r._4, r._5)).toSeq ===
-      Seq((0.9, "zz", "x3"), (0.5, "aa", "x6"), (0.5, "ab", "x2")))
-    // -0.0 TIES 0.0 (the window-sort / ORDER BY convention), so the
-    // tag breaks the tie: "a" ranks first
-    assert(out.filter(_._1 == "g2").sortBy(_._2).map(r => (r._3, r._4)).toSeq ===
-      Seq((-0.0, "a"), (0.0, "b")))
-  }
-
-  test("graft_topk equals an in-memory reference on random tie-heavy data") {
-    import spark.implicits._
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    GraftExtensions.ensureRegistered(spark)
-    // small score/tag alphabets force score ties (tag tie-break) and
-    // include a supplementary-plane tag, where UTF-8 byte order and
-    // Java String order DISAGREE with each other's neighbors
-    val rowGen = for {
-      g <- Gen.choose(1, 3)
-      sc <- Gen.oneOf(0.0, 0.25, 0.5, 1.0)
-      tag <- Gen.oneOf("a", "ab", "b", "z", "\ud83d\ude42x", "~")
-    } yield (g, sc, tag)
-    def byteLt(a: String, b: String): Boolean = {
-      val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-      val n = math.min(x.length, y.length)
-      var i = 0
-      while (i < n) {
-        val d = (x(i) & 0xff) - (y(i) & 0xff)
-        if (d != 0) return d < 0
-        i += 1
-      }
-      x.length < y.length
-    }
-    for (round <- 1 to 10) {
-      val k = 1 + round % 4
-      val rows = Gen.listOfN(60, rowGen)
-        .apply(Gen.Parameters.default, Seed(7000 + round)).get
-        .zipWithIndex.map { case ((g, sc, t), i) => (g, sc, t + "_" + i) }
-      val got = rows.toDF("g", "s", "t").repartition(5)
-        .groupBy($"g")
-        .agg(call_function("graft_topk", $"s", $"t", lit(""), lit(k)).as("top"))
-        .select($"g", posexplode($"top").as(Seq("pos", "x")))
-        .select($"g", $"pos", $"x.score", $"x.tag")
-        .as[(Int, Int, Double, String)].collect()
-        .groupBy(_._1).map { case (g, xs) =>
-          g -> xs.sortBy(_._2).map(r => (r._3, r._4)).toSeq
-        }
-      val want = rows.groupBy(_._1).map { case (g, xs) =>
-        g -> xs.map(r => (r._2, r._3))
-          .sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && byteLt(a._2, b._2)))
-          .take(k).toSeq
-      }
-      assert(got === want, s"round $round k=$k")
-    }
   }
 }

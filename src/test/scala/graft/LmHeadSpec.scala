@@ -47,7 +47,7 @@ class LmHeadSpec extends SparkSpec {
       Tables.widened(Tables.documents(spark, sf)))
     val docGrams = grams.groupBy($"doc_id", $"g").agg(count(lit(1)).as("cnt"))
     val c2 = docGrams.groupBy($"g").agg(sum($"cnt").as("c2"))
-    val fullModel = CorpusQueries.lmBigramModelFromCounts(c2)
+    val fullModel = CorpusQueries.lmModelFromCounts(c2, "g", substring_index($"g", " ", 1), 1L)
     val tail = docGrams
       .join(c2.filter($"c2" < minCount).select($"g"), "g")
       .join(fullModel, "g")

@@ -116,8 +116,7 @@ class ModelIoSpec extends AnyFunSuite with SparkSpec {
   test("LM head round-trips as a distributed frame and rejects a non-model path") {
     import spark.implicits._
     val docs = Tables.widened(Tables.documents(spark, sf))
-    val model = graft.operators.CorpusQueries.lmBigramModel(
-      graft.operators.CorpusQueries.bigramInstances(docs))
+    val model = graft.operators.CorpusQueries.trainLmHead(spark, sf, minCount = 1L)
     val path = tmp("lmhead")
     ModelIO.saveLmHead(model, path)
     val loaded = ModelIO.loadLmHead(spark, path)

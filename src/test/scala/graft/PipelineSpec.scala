@@ -284,33 +284,6 @@ class PipelineSpec extends SparkSpec {
     assert(rows.map(_._1).distinct.length === docsWithTokens)
   }
 
-  test("keywords: graft_topk variant equals the rank-window gate query") {
-    // the aggregate shuffles <=3 rows per doc per task instead of every
-    // (doc, token) pair — semantics must be IDENTICAL, including the
-    // IEEE-double score comparison and the byte-lexicographic token
-    // tie-break the DuckDB oracle's ORDER BY uses
-    val confKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val before = spark.conf.getOption(confKey)
-    try {
-      val agg = PipelineQueries.textKeywordsTopK(spark, sf)
-        .select($"doc_id", $"rk", $"token", $"tf", $"df")
-        .as[(Long, Long, String, Long, Long)].collect().sorted
-      val win = PipelineQueries.textKeywords(spark, sf)
-        .select($"doc_id", $"rk", $"token", $"tf", $"df")
-        .as[(Long, Long, String, Long, Long)].collect().sorted
-      assert(agg.length === win.length)
-      assert(agg.toSeq === win.toSeq)
-    } finally {
-      // textKeywordsTopK raises the ObjectHashAggregate fallback
-      // threshold session-wide (documented side effect) — restore so
-      // the shared test session keeps the stock spill guard
-      before match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
-    }
-  }
-
   test("session paths: counts descend and conserve against the sessionizer") {
     val rows = PipelineQueries.eventsPaths(spark, sf)
       .select($"path", $"n_sessions").as[(String, Long)].collect()

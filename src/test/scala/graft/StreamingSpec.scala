@@ -43,8 +43,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // corpus streams through in one batch, then a late flush row
     // advances the watermark so every minute-10 window expires and
     // append mode emits exactly one score per document
-    val model = graft.operators.CorpusQueries.lmBigramModel(
-      graft.operators.CorpusQueries.bigramInstances(Tables.documents(spark, sf)))
+    val model = graft.operators.CorpusQueries.trainLmHead(spark, sf, minCount = 1L)
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
       .as[(Long, String)].collect()
 
