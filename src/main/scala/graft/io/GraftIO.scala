@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -841,6 +841,17 @@ object GraftIO {
     Some(lines)
   }
 
+  /** The DSV read options both read paths share. The writer quotes
+    * empty strings (`""`) and leaves nulls as unquoted empty fields;
+    * with the default nullValue="" BOTH would collapse to null on read,
+    * so nullValue moves to a sentinel no real field contains and `""`
+    * survives as "". */
+  private def dsvOptions(r: DataFrameReader, sep: String): DataFrameReader =
+    r.option("sep", sep)
+      .option("escape", "\\")
+      .option("nullValue", "__graft_reserved_null__")
+      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+
   /** Read a dataset (single file, directory tree, or glob) written by
     * `write` — or by anything else speaking the same formats. The
     * compression codec comes from each file's extension.
@@ -884,11 +895,7 @@ object GraftIO {
         else memberSplitLines(spark, path, dropHeader = header && format == Dsv).map { lines =>
           format match {
             case Dsv =>
-              spark.read.schema(schema.get)
-                .option("sep", sep)
-                .option("escape", "\\")
-                .option("nullValue", "__graft_reserved_null__")
-                .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+              dsvOptions(spark.read.schema(schema.get), sep)
                 .options(options).csv(lines) // header already stripped per file
             case _ =>
               spark.read.schema(schema.get)
@@ -899,15 +906,8 @@ object GraftIO {
       format match {
         case Parquet => reader.options(options).parquet(path)
         case Dsv => memberSplit.getOrElse {
-          reader
-            .option("sep", sep).option("header", header.toString)
-            // the writer quotes empty strings (`""`) and leaves nulls as
-            // unquoted empty fields; with the default nullValue="" BOTH
-            // would collapse to null on read — shift nullValue to a
-            // sentinel no real field contains so `""` survives as "".
-            .option("escape", "\\")
-            .option("nullValue", "__graft_reserved_null__")
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+          dsvOptions(reader, sep)
+            .option("header", header.toString)
             .option("inferSchema", inferSchema.toString)
             .options(options).csv(path)
         }

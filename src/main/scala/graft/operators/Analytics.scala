@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
 
@@ -139,28 +138,16 @@ object Analytics {
   }
 
   /** Window functions: top-3 orders per customer market segment by
-    * price, TWO-PHASE. c_mktsegment has only 5 distinct values — a
-    * single window over it funnels every order through 5 tasks at any
-    * scale. Phase 1 takes a partial top-3 inside (segment, salt)
-    * buckets; phase 2 merges the <= salts*3 survivors per segment.
-    * The global top-3 is a subset of the per-salt top-3s, so the
-    * result is identical to the single-window plan. Customer join is
-    * unhinted (scales with sf) — AQE decides. */
+    * price through [[TopK.perGroup]]: c_mktsegment has only 5
+    * distinct values, and the kernel's map-side partial limit keeps
+    * them from funnelling every order through 5 tasks. Customer join
+    * is unhinted (scales with sf) — AQE decides. */
   def qWindowTopCustomers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
     val ord = Tables.orders(spark, dir)
-    val salts = 64
-    val partial = Window
-      .partitionBy($"c_mktsegment", pmod(xxhash64($"o_orderkey"), lit(salts)))
-      .orderBy($"o_totalprice".desc, $"o_orderkey")
-    val fin = Window.partitionBy($"c_mktsegment")
-      .orderBy($"o_totalprice".desc, $"o_orderkey")
-    ord.join(cust, $"o_custkey" === $"c_custkey")
-      .withColumn("prk", row_number().over(partial))
-      .filter($"prk" <= 3)
-      .withColumn("rk", row_number().over(fin))
-      .filter($"rk" <= 3)
+    TopK.perGroup(ord.join(cust, $"o_custkey" === $"c_custkey"),
+        Seq($"c_mktsegment"), $"o_totalprice".desc, $"o_orderkey", 3)
       .select($"c_mktsegment", $"rk", $"o_orderkey",
         round($"o_totalprice", 2).as("o_totalprice"), $"c_name")
       .orderBy($"c_mktsegment", $"rk")

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -11,20 +10,22 @@ import graft.similarity.Similarity
   *
   * Scale posture: the query set is small and BROADCAST; the corpus —
   * the 100 TB side — is scanned exactly once and never shuffled for
-  * the scoring join. Top-k extraction is two-phase (partial top-k per
-  * salt bucket, then merge) so no single per-query partition sees the
-  * whole corpus.
+  * the scoring join. Every ANN operator here and in [[IvfQueries]] and
+  * [[PqQueries]] takes its queries from [[querySet]], scores through
+  * [[scoreAll]] (PQ re-scores its ADC shortlist instead) and ranks and
+  * renders through [[topKPerQuery]], whose [[TopK.perGroup]] kernel
+  * limits each query to k rows per map partition before its exchange,
+  * so no single per-query partition sees the whole corpus.
   */
 object AnnQueries {
 
-  private val K = 5
-  private val NQueries = 10
-  private val Salts = 32
+  private[operators] val K = 5
+  private[operators] val NQueries = 10
   private val MmrPool = 20  // candidates considered by the greedy re-rank
   private val MmrLambda = 0.7 // relevance vs diversity trade-off
 
   /** Exact cosine top-k per query vector: broadcast queries × corpus,
-    * codegen'd double-accumulated cosine, two-phase windowed top-k.
+    * codegen'd double-accumulated cosine, [[TopK.perGroup]] top-k.
     * Similarity reported in exact-ranked order; the value column is
     * rounded to integer milli-points (cross-engine float noise ~1e-8
     * never moves a rank: adjacent ranked sims differ by >= 1.9e-5 in
@@ -33,14 +34,7 @@ object AnnQueries {
     import spark.implicits._
     graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val queries = emb.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-
-    val scored = emb.join(broadcast(queries), $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("vid"),
-        Similarity.cosine($"qvec", $"embedding").as("sim"))
-
-    topKPerQuery(scored)
+    topKPerQuery(scoreAll(emb, querySet(emb)))
   }
 
   /** Hard-negative mining for contrastive training: per query vector,
@@ -50,7 +44,7 @@ object AnnQueries {
     * ships eventually). Same plan shape as [[annBruteforceTopk]]:
     * broadcast query set, one corpus scan with the label-mismatch
     * predicate evaluated map-side BEFORE any shuffle (the codegen'd
-    * cosine runs only on surviving rows), two-phase salted top-k on
+    * cosine runs only on surviving rows), the same top-k on
     * (qid, vid, sim) scalars. The corpus never shuffles; at 100 TB
     * the scale variant swaps the scan for the LSH/IVF candidate
     * generators exactly as the ANN family does. SQL oracle:
@@ -59,21 +53,14 @@ object AnnQueries {
     import spark.implicits._
     graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding", $"label")
-    val queries = emb.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"), $"label".as("qlabel"))
-
-    val scored = emb.join(broadcast(queries),
-        $"vec_id" =!= $"qid" && $"label" =!= $"qlabel")
-      .select($"qid", $"vec_id".as("vid"),
-        Similarity.cosine($"qvec", $"embedding").as("sim"))
-
-    topKPerQuery(scored)
+    val queries = querySet(emb, $"label".as("qlabel"))
+    topKPerQuery(scoreAll(emb, queries, $"label" =!= $"qlabel"))
   }
 
   /** LSH-bucketed ANN: 16-bit random-hyperplane signatures, 4×4-bit
     * bands; a corpus vector is scored only when it shares a band value
     * with the query — the scale path where scoring the full corpus per
-    * query is too expensive. Same two-phase top-k (rows oracle:
+    * query is too expensive. Same top-k (rows oracle:
     * approximate recall is not SQL-expressible). */
   def annLshTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -84,17 +71,13 @@ object AnnQueries {
       .select($"vec_id", $"embedding", explode($"bands").as("bb"))
       .select($"vec_id", $"embedding", $"bb.band", $"bb.band_bits")
 
-    val queries = bucketed.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"), $"band", $"band_bits")
+    val queries = querySet(bucketed, $"band".as("qband"), $"band_bits".as("qbits"))
 
-    val scored = bucketed.join(broadcast(queries),
-        Seq("band", "band_bits"))
-      .filter($"vec_id" =!= $"qid")
-      // score BEFORE the multi-band dedup: cosine is a codegen'd scalar,
-      // so the distinct shuffles (qid, vid, sim) scalars instead of two
-      // full embedding arrays per row (re-scoring a duplicated pair is
-      // cheaper than shuffling its vectors)
-      .select($"qid", $"vec_id".as("vid"), Similarity.cosine($"qvec", $"embedding").as("sim"))
+    // score BEFORE the multi-band dedup: cosine is a codegen'd scalar,
+    // so the distinct shuffles (qid, vid, sim) scalars instead of two
+    // full embedding arrays per row (re-scoring a duplicated pair is
+    // cheaper than shuffling its vectors)
+    val scored = scoreAll(bucketed, queries, $"band" === $"qband" && $"band_bits" === $"qbits")
       .distinct() // a pair may share several bands
 
     topKPerQuery(scored)
@@ -105,7 +88,7 @@ object AnnQueries {
     * greedily select `K` maximizing
     * λ·sim(q,d) − (1−λ)·max_{d' selected} sim(d,d'), so near-duplicate
     * hits don't crowd the result list. The candidate pool comes from
-    * the same broadcast-query scan + two-phase top-k as the exact
+    * the same broadcast-query scan + top-k as the exact
     * path; the greedy selection is a per-query JVM fold over
     * `MmrPool`×64 floats — grouped BY QUERY KEY, so it parallelizes
     * across queries and each group's state is pool-bounded, corpus-
@@ -119,22 +102,9 @@ object AnnQueries {
     graft.functions.GraftExtensions.ensureRegistered(spark)
     val base = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val corpus = base.union(Tables.nearDupTwins(base))
-    val queries = base.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-
-    // Score on SCALARS only — the embedding column must not enter the
-    // top-k windows: those exchanges carry |corpus|×|queries| rows, and
-    // a 64-float array per row would be ~10× the bytes of (qid,vid,sim).
-    val scored = corpus.join(broadcast(queries), $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("vid"),
-        Similarity.cosine($"qvec", $"embedding").as("sim"))
-    // pool = exact top-MmrPool (two-phase, as in topKPerQuery)
-    val partial = Window.partitionBy($"qid", pmod(xxhash64($"vid"), lit(Salts)))
-      .orderBy($"sim".desc, $"vid")
-    val fin = Window.partitionBy($"qid").orderBy($"sim".desc, $"vid")
-    val poolScalars = scored
-      .withColumn("prk", row_number().over(partial)).filter($"prk" <= MmrPool)
-      .withColumn("rk", row_number().over(fin)).filter($"rk" <= MmrPool)
+    // pool = exact top-MmrPool, ranked on scoreAll's scalars
+    val poolScalars = TopK.perGroup(scoreAll(corpus, querySet(base)),
+        Seq($"qid"), $"sim".desc, $"vid", MmrPool)
       .select($"qid", $"rk", $"vid", $"sim")
     // Join embeddings back for the <= NQueries×MmrPool pool rows only:
     // broadcast the tiny pool against a second corpus scan — the corpus
@@ -156,9 +126,8 @@ object AnnQueries {
       .agg(sort_array(collect_list(struct($"rk".cast("long").as("rk"),
         $"vid", $"sim", $"embedding"))).as("cands"))
       .select($"qid", posexplode(selectUdf($"cands")))
-      .select($"qid", ($"pos" + 1).cast("long").as("rk"), $"col._1".as("vid"),
-        floor(lit(1000.0) * $"col._2" + lit(0.5)).cast("long").as("sim_mbp"))
-      .orderBy($"qid", $"rk")
+      .select($"qid", ($"pos" + 1).as("rk"), $"col._1".as("vid"), $"col._2".as("sim"))
+      .transform(render)
   }
 
   /** Greedy MMR over (vid, sim-to-query, embedding) candidates in
@@ -202,21 +171,32 @@ object AnnQueries {
     chosen.map(i => cands(i)._1).toSeq
   }
 
-  /** Two-phase top-k: partial top-k inside (qid, salt) buckets — ~k
-    * survivors per bucket — then a final tiny window over qid only.
-    * The global window never sees more than Salts*K rows per query,
-    * so a hot query key cannot skew a single task at 100× scale. */
-  private[operators] def topKPerQuery(scored: DataFrame): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val partial = Window.partitionBy($"qid", pmod(xxhash64($"vid"), lit(Salts)))
-      .orderBy($"sim".desc, $"vid")
-    val fin = Window.partitionBy($"qid").orderBy($"sim".desc, $"vid")
-    scored
-      .withColumn("prk", row_number().over(partial)).filter($"prk" <= K)
-      .withColumn("rk", row_number().over(fin)).filter($"rk" <= K)
-      .select($"qid", $"rk".cast("long").as("rk"), $"vid",
-        floor(lit(1000.0) * $"sim" + lit(0.5)).cast("long").as("sim_mbp"))
-      .orderBy($"qid", $"rk")
-  }
+  /** The query set: the vectors with `vec_id < NQueries`, as
+    * (qid, qvec, carry...). */
+  private[operators] def querySet(vecs: DataFrame, carry: Column*): DataFrame =
+    vecs.filter(col("vec_id") < NQueries)
+      .select(Seq(col("vec_id").as("qid"), col("embedding").as("qvec")) ++ carry: _*)
+
+  /** The scoring body: each corpus vector against each broadcast query
+    * it is paired with by `on`, never itself, as (qid, vid, sim). Only
+    * these scalars leave the scan: the top-k exchanges carry
+    * |corpus|×|queries| rows, and a 64-float array per row would be
+    * ~10× the bytes. */
+  private[operators] def scoreAll(
+      corpus: DataFrame, queries: DataFrame, on: Column = lit(true)): DataFrame =
+    corpus.join(broadcast(queries), col("vec_id") =!= col("qid") && on)
+      .select(col("qid"), col("vec_id").as("vid"),
+        Similarity.cosine(col("qvec"), col("embedding")).as("sim"))
+
+  /** The top-K (qid, vid, sim) rows per query, exact ([[TopK.perGroup]]),
+    * rendered. */
+  private[operators] def topKPerQuery(scored: DataFrame): DataFrame =
+    render(TopK.perGroup(scored, Seq(col("qid")), col("sim").desc, col("vid"), K))
+
+  /** The ANN output: (qid, rk: long, vid, sim_mbp) in (qid, rk) order,
+    * the similarity rounded half-up to integer milli-points. */
+  private def render(ranked: DataFrame): DataFrame =
+    ranked.select(col("qid"), col("rk").cast("long").as("rk"), col("vid"),
+        floor(lit(1000.0) * col("sim") + lit(0.5)).cast("long").as("sim_mbp"))
+      .orderBy(col("qid"), col("rk"))
 }

@@ -24,8 +24,6 @@ object IvfQueries {
 
   private val NList = 16
   private val NProbe = 6
-  private val K = 5
-  private val NQueries = 10
   private val TrainSample = 4096
 
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame =
@@ -95,29 +93,13 @@ object IvfQueries {
     // cells by cosine mismatches the cell geometry and costs recall):
     // ||q-c||² = ||q||² - 2q·c + ||c||², and ||q||² is constant per
     // query, so rank by ||c||² - 2q·c.
-    val queries = assigned.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    val probes = queries.crossJoin(broadcast(centers))
-      .withColumn("cdist",
-        Similarity.dot($"centroid", $"centroid") - lit(2.0) * Similarity.dot($"qvec", $"centroid"))
-      .withColumn("crk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"qid")
-          .orderBy($"cdist".asc, $"cell")))
-      .filter($"crk" <= NProbe)
-      .select($"qid", $"qvec", $"cell")
+    val probes = TopK.perGroup(
+        AnnQueries.querySet(emb).crossJoin(broadcast(centers)).withColumn("cdist",
+          Similarity.dot($"centroid", $"centroid") - lit(2.0) * Similarity.dot($"qvec", $"centroid")),
+        Seq($"qid"), $"cdist".asc, $"cell", NProbe)
+      .select($"qid", $"qvec", $"cell".as("pcell"))
 
     // probe join: only vectors in probed cells are scored
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
-      .filter($"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("vid"),
-        Similarity.cosine($"qvec", $"embedding").as("sim"))
-
-    val fin = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"sim".desc, $"vid")
-    scored
-      .withColumn("rk", row_number().over(fin)).filter($"rk" <= K)
-      .select($"qid", $"rk".cast("long").as("rk"), $"vid",
-        floor(lit(1000.0) * $"sim" + lit(0.5)).cast("long").as("sim_mbp"))
-      .orderBy($"qid", $"rk")
+    AnnQueries.topKPerQuery(AnnQueries.scoreAll(assigned, probes, $"cell" === $"pcell"))
   }
 }

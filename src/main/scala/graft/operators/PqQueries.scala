@@ -35,8 +35,8 @@ import graft.similarity.{LocalKMeans, Similarity}
   * broadcast trivially; the ADC scan reads 8 bytes per vector where
   * brute force reads 256; the per-query distance tables are a
   * 1280-row broadcast join; the score aggregation is one (qid, vid)
-  * combine-heavy shuffle; shortlist + final top-k both use the salted
-  * two-phase pattern (no hot-query window skew); the re-rank join
+  * combine-heavy shuffle; shortlist + final top-k both go through
+  * [[TopK.perGroup]] (no hot-query window skew); the re-rank join
   * touches Shortlist vectors per query, not the corpus. Embeddings
   * are unit-norm, so approx cosine = 1 − d²/2 ranks identically to
   * approx L2. Rows-oracle (k-means codebooks aren't SQL-expressible);
@@ -48,9 +48,7 @@ object PqQueries {
   private val M = 8 // subspaces
   private val SubDim = 8 // dims per subspace (64 total)
   private val Ks = 16 // centroids per codebook
-  private val NQueries = 10
   private val Shortlist = 50 // ADC candidates re-ranked exactly per query
-  private val Salts = 8
 
   /** How many vectors the codebooks train on. Codebook quality needs a
     * REPRESENTATIVE sample, not the corpus: 4096 points per 16-centroid
@@ -65,10 +63,10 @@ object PqQueries {
     *
     * Training: driver-side Lloyd's over `TrainSample` vectors chosen
     * by hash order of vec_id (deterministic AND unbiased). Encoding: one
-    * map pass over the corpus with the 4 KiB codebook broadcast — a
-    * direct JVM argmin loop over 128 centroids; a Catalyst HOF argmin
-    * over 128 literal arrays would be interpreted per element and
-    * slower than this single call. */
+    * map pass over the corpus with the 4 KiB codebook broadcast — the
+    * JVM argmin `LocalKMeans.assignWithD2` per subspace, read in place;
+    * a Catalyst HOF argmin over 128 literal arrays would be interpreted
+    * per element and slower than this single call. */
   private[graft] def encode(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     encodeWith(spark, dir, trainCodebooks(spark, dir))
 
@@ -101,18 +99,7 @@ object PqQueries {
     val cb = spark.sparkContext.broadcast(codebooks)
     val codesOf = udf { (e: Seq[Float]) =>
       val arr = e.toArray
-      Array.tabulate(M) { s =>
-        var best = 0; var bestD = Double.MaxValue; var j = 0
-        while (j < Ks) {
-          var d = 0.0; var i = 0
-          while (i < SubDim) {
-            val t = arr(s * SubDim + i) - cb.value(s)(j)(i); d += t * t; i += 1
-          }
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        best
-      }
+      Array.tabulate(M)(s => LocalKMeans.assignWithD2(cb.value(s), arr, s * SubDim, SubDim)._1)
     }
     val melted = emb.select($"vec_id", $"embedding", posexplode(codesOf($"embedding")))
       .withColumnRenamed("pos", "sub").withColumnRenamed("col", "code")
@@ -140,9 +127,7 @@ object PqQueries {
 
     // ADC lookup tables: exact squared L2 from each query SUBVECTOR to
     // each centroid — NQueries × M × Ks rows, broadcast everywhere
-    val queries = Tables.embeddings(spark, dir)
-      .filter($"vec_id" < NQueries)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
+    val queries = AnnQueries.querySet(Tables.embeddings(spark, dir))
     val tables = queries.crossJoin(broadcast(centroids))
       .select($"qid", $"sub", $"code",
         Similarity.bound(slice($"qvec", $"sub" * SubDim + 1, lit(SubDim))) { qs =>
@@ -160,14 +145,8 @@ object PqQueries {
       .groupBy($"qid", $"vec_id".as("vid"))
       .agg(sum($"partial").as("d2"))
 
-    // shortlist: two-phase top-Shortlist by approximate distance
-    val w = org.apache.spark.sql.expressions.Window
-    val partial = w.partitionBy($"qid", pmod(xxhash64($"vid"), lit(Salts)))
-      .orderBy($"d2".asc, $"vid")
-    val fin = w.partitionBy($"qid").orderBy($"d2".asc, $"vid")
-    val shortlist = adc
-      .withColumn("prk", row_number().over(partial)).filter($"prk" <= Shortlist)
-      .withColumn("srk", row_number().over(fin)).filter($"srk" <= Shortlist)
+    // shortlist: top-Shortlist by approximate distance
+    val shortlist = TopK.perGroup(adc, Seq($"qid"), $"d2".asc, $"vid", Shortlist)
       .select($"qid", $"vid")
 
     // exact re-rank: fetch floats for shortlist vectors ONLY, score

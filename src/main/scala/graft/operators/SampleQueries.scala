@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -36,8 +35,8 @@ object SampleQueries {
     * (reproducible, seedless) and competes with key u^(1/w) — the
     * top-k keys per group are a weight-proportional sample, here top-5
     * per language weighted by document length. Map-side key
-    * computation + the same two-phase top-k discipline as every other
-    * per-group selection. HASH-gated as of r11: the draw comes from
+    * computation + the [[TopK.perGroup]] every other per-group
+    * selection uses. HASH-gated as of r11: the draw comes from
     * sha256 (bit-identical in DuckDB, the q_sample_deterministic
     * argument — the old xxhash64 draw had no oracle-side equivalent),
     * 52 hex-parsed bits → u in (0,1), and the oracle restates
@@ -62,12 +61,7 @@ object SampleQueries {
       // The null-safe `> 0` drops both.
       .filter($"w" > 0)
       .withColumn("es_key", pow($"u", lit(1.0) / $"w"))
-    val partial = Window.partitionBy($"lang", pmod(xxhash64($"doc_id"), lit(8)))
-      .orderBy($"es_key".desc, $"doc_id")
-    val fin = Window.partitionBy($"lang").orderBy($"es_key".desc, $"doc_id")
-    keyed
-      .withColumn("prk", row_number().over(partial)).filter($"prk" <= k)
-      .withColumn("rk", row_number().over(fin)).filter($"rk" <= k)
+    TopK.perGroup(keyed, Seq($"lang"), $"es_key".desc, $"doc_id", k)
       .select($"lang", $"rk".cast("long").as("rk"), $"doc_id",
         $"w".cast("long").as("weight"))
       .orderBy($"lang", $"rk")

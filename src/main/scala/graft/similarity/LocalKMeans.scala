@@ -76,12 +76,7 @@ object LocalKMeans {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
       points.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue; var j = 0
-        while (j < k) {
-          val d = d2(p, centroids(j))
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
+        val best = assign(centroids, p)
         counts(best) += 1
         val s = sums(best); var i = 0
         while (i < dim) { s(i) += p(i); i += 1 }
@@ -100,15 +95,20 @@ object LocalKMeans {
     assignWithD2(centroids, p)._1
 
   /** Nearest centroid index AND its squared euclidean distance — the
-    * one argmin kernel shared by the distributed encoders (IVF/PQ/
-    * cluster assignment UDFs) and the spec replays, so the distance/
-    * tie-break contract lives in exactly one place. */
-  def assignWithD2(centroids: Array[Array[Float]], p: Array[Float]): (Int, Double) = {
-    val dim = p.length
+    * one argmin kernel shared by Lloyd's step in [[train]], the
+    * distributed encoders (IVF/PQ/cluster assignment UDFs) and the spec
+    * replays, so the distance/tie-break contract lives in exactly one
+    * place. The four-argument form reads the subvector
+    * `p(off until off + dim)` in place (PQ's per-subspace encode). */
+  def assignWithD2(centroids: Array[Array[Float]], p: Array[Float]): (Int, Double) =
+    assignWithD2(centroids, p, 0, p.length)
+
+  def assignWithD2(
+      centroids: Array[Array[Float]], p: Array[Float], off: Int, dim: Int): (Int, Double) = {
     var best = 0; var bestD = Double.MaxValue; var j = 0
     while (j < centroids.length) {
       var d = 0.0; var i = 0
-      while (i < dim) { val t = p(i) - centroids(j)(i); d += t * t; i += 1 }
+      while (i < dim) { val t = p(off + i) - centroids(j)(i); d += t * t; i += 1 }
       if (d < bestD) { bestD = d; best = j }
       j += 1
     }

@@ -11,6 +11,13 @@ import java.nio.file.{Files, Paths}
   *        (default: all cores, see Harness.cpus),
   *        SPARK_GRAFT_SUFFIX (default "", e.g. "_before"/"_after").
   *
+  * The data directory is written as `file:<basename>/` (e.g.
+  * `file:<sf0.01>/`) and RDD call sites without their line number
+  * (`at GraftIO.scala`), so dumps from different checkouts or machines
+  * diff cleanly. Each
+  * `[plandump] <query> ok` line carries the plan's shuffle `Exchange`
+  * count, the number a plan-preserving change has to keep.
+  *
   * Queries that materialize internally (pagerank, k-means report)
   * return a driver-local/cached tail — the file still records it, with
   * a NOTE header.
@@ -25,18 +32,25 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_SUFFIX", "")
     val spark = graft.Harness.buildSession(dir, graft.Harness.cpus)
     Files.createDirectories(Paths.get(outDir))
+    // file:<abs dir>/ → file:<basename>/; the file-system root has no
+    // basename and stays as it is
+    val abs = Paths.get(dir).toAbsolutePath.normalize
+    val relocate: String => String = Option(abs.getFileName)
+      .fold(identity[String] _)(base => _.replace(s"file:$abs/", s"file:<$base>/"))
     val names = if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.map(_._1)
     names.foreach { n =>
       try {
         val df = graft.SparkEntry.queries.toMap.apply(n)(spark, dir)
         val qe = df.queryExecution
-        val txt = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+        val txt = relocate(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+          .replaceAll("""(at \w+\.scala):\d+""", "$1")
         val note =
           if (txt.contains("LocalTableScan") || txt.contains("InMemoryTableScan"))
             "NOTE: internally-materialized result; this is the plan TAIL only\n\n"
           else ""
         Files.writeString(Paths.get(outDir, s"$n$suffix.txt"), note + txt)
-        Console.err.println(s"[plandump] $n ok")
+        val exchanges = txt.linesIterator.count(_.matches("""^\(\d+\) Exchange.*"""))
+        Console.err.println(s"[plandump] $n ok exchanges=$exchanges")
       } catch { case e: Throwable =>
         Console.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }

@@ -90,44 +90,57 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("mmr re-rank: no embedding column crosses an exchange") {
+  // the top-k window exchanges carry |corpus|×|queries| rows, so a
+  // vector column there — under any name — is the exact shuffle-blowup
+  // the ANN family's posture forbids: the scored rows entering the
+  // windows are (qid, vid, sim) scalars only. The check is by TYPE (no
+  // array anywhere in a shuffled column). `bounded` lists, by exact
+  // output columns, the exchanges allowed an array because they never
+  // see the corpus (IVF's centroid probe: NQueries × NList rows). MMR's
+  // pool collect_list buffer is a binary agg buffer, not an array.
+  private def assertNoEmbeddingExchange(
+      name: String, df: DataFrame, bounded: Set[Seq[String]] = Set.empty): Unit = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val df = graft.operators.AnnQueries.annMmrRerank(spark, sf)
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    def hasArray(t: DataType): Boolean = t match {
+      case _: ArrayType => true
+      case s: StructType => s.fields.exists(f => hasArray(f.dataType))
+      case m: MapType => hasArray(m.keyType) || hasArray(m.valueType)
+      case _ => false
+    }
     val phys = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
     val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
-    assert(shuffles.nonEmpty)
-    // the top-k window exchanges carry |corpus|×|queries| rows, so a
-    // top-level embedding column there is the exact shuffle-blowup the
-    // ANN family's posture forbids (the bounded pool's collect_list
-    // buffer is an agg buffer, not a per-corpus-row embedding column)
+    assert(shuffles.nonEmpty, name)
+    val seen = shuffles.map(_.output.map(_.name)).toSet
+    assert(bounded.subsetOf(seen), s"$name: bounded exchanges $bounded not in $seen")
     shuffles.foreach { e =>
       val names = e.output.map(_.name)
-      assert(!names.contains("embedding"),
-        s"embedding crosses an exchange: $names")
+      val arrays = e.output.filter(a => hasArray(a.dataType)).map(_.name)
+      assert(arrays.isEmpty || bounded.contains(names),
+        s"$name: array column(s) $arrays cross an exchange: $names")
     }
   }
 
+  test("mmr re-rank: no embedding column crosses an exchange") {
+    assertNoEmbeddingExchange("ann_mmr_rerank",
+      graft.operators.AnnQueries.annMmrRerank(spark, sf))
+  }
+
   test("hard negatives: no embedding column crosses an exchange") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val df = graft.operators.AnnQueries.embedHardNegatives(spark, sf)
-    val phys = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
-    assert(shuffles.nonEmpty)
-    // same posture as the other ANN paths: the scored rows entering the
-    // top-k windows are (qid, vid, sim) scalars only
-    shuffles.foreach { e =>
-      val names = e.output.map(_.name)
-      assert(!names.contains("embedding"),
-        s"embedding crosses an exchange: $names")
-    }
+    assertNoEmbeddingExchange("embed_hard_negatives",
+      graft.operators.AnnQueries.embedHardNegatives(spark, sf))
+  }
+
+  test("ANN top-k: no embedding column crosses an exchange") {
+    assertNoEmbeddingExchange("ann_bruteforce_topk",
+      graft.operators.AnnQueries.annBruteforceTopk(spark, sf))
+    assertNoEmbeddingExchange("ann_ivf_topk",
+      graft.operators.IvfQueries.annIvfTopk(spark, sf),
+      bounded = Set(Seq("qid", "qvec", "cell", "cdist")))
   }
 
   test("bottom-k sample aggregates partially before the shuffle") {
