@@ -2,7 +2,9 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 
 /** Dataset read/write facade — the Spark-native twin of the reference
   * `datatoolz.io.DataIO` (reference: datatoolz/io.py:16-206).
@@ -374,14 +376,28 @@ object GraftIO {
     val conf = spark.sparkContext.hadoopConfiguration
     flatDataFiles(spark, path).flatMap { files =>
       try Some(files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
+        readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+          .getBlocks.asScala.map(_.getRowCount).sum
       }.sum)
       catch { case _: Exception => None }
     }
   }
+
+  /** One parquet footer: a few-KB ranged read on the driver. */
+  private def readFooter(in: org.apache.parquet.io.InputFile): ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The Spark schema a Spark writer recorded in an open footer (the
+    * row-metadata key `spark.read.parquet` infers it from), so a caller
+    * that already holds the footer needs no schema-inference job. None
+    * when the file was written without it (another writer); callers
+    * then infer as `spark.read.parquet` does. */
+  private def footerSparkSchema(footer: ParquetMetadata): Option[StructType] =
+    Option(footer.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
 
   /** Footer fast path for [[buildStatsIndex]]: per-file min/max read
     * from parquet metadata. Returns None (caller falls back to the
@@ -409,14 +425,6 @@ object GraftIO {
       spark: SparkSession, path: String, statCols: Seq[String]): Option[DataFrame] = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
-    val schema = spark.read.parquet(path).schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val supported = statCols.forall(c => types.get(c).exists {
-      case LongType | IntegerType => true
-      case _ => false
-    })
-    if (!supported) return None
-
     val conf = spark.sparkContext.hadoopConfiguration
     // flatDataFiles bails on any real subdirectory: spark.read.parquet
     // would discover leaf files a flat listing misses (partitioned /
@@ -426,13 +434,21 @@ object GraftIO {
       case Some(fs) => fs
       case None => return None
     }
+    def footer(st: org.apache.hadoop.fs.FileStatus): ParquetMetadata =
+      readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    val first = footer(files.head)
+    val schema = footerSparkSchema(first).getOrElse(spark.read.parquet(path).schema)
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val supported = statCols.forall(c => types.get(c).exists {
+      case LongType | IntegerType => true
+      case _ => false
+    })
+    if (!supported) return None
 
     object MissingStats extends scala.util.control.ControlThrowable
     try {
       val rows: Seq[org.apache.spark.sql.Row] = files.toSeq.flatMap { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+        val blocks = (if (st eq files.head) first else footer(st)).getBlocks.asScala.toSeq
         // a zero-row file gets NO index row — matching the scan-built
         // index, where groupBy(input_file_name()) never sees the file
         // (repartitionByRange can emit empty files when the requested
@@ -525,19 +541,26 @@ object GraftIO {
       catch { case _: java.net.URISyntaxException => s }
     val files = index.filter(pred)
       .select("file").collect().map(r => decode(r.getString(0)))
+    // the schema comes from one opened file's footer, so the read runs
+    // no inference job; with no file surviving, any indexed file gives
+    // it to an empty frame (both builders index zero FILES never, but a
+    // directory of only zero-ROW files yields a zero-row index — no
+    // file to derive a schema from, so fail loudly instead of letting
+    // spark.read.parquet() throw "Unable to infer schema")
+    val schemaFile = files.headOption.getOrElse {
+      val any = index.select("file").limit(1).collect().map(r => decode(r.getString(0)))
+      require(any.nonEmpty,
+        "stats index has zero rows (every indexed file was empty or statless): " +
+          "no file to derive the result schema from — read the source directory directly")
+      any.head
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = footerSparkSchema(readFooter(org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(schemaFile), conf)))
+    val reader = schema.fold(spark.read)(spark.read.schema)
     val base =
-      if (files.isEmpty) {
-        // preserve the schema with an empty frame: derive it from one
-        // indexed file (both builders index zero FILES never, but a
-        // directory of only zero-ROW files yields a zero-row index —
-        // no file to derive a schema from, so fail loudly instead of
-        // letting spark.read.parquet() throw "Unable to infer schema")
-        val any = index.select("file").limit(1).collect().map(r => decode(r.getString(0)))
-        require(any.nonEmpty,
-          "stats index has zero rows (every indexed file was empty or statless): " +
-            "no file to derive the result schema from — read the source directory directly")
-        spark.read.parquet(any: _*).limit(0)
-      } else spark.read.parquet(files: _*)
+      if (files.isEmpty) reader.parquet(schemaFile).limit(0)
+      else reader.parquet(files: _*)
     // residual filter per column restores exactness (stats admit false
     // positives, never false negatives)
     val residual = ranges.map { case (c, (lo, hi)) =>

@@ -80,11 +80,14 @@ object IoQueries {
     // the middle fifth of the part-key space — a selective range on the
     // NON-leading z dimension, where a linear layout couldn't skip.
     // Global min/max come from the stats index (min of file minima =
-    // global min): the index is already on the driver, so this replaces
-    // a full extra scan of the source with arithmetic over file rows
-    val r = index.agg(min($"min_l_partkey").cast("long"),
-      max($"max_l_partkey").cast("long")).first()
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    // global min): the index is a local frame on the driver, so this
+    // replaces a full extra scan of the source with arithmetic over
+    // file rows — a select over it runs no Spark job, an agg would.
+    // Null bounds (an all-null file) are skipped, as min/max skip them.
+    val bounds = index.select($"min_l_partkey".cast("long"), $"max_l_partkey".cast("long"))
+      .collect()
+    val lo = bounds.filterNot(_.isNullAt(0)).map(_.getLong(0)).min
+    val hi = bounds.filterNot(_.isNullAt(1)).map(_.getLong(1)).max
     val (qLo, qHi) = (lo + (hi - lo) * 2 / 5, lo + (hi - lo) * 3 / 5)
 
     GraftIO.readPruned(spark, index, "l_partkey", qLo, qHi)

@@ -2,6 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.{DataSourceScanExec, ExternalRDDScanExec, LocalTableScanExec,
+  RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
 /** Dev utility: write `.explain("formatted")` of named SparkEntry
   * queries (or all of them) to a directory, one file per query —
   * the plan evidence the optimization rounds commit under plans/.
@@ -20,7 +25,8 @@ import java.nio.file.{Files, Paths}
   *
   * Queries that materialize internally (pagerank, k-means report)
   * return a driver-local/cached tail — the file still records it, with
-  * a NOTE header.
+  * a NOTE header. Only such a tail gets the NOTE: a plan with any leaf
+  * that reads files or an RDD is whole.
   *
   * Kept as a main because a speed claim needs before/after plan dumps
   * beside its A/B (ROADMAP), and this is what writes them.
@@ -45,7 +51,7 @@ object PlanDump {
         val txt = relocate(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
           .replaceAll("""(at \w+\.scala):\d+""", "$1")
         val note =
-          if (txt.contains("LocalTableScan") || txt.contains("InMemoryTableScan"))
+          if (isTail(qe.sparkPlan))
             "NOTE: internally-materialized result; this is the plan TAIL only\n\n"
           else ""
         Files.writeString(Paths.get(outDir, s"$n$suffix.txt"), note + txt)
@@ -56,5 +62,20 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** A plan over driver-local or cached rows that no leaf of it reads
+    * from files or an RDD: the tail of a query that materialized
+    * internally. A whole plan that also joins a small literal frame
+    * (IVF centroids, a PQ codebook) still reads its source. */
+  private def isTail(plan: SparkPlan): Boolean = {
+    val leaves = plan.collectLeaves()
+    leaves.exists {
+      case _: LocalTableScanExec | _: InMemoryTableScanExec => true
+      case _ => false
+    } && !leaves.exists {
+      case _: DataSourceScanExec | _: BatchScanExec | _: RDDScanExec | _: ExternalRDDScanExec[_] => true
+      case _ => false
+    }
   }
 }

@@ -178,4 +178,61 @@ class FilterPropertySpec extends AnyFunSuite with SparkSpec {
         s"\nfilters: $filterJson\nentries: ${entries.map(toJson).mkString("\n")}")
     }
   }
+
+  // ---- native columns beside a JSON column ----------------------------
+  // bigint a, string b, double c and boolean d are native columns — on
+  // every row, a SQL NULL being a present null, as a reference dict
+  // holding None; `j` is a JSON document with nested keys; `z` is in no
+  // schema (a missing key). Filters mix the two kinds in any order, so
+  // the compiler's cheapest-first reordering is exercised against the
+  // interpreter, which evaluates in the user's order.
+  private case class Mixed(
+      a: Option[Long], b: Option[String], c: Option[Double], d: Option[Boolean], j: VObj) {
+    def entry: VObj = VObj(Map(
+      "a" -> a.fold[V](VNull)(x => VNum(x.toDouble, isInt = true)),
+      "b" -> b.fold[V](VNull)(VStr.apply),
+      "c" -> c.fold[V](VNull)(x => VNum(x, isInt = false)),
+      "d" -> d.fold[V](VNull)(VBool.apply),
+      "j" -> j))
+  }
+
+  private val genMixed: Gen[Mixed] = for {
+    a <- Gen.option(Gen.oneOf(0L, 1L, -1L, 2L))
+    b <- Gen.option(Gen.oneOf(strPool))
+    c <- Gen.option(Gen.oneOf(numPool))
+    d <- Gen.option(Gen.oneOf(true, false))
+    j <- genEntry
+  } yield Mixed(a, b, c, d, j)
+
+  private val genMixedPath: Gen[List[String]] = Gen.oneOf(
+    Gen.oneOf("a", "b", "c", "d", "z").map(List(_)),
+    genPath.map("j" :: _))
+
+  private val genMixedFilt: Gen[Filt] = for {
+    n <- Gen.choose(2, 3)
+    fields <- Gen.listOfN(n, Gen.zip(genMixedPath, Gen.nonEmptyListOf(genCrit).map(_.take(2))))
+  } yield Filt(fields)
+
+  test("native columns beside a nested JSON column: compiled filter == reference interpreter") {
+    import spark.implicits._
+    val cases = (0 until 30).flatMap(i => (for {
+      nf <- Gen.choose(1, 2)
+      filters <- Gen.listOfN(nf, genMixedFilt)
+      rows <- Gen.listOfN(25, genMixed)
+    } yield (filters, rows)).apply(Gen.Parameters.default, Seed(2000L + i)))
+    assert(cases.size >= 25, "generator should rarely fail")
+    cases.foreach { case (filters, rows) =>
+      val filterJson = filters.map(filtJson).mkString("[", ", ", "]")
+      val expected = rows.map(r => evalFilters(filters, r.entry))
+      val df = rows.zipWithIndex.map { case (r, i) => (i, r.a, r.b, r.c, r.d, toJson(r.j)) }
+        .toDF("idx", "a", "b", "c", "d", "j")
+      val kept = df.filter(EventFilter.compile(filterJson, df, jsonCols = Set("j")))
+        .select($"idx").collect().map(_.getInt(0)).toSet
+      val strict = df.withColumn("m", EventFilter.compileStrict(filterJson, df, jsonCols = Set("j")))
+        .orderBy($"idx").select($"m").collect().map(_.getBoolean(0)).toSeq
+      val msg = s"\nfilters: $filterJson\nrows: ${rows.mkString("\n")}"
+      assert(kept === expected.zipWithIndex.collect { case (true, i) => i }.toSet, msg)
+      assert(strict === expected, msg)
+    }
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -227,5 +231,69 @@ class FilteringSpec extends AnyFunSuite with SparkSpec {
     // unknown column behaves as missing: only exists:false matches
     val f3 = """[{"no_such_col": [{"exists": false}]}]"""
     assert(df.filter(EventFilter.compile(f3, df)).count() === 4)
+  }
+
+  /** (Filter conditions, scan PushedFilters) of a plan, in plan order. */
+  private def filterAndPushed(df: DataFrame): (Seq[String], Seq[String]) = {
+    val plan = df.queryExecution.sparkPlan
+    (plan.collect { case f: FilterExec => f.condition.toString },
+      plan.collect { case s: FileSourceScanExec => s.metadata.getOrElse("PushedFilters", "") })
+  }
+
+  // evaluation order: a row the cheap native criterion rejects never
+  // parses its JSON document; the numeric range probes the type once
+  test("filter_events_nested: the user_id comparison precedes the first JSON parse") {
+    val (conds, pushed) = filterAndPushed(
+      graft.operators.FilterQueries.filterEventsNested(spark, sf))
+    assert(conds.size == 1, conds)
+    val cond = conds.head
+    val native = """user_id#\d+L < 100\)""".r.findFirstMatchIn(cond)
+      .getOrElse(fail(s"no exact user_id comparison in: $cond")).start
+    val firstParse = cond.indexOf("parseJson(")
+    assert(firstParse >= 0 && native < firstParse, cond)
+    // one type probe + one parse per comparison of the range
+    assert("parseJson\\(".r.findAllMatchIn(cond).size <= 3, cond)
+    assert(pushed.exists(_.contains("LessThan(user_id,100)")), pushed)
+  }
+
+  test("native integral criteria compare in the column's type below 2^53 and push down") {
+    import spark.implicits._
+    val p53 = 1L << 53
+    val path = Files.createTempDirectory("filter_exact").toString + "/t"
+    Seq(p53 - 2, p53 - 1, p53, p53 + 1, p53 + 2).map(x => (x, (x % 5).toInt))
+      .toDF("x", "i").write.parquet(path)
+    val df = spark.read.parquet(path)
+    def run(f: String): (Seq[Long], Seq[String]) = {
+      val got = df.filter(EventFilter.compile(f, df))
+      (got.select($"x").collect().map(_.getLong(0)).sorted.toSeq, filterAndPushed(got)._2)
+    }
+    // |r| < 2^53: compared as a bigint — exact, and in PushedFilters
+    val (gt, gtPushed) = run("""[{"x": [{"numeric": [">", 9007199254740990]}]}]""")
+    assert(gt == Seq(p53 - 1, p53, p53 + 1, p53 + 2))
+    assert(gtPushed.exists(_.contains("GreaterThan(x,9007199254740990)")), gtPushed)
+    assert(run("""[{"x": [9007199254740991]}]""")._1 == Seq(p53 - 1))
+    assert(run("""[{"x": [{"numeric": ["<=", 9007199254740991.0]}]}]""")._1 == Seq(p53 - 2, p53 - 1))
+    // an int column against a whole literal outside the int range:
+    // widened, not wrapped
+    assert(run("""[{"i": [{"numeric": ["<", 3000000000, ">", -3000000000]}]}]""")._1.size == 5)
+    // a fractional literal keeps the double view (i = x % 5 = 0..4)
+    assert(run("""[{"i": [{"numeric": ["<", 2.5]}]}]""")._1 == Seq(p53 - 2, p53 - 1, p53))
+    // |r| >= 2^53 keeps the double view: 2^53 + 1 rounds to 2^53
+    assert(run("""[{"x": [{"numeric": ["=", 9007199254740992]}]}]""")._1 == Seq(p53, p53 + 1))
+  }
+
+  test("a malformed JSON document fails only a row that reaches its criteria") {
+    import spark.implicits._
+    // the JSON field is listed first; the native user_id criterion
+    // still runs first and decides the malformed row
+    val f = """[{"props": {"k": [{"numeric": [">", 20]}]}, "user_id": [{"numeric": ["<", 100]}]}]"""
+    def count(rows: Seq[(Long, String)]): Long = {
+      val df = rows.toDF("user_id", "props")
+      df.filter(EventFilter.compile(f, df, jsonCols = Set("props"))).count()
+    }
+    assert(count(Seq((1L, """{"k": 30}"""), (500L, "{not json"))) == 1)
+    val e = intercept[Exception](count(Seq((1L, "{not json"), (500L, """{"k": 30}"""))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("MALFORMED")), e)
   }
 }

@@ -149,4 +149,23 @@ class PruneSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("zero rows"))
   }
+
+  // the pruned read and the footer index take the schema from a footer
+  // (no inference job); both must see what spark.read.parquet infers
+  test("readPruned has the inferred schema; string and date stat columns still take the scan path") {
+    val li = Tables.lineitem(spark, sf).select($"l_orderkey", $"l_partkey", $"l_returnflag")
+      .withColumn("d", date_add(lit("2020-01-01").cast("date"), ($"l_orderkey" % 100).cast("int")))
+      .withColumn("one", lit(1L)) // written non-nullable; every read is nullable
+    val path = Files.createTempDirectory("prune_schema").toString + "/z"
+    GraftIO.writeZOrdered(li, path, Seq("l_orderkey", "l_partkey"), files = 8)
+    val inferred = spark.read.parquet(path).schema
+    assert(inferred.fields.forall(_.nullable))
+    val index = GraftIO.buildStatsIndex(spark, path, Seq("l_partkey"))
+    assert(GraftIO.readPruned(spark, index, "l_partkey", Long.MinValue, Long.MaxValue).schema == inferred)
+    // no file survives: the empty frame keeps the schema too
+    assert(GraftIO.readPruned(spark, index, "l_partkey", -2L, -1L).schema == inferred)
+    assert(GraftIO.footerStatsIndex(spark, path, Seq("l_returnflag")).isEmpty)
+    assert(GraftIO.footerStatsIndex(spark, path, Seq("d")).isEmpty)
+    assert(GraftIO.buildStatsIndex(spark, path, Seq("d")).count() == 8)
+  }
 }
