@@ -1,21 +1,30 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.storage.StorageLevel
 
-/** Session-wide registry of persisted frames that operators RETURN.
+/** The materialization kernel, and the session-wide registry of the
+  * persisted frames operators RETURN.
   *
-  * Several operators (textNgramNovelty, assignSplits, dedupNgramJaccard)
-  * hand back a frame that is persisted and pre-materialized — that is
-  * what lets them release their much larger persisted intermediates
-  * (exploded shingle/digest frames) before returning. The returned
-  * cache entry itself, however, outlives the call: a library caller who
-  * never unpersists it strands one entry per invocation for the life of
-  * the session. The gate harnesses drain it (Verify calls
-  * `releaseAll()` + `catalog.clearCache()` after every query; Bench
-  * before every timed run — clearCache alone frees the cached data but
-  * would leave ledger entries, and their retained plan trees,
-  * accumulating); library callers release the frames they were
-  * returned in one call:
+  * An operator that builds a small result over large cached
+  * intermediates (exploded shingles, digest frames, band events)
+  * returns it through [[keep]]: the result is persisted at
+  * `MEMORY_AND_DISK` and counted once, so the intermediates can be
+  * unpersisted before the operator returns without the caller's
+  * action recomputing them. That count is the reason to keep: a frame
+  * with no input to release has no reason to be counted, so `keep`
+  * requires one.
+  *
+  * If the count throws, `keep` unpersists the result and the inputs,
+  * registers nothing and rethrows, so neither outlives the failed
+  * call. Otherwise the returned entry outlives the call: a library
+  * caller who never unpersists it would strand one entry per
+  * invocation for the life of the session, so `keep` records it here.
+  * The gate harnesses drain the ledger (Verify calls `releaseAll()` +
+  * `catalog.clearCache()` after every query; Bench before every timed
+  * run — clearCache alone frees the cached data but would leave ledger
+  * entries, and their retained plan trees, accumulating); library
+  * callers release the frames they were returned in one call:
   *
   * {{{
   *   val novelty = CurationQueries.textNgramNovelty(spark, dir)
@@ -30,11 +39,21 @@ object CacheLedger {
   private val frames =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, DataFrame)]()
 
-  /** Record a frame the operator returns in persisted state; returns it
-    * unchanged so call sites stay expression-shaped. */
-  def register[T](tag: String, ds: Dataset[T]): Dataset[T] = {
-    frames.add(tag -> ds.toDF())
-    ds
+  /** Persist `ds`, materialize it with one `count()`, unpersist
+    * `release` and `more`, and register `ds` under `tag`; returns it
+    * persisted. A failed count releases `ds` and the inputs, registers
+    * nothing and rethrows. */
+  def keep[T](tag: String, ds: Dataset[T], release: Dataset[_], more: Dataset[_]*): Dataset[T] = {
+    val kept = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    val inputs = release +: more
+    try kept.count()
+    catch { case e: Throwable =>
+      (kept +: inputs).foreach(_.unpersist())
+      throw e
+    }
+    inputs.foreach(_.unpersist())
+    frames.add(tag -> kept.toDF())
+    kept
   }
 
   /** Tags + frames registered and not yet released. */

@@ -162,7 +162,8 @@ object CorpusQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val model = lmModelFromCounts(
       docGrams.groupBy($"gh", $"w1h").agg(sum($"cnt").as("c2")), "gh", $"w1h", minCount)
-    keepScored(tag, scoreDocGrams(docGrams, model, "gh", broadcastModel), docGrams)
+    graft.CacheLedger.keep(tag, scoreDocGrams(docGrams, model, "gh", broadcastModel), docGrams)
+      .orderBy(col("doc_id"))
   }
 
   /** Hashed-gram per-doc counts (doc_id, gh, w1h, cnt) — the r11
@@ -522,16 +523,6 @@ object CorpusQueries {
         floor($"sum_bp" / $"n_bigrams").cast("long").as("avg_bp"))
   }
 
-  /** Materialize-then-release: persist and count the scored frame so
-    * its gram-count input can be unpersisted now; the returned frame
-    * stays persisted, ledger-registered under `tag` for callers. */
-  private def keepScored(tag: String, scored: DataFrame, docGrams: DataFrame): DataFrame = {
-    val kept = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    kept.count()
-    docGrams.unpersist()
-    graft.CacheLedger.register(tag, kept).orderBy(col("doc_id"))
-  }
-
   /** String-keyed per-doc gram counts (doc_id, g, cnt) — the input of
     * the persisted-model paths, whose artifact keys on the gram string. */
   private def stringDocGramCounts(spark: SparkSession, dir: String): DataFrame = {
@@ -595,9 +586,9 @@ object CorpusQueries {
     graft.io.ModelIO.saveLmHead(lmModelFromCounts(
       docGrams.groupBy($"g").agg(sum($"cnt").as("c2")),
       "g", substring_index($"g", " ", 1), minCount), path)
-    keepScored("text_lm_score_head_served", scoreDocGrams(
+    graft.CacheLedger.keep("text_lm_score_head_served", scoreDocGrams(
       docGrams.withColumn("gh", xxhash64($"g")),
       graft.io.ModelIO.loadLmHead(spark, path).select(xxhash64($"g").as("gh"), $"bp"),
-      "gh"), docGrams)
+      "gh"), docGrams).orderBy(col("doc_id"))
   }
 }

@@ -385,19 +385,10 @@ object CurationQueries {
     digests.count()
     val reps = digests.groupBy($"dg").agg(min($"doc_id").as("rep"))
 
-    val out = digests.join(reps, "dg")
+    graft.CacheLedger.keep("assign_splits", digests.join(reps, "dg")
       .withColumn("split",
         when(substring(sha2($"rep".cast("string"), 256), 1, 8) < "e6666666", "train")
-          .otherwise("test"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialized + persisted so digests can be released eagerly (the
-    // file's materialize-then-release discipline) — otherwise library
-    // callers strand the exploded digest cache for the session. The
-    // returned frame itself stays persisted: ledger-registered so
-    // callers can release it (harnesses clearCache() per query).
-    out.count()
-    digests.unpersist()
-    graft.CacheLedger.register("assign_splits", out)
+          .otherwise("test")), digests)
   }
 
   def splitTrainTest(spark: SparkSession, dir: String): DataFrame = {
@@ -495,18 +486,11 @@ object CurationQueries {
       .groupBy($"first_doc".as("doc_id")).agg(count(lit(1)).as("novel"))
     // left: a doc whose every gram first occurred earlier has no
     // novelPerDoc row — it scores 0, it does not disappear
-    val out = perDoc.join(novelPerDoc, Seq("doc_id"), "left")
+    graft.CacheLedger.keep("text_ngram_novelty", perDoc.join(novelPerDoc, Seq("doc_id"), "left")
       .select($"doc_id", $"n_grams", coalesce($"novel", lit(0L)).as("novel"))
       .select($"doc_id", $"n_grams", $"novel",
         floor((lit(20000L) * $"novel" + $"n_grams") / (lit(2L) * $"n_grams"))
-          .cast("long").as("novelty_bp"))
-      // materialized + persisted so ex can be released eagerly (the
-      // dedup-family discipline; the returned frame is PERSISTED —
-      // registered in the CacheLedger so library callers can release
-      // it; the gate harnesses clearCache() per query)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ex.unpersist()
-    graft.CacheLedger.register("text_ngram_novelty", out).orderBy($"doc_id")
+          .cast("long").as("novelty_bp")), ex)
+      .orderBy($"doc_id")
   }
 }

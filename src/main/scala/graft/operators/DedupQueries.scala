@@ -109,14 +109,7 @@ object DedupQueries {
     * candidates at sf0.1). */
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // the pairs frame stays persisted under the returned orderBy; this
-    // wrapper does NOT unpersist it — it registers the frame in
-    // graft.CacheLedger under "ngram_jaccard_pairs" so callers release
-    // it after consumption (the gate harnesses drain the ledger per
-    // query; dedupClusterRep calls ngramJaccardPairs directly and
-    // unpersists by hand)
-    graft.CacheLedger.register("ngram_jaccard_pairs",
-      ngramJaccardPairs(spark, dir)).orderBy($"id_a", $"id_b")
+    ngramJaccardPairs(spark, dir).orderBy($"id_a", $"id_b")
   }
 
   /** Gram-count sketch geometry for the verify prune: 32 hash buckets
@@ -228,10 +221,9 @@ object DedupQueries {
         "(expected one row per distinct gram)")
 
   /** The verified (id_a, id_b, j_bp) near-dup pairs behind
-    * [[dedupNgramJaccard]], unordered. Returned frame is PERSISTED and
-    * materialized (its persisted inputs are already released) — callers
-    * unpersist it once consumed (dedupClusterRep does; dedupNgramJaccard
-    * instead registers it in [[graft.CacheLedger]] for its callers). */
+    * [[dedupNgramJaccard]], unordered, kept as `ngram_jaccard_pairs`
+    * ([[graft.CacheLedger.keep]]): its persisted inputs are released
+    * before it returns. */
   private[operators] def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // persisted: the exploded-shingle pipeline feeds the document-
@@ -332,18 +324,12 @@ object DedupQueries {
         lit(17L) * minSum >= lit(7L) * ($"sa" + $"sb"))
       .select($"id_a", $"id_b")
 
-    val pairs = verifyJaccard(pruned, arrays.select($"doc_id", $"g"))
-      // jaccard in exact integer basis points (see TextFunctions.qualityScoreBp)
-      .select($"id_a", $"id_b",
-        floor((lit(20000L) * $"inter" + $"uni") / (lit(2L) * $"uni")).cast("long").as("j_bp"))
-      // materialized + persisted so ex and arrays can be released
-      // eagerly (the returned frame is PERSISTED, as with the simhash
-      // pairs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    ex.unpersist()
-    arrays.unpersist()
-    pairs
+    graft.CacheLedger.keep("ngram_jaccard_pairs",
+      verifyJaccard(pruned, arrays.select($"doc_id", $"g"))
+        // jaccard in exact integer basis points (see TextFunctions.qualityScoreBp)
+        .select($"id_a", $"id_b",
+          floor((lit(20000L) * $"inter" + $"uni") / (lit(2L) * $"uni")).cast("long").as("j_bp")),
+      ex, arrays)
   }
 
   /** End-to-end fuzzy dedup with quality-based canonical selection —
@@ -625,12 +611,6 @@ object DedupQueries {
       .filter($"seg".isNotNull)
       .distinct() // distinct (dl, d) combos can yield the same substring
 
-    // persisted + materialized: the candidate subtree feeds both text
-    // joins of the verify step, and without the cache the whole
-    // segment/probe join pipeline re-executes per branch (measured
-    // 51.6 s → ~11 s on a 10× corpus). Same hazard Similarity.lshPairs
-    // caches its items against; released after the verified
-    // pairs exist.
     // tiny-bucket path: the segment pigeonhole is vacuous when the
     // shorter side has < k+1 chars — pair those docs directly against
     // everything within the length band. The tiny side broadcasts,
@@ -647,6 +627,11 @@ object DedupQueries {
       .select(least($"s.doc_id", $"p.doc_id").as("id_a"),
         greatest($"s.doc_id", $"p.doc_id").as("id_b"))
 
+    // persisted: the candidate subtree feeds both text joins of the
+    // verify step, and without the cache the whole segment/probe join
+    // pipeline re-executes per branch (measured 51.6 s → ~11 s on a 10×
+    // corpus). Same hazard Similarity.lshPairs caches its items
+    // against; released after the verified pairs exist.
     val candidates = segs.as("a").join(probes.as("b"),
         $"a.idx" === $"b.idx" && $"a.len" === $"b.plen" &&
           $"a.seg" === $"b.seg" && $"a.doc_id" =!= $"b.doc_id")
@@ -664,17 +649,12 @@ object DedupQueries {
     // is iterative with data-dependent early termination, which no
     // Catalyst expression expresses without materializing the table.
     val lev = udf((a: String, b: String) => bandedLevenshtein(a, b, k))
-    val pairs = candidates
+    graft.CacheLedger.keep("dedup_edit_blocked", candidates
       .join(corpus.select($"doc_id".as("id_a"), $"text".as("ta")), "id_a")
       .join(corpus.select($"doc_id".as("id_b"), $"text".as("tb")), "id_b")
       .select($"id_a", $"id_b", lev($"ta", $"tb").cast("long").as("dist"))
-      .filter($"dist" >= 0 && $"dist" <= k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    candidates.unpersist()
-    // the returned pairs stay persisted: registered for the caller to
-    // release (graft.CacheLedger)
-    graft.CacheLedger.register("dedup_edit_blocked", pairs).orderBy($"id_a", $"id_b")
+      .filter($"dist" >= 0 && $"dist" <= k), candidates)
+      .orderBy($"id_a", $"id_b")
   }
 
   /** Exact Levenshtein distance when it is <= k, else -1, in O(k·n):

@@ -48,9 +48,9 @@ object RangeAggregate {
   /** For each `intervals` row, the sum of every `measures` column over
     * points whose `pointCol` lies in `[loCol, hiCol]`. Output = all
     * interval columns plus `<measure>_sum` for each measure (zero when
-    * the band is empty). The per-interval sums it reads stay
-    * persisted, registered in [[graft.CacheLedger]] as
-    * `range_band_sums`. */
+    * the band is empty). The per-interval sums it reads are kept as
+    * `range_band_sums` ([[graft.CacheLedger.keep]]), which releases the
+    * event table before returning. */
   def bandSums(
       points: DataFrame, pointCol: String, measures: Seq[String],
       intervals: DataFrame, idCol: String, loCol: String, hiCol: String): DataFrame = {
@@ -105,12 +105,8 @@ object RangeAggregate {
       val cum = col(s"__run_$m") + col(s"__off_$m")
       sum(when(col("__tie") === 2, cum).otherwise(-cum)).as(s"${m}_sum")
     }
-    val bands = probeCums.groupBy(col("__id"))
-      .agg(signed.head, signed.tail: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    bands.count() // materialize so the event table can be released now
-    evs.unpersist()
-    graft.CacheLedger.register("range_band_sums", bands)
+    val bands = graft.CacheLedger.keep("range_band_sums",
+      probeCums.groupBy(col("__id")).agg(signed.head, signed.tail: _*), evs)
 
     intervals.join(bands, intervals(idCol) === bands("__id"), "left")
       .drop("__id")

@@ -298,8 +298,8 @@ object Similarity {
     * bipartite join). `pair` maps the aliased join to output rows and
     * `distinct()` then collapses a pair met in several bands — so
     * `pair` may only emit columns the pair determines. The result is
-    * persisted and materialized, so `items` is released before
-    * returning, and registered in [[graft.CacheLedger]] under `tag`.
+    * kept under `tag` ([[graft.CacheLedger.keep]]), which releases
+    * `items` before returning.
     *
     * The hot-bucket guard stays a separate partial-count aggregate
     * rather than a `count(*) over (partition by band, key)` sharing
@@ -315,12 +315,8 @@ object Similarity {
     val buckets = boundBuckets(
       exploded.select(col("*"), col("__bb.*")).drop("__bb"), keys, maxBucket)
     val sameBucket = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
-    val out = pair(buckets.as("a").join(buckets.as("b"), sameBucket && side))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    cached.unpersist()
-    graft.CacheLedger.register(tag, out)
+    graft.CacheLedger.keep(tag,
+      pair(buckets.as("a").join(buckets.as("b"), sameBucket && side)).distinct(), cached)
   }
 
   /** Near-dup pairs of 64-bit codes within hamming `maxHamming`, from

@@ -1,22 +1,29 @@
 package graft
 
+import org.apache.spark.SparkException
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.{Analytics, DedupQueries, ImageDedupQueries, PipelineQueries}
+import graft.operators.RangeAggregate
 
-/** The ledger contract operators rely on when they return persisted
-  * frames: registration is visible, releaseAll unpersists, and a frame
-  * the caller already released is a safe no-op to release again.
-  * Asserts are scoped to this suite's own tags — other suites share
-  * the JVM-wide session and may register concurrently. */
+/** The materialization kernel's contract: `keep` persists, counts,
+  * releases its inputs and registers; releaseAll unpersists, and a
+  * frame the caller already released is a safe no-op to release again;
+  * a count that throws leaves nothing cached and nothing registered.
+  * Suites run one at a time in the forked test JVM, so the cases that
+  * start from `clearCache()` may assert on the whole CacheManager. */
 class CacheLedgerSpec extends SparkSpec {
 
-  test("register + releaseAll unpersists; double-release is a no-op") {
-    val df = spark.range(100).toDF("i").persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    assert(df.storageLevel != StorageLevel.NONE)
+  private def cacheManager = spark.sharedState.cacheManager
 
-    CacheLedger.register("cache-ledger-spec", df)
+  /** Long identity that throws on 7: a measure whose count fails. */
+  private val boom = udf((i: Long) => if (i == 7L) throw new IllegalStateException("boom") else i)
+
+  test("register + releaseAll unpersists; double-release is a no-op") {
+    val input = spark.range(100).toDF("i").persist(StorageLevel.MEMORY_AND_DISK)
+    val df = CacheLedger.keep("cache-ledger-spec", input.select((col("i") * 2).as("j")), input)
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(input.storageLevel == StorageLevel.NONE)
     assert(CacheLedger.registered.contains("cache-ledger-spec"))
 
     CacheLedger.releaseAll()
@@ -28,25 +35,60 @@ class CacheLedgerSpec extends SparkSpec {
     df.unpersist()
 
     // a frame the CALLER released first must not break releaseAll
-    val df2 = spark.range(10).toDF("i").persist(StorageLevel.MEMORY_AND_DISK)
-    CacheLedger.register("cache-ledger-spec-2", df2)
+    val input2 = spark.range(10).toDF("i").persist(StorageLevel.MEMORY_AND_DISK)
+    val df2 = CacheLedger.keep("cache-ledger-spec-2", input2.select((col("i") + 1).as("j")), input2)
     df2.unpersist()
     CacheLedger.releaseAll()
     assert(!CacheLedger.registered.contains("cache-ledger-spec-2"))
   }
 
+  test("keep: a count that throws unpersists the result and its input and registers nothing") {
+    val input = spark.range(20).toDF("i").persist(StorageLevel.MEMORY_AND_DISK)
+    val out = input.select(boom(col("i")).as("j"))
+    intercept[SparkException](CacheLedger.keep("cache-ledger-spec-fail", out, input))
+    assert(out.storageLevel == StorageLevel.NONE)
+    assert(input.storageLevel == StorageLevel.NONE)
+    assert(!CacheLedger.registered.contains("cache-ledger-spec-fail"))
+  }
+
+  test("bandSums whose measure throws leaves nothing cached and registers nothing") {
+    spark.catalog.clearCache()
+    CacheLedger.releaseAll()
+    assert(cacheManager.isEmpty)
+    val points = spark.range(100).select(col("id").as("p"), boom(col("id")).as("v"))
+    val intervals = spark.range(5)
+      .select(col("id"), (col("id") * 10).as("lo"), (col("id") * 10 + 15).as("hi"))
+    intercept[SparkException](
+      RangeAggregate.bandSums(points, "p", Seq("v"), intervals, "id", "lo", "hi"))
+    assert(cacheManager.isEmpty)
+    assert(!CacheLedger.registered.contains("range_band_sums"))
+  }
+
   test("operators returning persisted pair frames register them; releaseAll drains the tags") {
-    val ops = Seq(
-      "dedup_simhash" -> DedupQueries.dedupSimhash _,
-      "dedup_image_phash" -> ImageDedupQueries.dedupImagePhash _,
-      "text_decontaminate_semantic" -> PipelineQueries.textDecontaminateSemantic _,
-      "dedup_edit_blocked" -> DedupQueries.dedupEditBlocked _,
-      "range_band_sums" -> Analytics.qRangeJoin _)
-    for ((tag, op) <- ops) {
-      op(spark, sf)
-      assert(CacheLedger.registered.contains(tag), tag)
+    val queries = SparkEntry.queries.toMap
+    val tagOf = Seq(
+      "dedup_minhash_lsh" -> "dedup_minhash_lsh",
+      "dedup_simhash" -> "dedup_simhash",
+      "dedup_image_phash" -> "dedup_image_phash",
+      "dedup_embedding_cosine" -> "dedup_embedding_cosine",
+      "text_decontaminate_semantic" -> "text_decontaminate_semantic",
+      "dedup_ngram_jaccard" -> "ngram_jaccard_pairs",
+      "dedup_cluster_rep" -> "ngram_jaccard_pairs",
+      "dedup_edit_blocked" -> "dedup_edit_blocked",
+      "q_range_join" -> "range_band_sums",
+      "text_lm_score" -> "text_lm_score",
+      "text_lm_score_head" -> "text_lm_score_head",
+      "text_lm_score_head_served" -> "text_lm_score_head_served",
+      "split_train_test" -> "assign_splits",
+      "text_ngram_novelty" -> "text_ngram_novelty")
+    spark.catalog.clearCache()
+    CacheLedger.releaseAll()
+    for ((query, tag) <- tagOf) {
+      queries(query)(spark, sf).count()
+      assert(CacheLedger.registered.contains(tag), s"$query: $tag")
       CacheLedger.releaseAll()
-      assert(!CacheLedger.registered.contains(tag), tag)
+      assert(CacheLedger.registered.isEmpty, query)
+      assert(cacheManager.isEmpty, s"$query left a cache entry")
     }
   }
 }
