@@ -6,8 +6,26 @@ import org.apache.spark.sql.SparkSession
   * run the SAME plans, so the sizing math and configs live here, not
   * copy-pasted per main (a tuning change applied to one would silently
   * leave the other running different plans).
+  *
+  * The recipe also sizes Spark's generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`, see [[CodegenCacheEntries]]).
+  * Spark's default keeps 100 classes, but one `curate` benchmark pass
+  * compiles about 105 in its four steps alone: at the default, every
+  * class is evicted before its next use, so each pass re-runs Janino
+  * and the JIT starts over on fresh classes.
   */
 object Harness {
+
+  /** Entries in the JVM's whole-stage-codegen class cache: the measured
+    * working set of graft's operator surface, rounded up to a power of
+    * two. All 104 `SparkEntry.queries` at sf0.01 compile 1,504 distinct
+    * classes (1,501 at sf0.1); one `curate` pass compiles about 105;
+    * Spark's default is 100. The conf is static and JVM-wide: Spark
+    * reads it once, when the first session of the JVM first generates
+    * code, so it must be set before that (the test session reads this
+    * constant too). The bound also caps what a query whose generated
+    * code changes on every call could leak. */
+  val CodegenCacheEntries: Int = 2048
 
   /** Local core count of every main: SPARK_GRAFT_CPUS when set, else
     * all cores the JVM sees. */
@@ -74,6 +92,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     ) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,13 +15,20 @@ import org.apache.spark.sql.functions._
   * cost — text_curate at sf1 measured 10.5 s with the duplicated
   * trees vs 3.1 s evaluated once.
   *
-  * The barrier is a nondeterministic column (`rand()`): a project
+  * The barrier is a nondeterministic column (`rand(0L)`): a project
   * containing ANY nondeterministic expression is not a valid pushdown
   * target, and the always-true nondeterministic filter directly above
   * it keeps `ColumnPruning` from dropping the column and blocks
   * `CombineFilters` from merging caller predicates downward (both
   * rules require deterministic conditions). Caller filters therefore
   * stay ABOVE this block and reference the computed attributes.
+  *
+  * The seed is fixed because only the nondeterminism matters, never the
+  * values. Whole-stage codegen inlines the seed as a literal, so an
+  * unseeded `rand()` (a fresh random seed per call) would make every
+  * call generate new source: text_curate would compile its two
+  * ~1,150-line scoring classes from cold, and the JIT restart on them,
+  * on every call, whatever the size of the codegen cache.
   *
   * Use ONLY where a filter (or repeated projection) would re-evaluate
   * heavy trees: the barrier forfeits scan-level pruning for the
@@ -37,7 +44,7 @@ object EvalBarrier {
     * collapse by a nondeterministic barrier. */
   def evalOnce(df: DataFrame, keep: Seq[String], cols: (String, Column)*): DataFrame = {
     val projected = keep.map(col) ++ cols.map { case (n, c) => c.as(n) }
-    df.select(projected :+ rand().as(BarrierCol): _*)
+    df.select(projected :+ rand(0L).as(BarrierCol): _*)
       .filter(col(BarrierCol) >= -1d)
       .drop(BarrierCol)
   }

@@ -21,7 +21,9 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   * (`at GraftIO.scala`), so dumps from different checkouts or machines
   * diff cleanly. Each
   * `[plandump] <query> ok` line carries the plan's shuffle `Exchange`
-  * count, the number a plan-preserving change has to keep.
+  * count, the number a plan-preserving change has to keep. Each query
+  * starts from an empty cache, so its plan does not depend on which
+  * queries were dumped before it.
   *
   * Queries that materialize internally (pagerank, k-means report)
   * return a driver-local/cached tail — the file still records it, with
@@ -59,6 +61,11 @@ object PlanDump {
         Console.err.println(s"[plandump] $n ok exchanges=$exchanges")
       } catch { case e: Throwable =>
         Console.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
+      } finally {
+        // as Verify and Bench do: a query must not reuse the frames an
+        // earlier query kept, or its plan depends on the dump's order
+        graft.CacheLedger.releaseAll()
+        spark.catalog.clearCache()
       }
     }
     spark.stop()

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared SparkSession for all suites (one JVM-wide session). */
+/** Shared SparkSession for all suites (one JVM-wide session). It sizes
+  * the generated-class cache as `Harness.buildSession` does: the suites
+  * run hundreds of operators in one JVM, and at Spark's default of 100
+  * classes they kept evicting and recompiling each other's code. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,6 +17,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", Harness.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
