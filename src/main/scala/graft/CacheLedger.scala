@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
   * persisted frames operators RETURN.
   *
   * An operator that builds a small result over large cached
-  * intermediates (exploded shingles, digest frames, band events)
+  * intermediates (per-doc shingle arrays, digest frames, band events)
   * returns it through [[keep]]: the result is persisted at
   * `MEMORY_AND_DISK` and counted once, so the intermediates can be
   * unpersisted before the operator returns without the caller's

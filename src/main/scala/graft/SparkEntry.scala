@@ -536,14 +536,18 @@ object SparkEntry {
         |FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.7
         |ORDER BY id_a, id_b""".stripMargin,
 
+    // both operands cast to DOUBLE[]: list_cosine_similarity over
+    // FLOAT[] computes and returns single precision, while graft_cosine
+    // accumulates in double, so a float oracle rounds a similarity near
+    // a half-milli boundary to the other sim_mbp
     "ann_bruteforce_topk" ->
       """SELECT qid, rk, vid, CAST(floor(1000 * s + 0.5) AS BIGINT) AS sim_mbp
         |FROM (
         |  SELECT q.vec_id AS qid, e.vec_id AS vid,
-        |    list_cosine_similarity(q.embedding, e.embedding) AS s,
+        |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS s,
         |    CAST(row_number() OVER (
         |      PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
+        |      ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) DESC,
         |               e.vec_id) AS BIGINT) AS rk
         |  FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
         |  WHERE q.vec_id < 10
@@ -1860,10 +1864,10 @@ object SparkEntry {
       """SELECT qid, rk, vid, CAST(floor(1000 * s + 0.5) AS BIGINT) AS sim_mbp
         |FROM (
         |  SELECT q.vec_id AS qid, e.vec_id AS vid,
-        |    list_cosine_similarity(q.embedding, e.embedding) AS s,
+        |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS s,
         |    CAST(row_number() OVER (
         |      PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.embedding, e.embedding) DESC,
+        |      ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) DESC,
         |               e.vec_id) AS BIGINT) AS rk
         |  FROM embeddings q JOIN embeddings e
         |    ON e.vec_id != q.vec_id AND e.label != q.label

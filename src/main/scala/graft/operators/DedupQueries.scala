@@ -44,23 +44,30 @@ object DedupQueries {
 
   /** Exploded word-3-gram shingles, hashed to 64 bits: one row per
     * (doc_id, gram_hash), with the doc's distinct-shingle count `s`.
-    * Shared head of every near-dup pipeline. Persistence is the
-    * CALLER's decision, per consumption pattern: the minhash path
-    * scans it twice map-only (lanes-only signature aggregate, then the
-    * candidate-restricted verify arrays) and persists those two
-    * downstream frames instead of this corpus-sized one; the ngram
-    * path persists this frame directly (3 references); and at 100 TB
-    * the equivalent decision is an explicit checkpoint table, made by
-    * the pipeline author, not buried in this helper. */
+    * Shared head of every near-dup pipeline. Every consumer reads it
+    * once and nothing persists it: the minhash path scans it map-only
+    * into its lanes-only signature aggregate, and the ngram path feeds
+    * it to the one doc-keyed pass of [[ngramDocArrays]]. At 100 TB a
+    * second reader would be an explicit checkpoint table, made by the
+    * pipeline author, not buried in this helper.
+    *
+    * The native hash array is evaluated ONCE per doc, in its own
+    * projection above [[Tables.widened]]'s exchange; size and explode
+    * only read it. The explode is `explode_outer` plus a null filter on
+    * the gram: a plain `explode` makes Catalyst infer
+    * `size(h) > 0 AND isnotnull(h)` below the Generate, and
+    * PushDownPredicates copies that filter, hash kernel included,
+    * through the round-robin exchange into the scan, which hashes the
+    * whole corpus a second time in as many tasks as the input has
+    * splits (one, for a small file). The filter drops the same
+    * gram-less docs. PlanSpec pins the shape. */
   private[graft] def explodedShingles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.GraftExtensions.ensureRegistered(spark)
-    // the native hash array is evaluated ONCE per doc (its own
-    // projection); size and explode only read it, and explode of an
-    // empty array drops gram-less docs
     Tables.widened(Tables.documents(spark, dir))
       .select($"doc_id", Similarity.shingleHashes($"text", 3).as("h"))
-      .select($"doc_id", size($"h").as("s"), explode($"h").as("gram"))
+      .select($"doc_id", size($"h").as("s"), explode_outer($"h").as("gram"))
+      .filter($"gram".isNotNull)
   }
 
   /** Exact-jaccard verify of candidate (id_a, id_b) pairs against the
@@ -106,10 +113,14 @@ object DedupQueries {
     * buckets stay tiny; a length filter (tau·|A| <= |B| — necessary
     * for J >= tau) prunes the rest. Exact — same pairs as the
     * all-pairs oracle — but never quadratic (measured 5.9M → 104k
-    * candidates at sf0.1). */
+    * candidates at sf0.1). The pairs come back kept as
+    * `ngram_jaccard_pairs` ([[graft.CacheLedger.keep]]), whose count
+    * is the one action before the caller's and releases the per-doc
+    * arrays behind them. */
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    ngramJaccardPairs(spark, dir).orderBy($"id_a", $"id_b")
+    val (pairs, arrays) = ngramJaccardPairs(spark, dir)
+    graft.CacheLedger.keep("ngram_jaccard_pairs", pairs, arrays).orderBy($"id_a", $"id_b")
   }
 
   /** Gram-count sketch geometry for the verify prune: 32 hash buckets
@@ -134,8 +145,9 @@ object DedupQueries {
   private[graft] val SketchMaxS = 32768L
 
   /** Per-doc verify arrays, rarest-token prefixes, and gram-count
-    * sketch lanes in ONE doc-keyed pass: hash-partition the
-    * df-annotated shingle rows by doc, tungsten-sort each partition on
+    * sketch lanes in ONE doc-keyed pass: annotate each shingle row with
+    * its gram's document frequency, hash-partition the rows by doc,
+    * tungsten-sort each partition on
     * (doc_id, df, gram), and assemble every doc's primitive long
     * arrays in a single linear scan — `g` (all s grams; its only
     * consumer is array_intersect/size, so emission order is free),
@@ -156,17 +168,25 @@ object DedupQueries {
     * DedupSpec pins this builder cell-equal to the old aggregate
     * formulation, and the end-to-end pair set is brute-force-pinned.
     *
+    * Document frequency is `count(1) over (partition by gram)` on the
+    * shingle rows: one gram-keyed exchange gives every row the exact df
+    * of its gram, so `ex` has this pass as its only consumer and needs
+    * no cache. A per-gram aggregate joined back would read `ex` twice,
+    * and so need `ex` cached or shingled twice. DedupSpec pins the
+    * window's df, and so the (df, gram) order and the prefixes, to that
+    * aggregate-and-join formulation.
+    *
     * Precondition: `ex` holds exactly one row per distinct (doc_id,
     * gram) and each row's `s` is its doc's row count, as
     * [[explodedShingles]] emits. The builder sizes `g` from `s`, so a
     * doc whose row count differs fails the task with an
     * IllegalStateException naming the doc instead of verifying
     * against a padded or truncated array. */
-  private[graft] def ngramDocArrays(ex: DataFrame, freq2: DataFrame): DataFrame = {
+  private[graft] def ngramDocArrays(ex: DataFrame): DataFrame = {
     val spark = ex.sparkSession
     import spark.implicits._
-    val sorted = ex.join(freq2, Seq("gram"), "left")
-      .select($"doc_id", $"s", coalesce($"df", lit(1L)).as("df"), $"gram")
+    val sorted = ex
+      .select($"doc_id", $"s", count(lit(1)).over(Window.partitionBy($"gram")).as("df"), $"gram")
       .repartition($"doc_id")
       .sortWithinPartitions($"doc_id", $"df", $"gram")
       .as[(Long, Int, Long, Long)]
@@ -221,26 +241,17 @@ object DedupQueries {
         "(expected one row per distinct gram)")
 
   /** The verified (id_a, id_b, j_bp) near-dup pairs behind
-    * [[dedupNgramJaccard]], unordered, kept as `ngram_jaccard_pairs`
-    * ([[graft.CacheLedger.keep]]): its persisted inputs are released
-    * before it returns. */
-  private[operators] def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
+    * [[dedupNgramJaccard]] and [[dedupClusterRep]], unordered and LAZY,
+    * with the one cache they read: the per-doc `arrays`, persisted here
+    * and not yet materialized. No job runs before the caller's first
+    * action. The caller owns the release of `arrays` once the pairs are
+    * materialized or consumed: [[dedupNgramJaccard]] keeps the pairs
+    * through [[graft.CacheLedger.keep]], which releases it after its
+    * count; [[dedupClusterRep]] releases it once the component labels
+    * are built. */
+  private[operators] def ngramJaccardPairs(
+      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // persisted: the exploded-shingle pipeline feeds the document-
-    // frequency aggregate and the per-doc array aggregate — two
-    // executions without the cache (same reasoning as the item cache
-    // in Similarity.lshPairs). Released once the verified
-    // pairs are materialized.
-    val ex = explodedShingles(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // df >= 2 only: a gram absent from this table has df = 1 EXACTLY,
-    // restored via coalesce below — the (df, gram) total order (and so
-    // the candidate set) is bit-identical to joining the full table,
-    // but the join side drops the df-1 long tail (most of the
-    // vocabulary at any scale).
-    val freq2 = ex.groupBy($"gram").agg(count(lit(1)).as("df"))
-      .filter($"df" >= 2)
-
     // ONE doc-keyed pass builds verify arrays, prefixes, AND the
     // gram-count sketch lanes — see [[ngramDocArrays]]. The earlier
     // formulation computed prefixes with a corpus-wide row_number
@@ -248,7 +259,9 @@ object DedupQueries {
     // that this pass's doc-keyed sort replaces; at sf100 that exchange
     // (with the separate verify-array shuffle it duplicated) was a
     // double-digit-GB contributor to the run that filled the disk.
-    val arrays = ngramDocArrays(ex, freq2)
+    // Persisted: the prefix self-join reads it twice and the verify
+    // join twice more.
+    val arrays = ngramDocArrays(explodedShingles(spark, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Prefix rows carry their 1-based POSITION, which — because the
@@ -324,12 +337,11 @@ object DedupQueries {
         lit(17L) * minSum >= lit(7L) * ($"sa" + $"sb"))
       .select($"id_a", $"id_b")
 
-    graft.CacheLedger.keep("ngram_jaccard_pairs",
-      verifyJaccard(pruned, arrays.select($"doc_id", $"g"))
-        // jaccard in exact integer basis points (see TextFunctions.qualityScoreBp)
-        .select($"id_a", $"id_b",
-          floor((lit(20000L) * $"inter" + $"uni") / (lit(2L) * $"uni")).cast("long").as("j_bp")),
-      ex, arrays)
+    val pairs = verifyJaccard(pruned, arrays.select($"doc_id", $"g"))
+      // jaccard in exact integer basis points (see TextFunctions.qualityScoreBp)
+      .select($"id_a", $"id_b",
+        floor((lit(20000L) * $"inter" + $"uni") / (lit(2L) * $"uni")).cast("long").as("j_bp"))
+    (pairs, arrays)
   }
 
   /** End-to-end fuzzy dedup with quality-based canonical selection —
@@ -354,17 +366,24 @@ object DedupQueries {
     * Output: one row per near-dup cluster (size >= 2 by construction:
     * singletons never enter the pair graph).
     *
+    * Materialization: the pairs are never kept. They go to
+    * [[ConnectedComponents.label]] lazily, and label's one collect over
+    * the edge frame it persists is the chain's only action before the
+    * caller's (the distributed path above 2M edges reads that same
+    * persisted edge frame). The per-doc `arrays` cache the pairs read is
+    * released once the labels are built.
+    *
     * SQL oracle: recursive-CTE closure over the same all-pairs
     * jaccard pair set, representative by (quality desc, doc_id) —
     * hash-exact. */
   def dedupClusterRep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pairs = ngramJaccardPairs(spark, dir)
-    // label() materializes its output before returning — the pair
-    // frame has no further consumer after this line
-    val labels = ConnectedComponents.label(
-      pairs.select($"id_a".as("src"), $"id_b".as("dst")))
-    pairs.unpersist()
+    val (pairs, arrays) = ngramJaccardPairs(spark, dir)
+    // label() materializes its output before returning: nothing reads
+    // the pairs, or the arrays behind them, after it
+    val labels =
+      try ConnectedComponents.label(pairs.select($"id_a".as("src"), $"id_b".as("dst")))
+      finally arrays.unpersist()
     val quality = Tables.widened(Tables.documents(spark, dir))
       .select($"doc_id", TextFunctions.qualityScoreBp($"text").as("q_bp"))
     labels.join(quality, $"id" === $"doc_id")

@@ -257,8 +257,11 @@ object PipelineQueries {
     val w = Window.partitionBy($"grp").orderBy($"doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val b = lit(budget)
-    Tables.widened(Tables.documents(spark, dir))
-      .select($"doc_id", tokenCountWs($"text").cast("long").as("n_tok"))
+    // evaluated once, above the widening exchange: a plain select +
+    // filter lets PushDownPredicates copy the token-count kernel into
+    // the scan, below the round-robin spread, where it runs in one task
+    graft.plans.EvalBarrier.evalOnce(Tables.widened(Tables.documents(spark, dir)),
+        Seq("doc_id"), "n_tok" -> tokenCountWs($"text").cast("long"))
       .filter($"n_tok" > 0)
       .withColumn("grp", pmod($"doc_id", lit(groups.toLong)))
       .withColumn("end", sum($"n_tok").over(w))

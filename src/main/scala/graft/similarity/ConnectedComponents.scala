@@ -29,7 +29,15 @@ object ConnectedComponents {
   final case class Result(labels: DataFrame, converged: Boolean, iterations: Int)
 
   /** @param edges DataFrame with long columns (src, dst), undirected
-    *              (either orientation; both are added internally)
+    *              (either orientation; both are added internally). It
+    *              may be lazy and need not be cached: label persists
+    *              the edges itself, and its path-picking collect is the
+    *              action that materializes them, so a caller that
+    *              passes an unmaterialized pair chain pays for one
+    *              materialization, not a count and then a collect.
+    *              Caches the edges' lineage reads must stay persisted
+    *              until label returns (the distributed loop recomputes
+    *              what the collect did not reach).
     * @return (id, component) — component = the minimum id of the
     *         connected component (exact when maxIter >= ~log2 of the
     *         largest component diameter, per the jump-doubling). The
@@ -70,7 +78,8 @@ object ConnectedComponents {
     // Persist the edge list FIRST: it is tiny (verified near-dup
     // pairs), but its lineage is the whole candidate+verify pipeline —
     // without this, the distributed path below re-executes that
-    // pipeline once per reference.
+    // pipeline once per reference. This is the only cache of the edges:
+    // callers hand over their pair chain unmaterialized.
     val e = edges.select($"src", $"dst").persist(StorageLevel.MEMORY_AND_DISK)
 
     // ONE collect, with no count before it, decides the path and, when

@@ -73,7 +73,6 @@ class CacheLedgerSpec extends SparkSpec {
       "dedup_embedding_cosine" -> "dedup_embedding_cosine",
       "text_decontaminate_semantic" -> "text_decontaminate_semantic",
       "dedup_ngram_jaccard" -> "ngram_jaccard_pairs",
-      "dedup_cluster_rep" -> "ngram_jaccard_pairs",
       "dedup_edit_blocked" -> "dedup_edit_blocked",
       "q_range_join" -> "range_band_sums",
       "text_lm_score" -> "text_lm_score",
@@ -90,5 +89,14 @@ class CacheLedgerSpec extends SparkSpec {
       assert(CacheLedger.registered.isEmpty, query)
       assert(cacheManager.isEmpty, s"$query left a cache entry")
     }
+    // dedup_cluster_rep keeps nothing: its lazy pairs go straight to
+    // ConnectedComponents.label, and the per-doc arrays they read are
+    // released once label returns
+    val rep = queries("dedup_cluster_rep")(spark, sf)
+    assert(CacheLedger.registered.isEmpty, "dedup_cluster_rep registered a frame")
+    assert(cacheManager.isEmpty, "dedup_cluster_rep returned with a cache entry")
+    rep.count()
+    assert(CacheLedger.registered.isEmpty && cacheManager.isEmpty,
+      "dedup_cluster_rep's action left a cache entry")
   }
 }

@@ -199,8 +199,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val ex = DedupQueries.explodedShingles(spark, sf)
     val freq2 = ex.groupBy($"gram").agg(count(lit(1)).as("df")).filter($"df" >= 2)
 
-    // the pre-r12 formulation, verbatim: collect_list(struct(df, gram))
-    // + per-doc array_sort + transform lambdas + 8 CASE-sum lanes
+    // the pre-r12 formulation, verbatim: df >= 2 aggregate left-joined
+    // back with coalesce(df, 1), collect_list(struct(df, gram)) + per-doc
+    // array_sort + transform lambdas + 8 CASE-sum lanes; the builder
+    // under test takes df from its own window over the same rows
     val sketchAggs = (0 until DedupQueries.SketchWords).map { w =>
       sum(expr(s"CASE WHEN s < ${DedupQueries.SketchMaxS} AND pmod(kg.gram, 32L) div 4 = " + w +
         " THEN shiftleft(1L, 16 * int(pmod(kg.gram, 32L) % 4)) ELSE 0L END")).as(s"sk$w")
@@ -224,7 +226,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
     // g's emission order is free (array_intersect consumer) — compare
     // it as a sorted multiset; prefix and sketch lanes must be exact
-    val now = key(DedupQueries.ngramDocArrays(ex, freq2), sortG = true)
+    val now = key(DedupQueries.ngramDocArrays(ex), sortG = true)
     val was = key(old, sortG = false) // old g is already sort_array'd
     assert(now.keySet === was.keySet)
     now.foreach { case (id, cell) => assert(cell === was(id), s"doc $id") }
@@ -239,7 +241,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     Seq("removed" -> ex.filter(!row), "duplicated" -> ex.union(ex.filter(row)))
       .foreach { case (what, broken) =>
         val e = intercept[org.apache.spark.SparkException](
-          DedupQueries.ngramDocArrays(broken, freq2).collect())
+          DedupQueries.ngramDocArrays(broken).collect())
         val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
           .map(_.toString).mkString("\n")
         assert(msgs.contains("IllegalStateException") && msgs.contains(s"doc_id $victim has"),

@@ -292,6 +292,43 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(s.contains("Filter"), s"caller filter disappeared:\n$s")
   }
 
+  // Tables.widened spreads a few-split scan over every core with a
+  // round-robin exchange. A graft_* kernel below that exchange runs in
+  // as many tasks as the scan has splits (one, for a small file) and,
+  // when a pushed-down filter copied it there, runs again above it.
+  // The walk enters adaptive plans, query stages and cached relations.
+  private def kernelsBelowRoundRobin(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }.flatMap(e => nodes(e.child)).flatMap(_.expressions.flatMap(_.collect {
+      case x if x.prettyName.startsWith("graft_") => x.prettyName
+    })).distinct
+  }
+
+  test("no graft_* kernel is evaluated below Tables.widened's round-robin exchange") {
+    val shingles = graft.operators.DedupQueries.explodedShingles(spark, sf)
+    assert(kernelsBelowRoundRobin(shingles).isEmpty,
+      s"explodedShingles hashes below the widening exchange:\n${fmt(shingles)}")
+    val bad = SparkEntry.queries.flatMap { case (name, q) =>
+      val found = try kernelsBelowRoundRobin(q(spark, sf))
+        finally { CacheLedger.releaseAll(); spark.catalog.clearCache() }
+      found.map(k => s"$name: $k")
+    }
+    assert(bad.isEmpty, s"kernels below a round-robin exchange: ${bad.mkString(", ")}")
+  }
+
   test("bigram LM shuffles gram scalars only — text never crosses an exchange") {
     // the model groupBy's exchange carries partial counts and the
     // scoring join's exchange carries (doc_id, g) instances; neither
