@@ -1,11 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-session recipe shared by the two driver-run mains
-  * (Bench and Verify) — the correctness dump and the benchmark must
+/** The ONE local-session recipe of every main that runs queries (Bench,
+  * Verify, PlanDump, PinHarness, perfbench's Driver) — they must all
   * run the SAME plans, so the sizing math and configs live here, not
   * copy-pasted per main (a tuning change applied to one would silently
-  * leave the other running different plans).
+  * leave the others running different plans).
   *
   * The recipe also sizes Spark's generated-class cache
   * (`spark.sql.codegen.cache.maxEntries`, see [[CodegenCacheEntries]]).
@@ -82,7 +82,6 @@ object Harness {
       }
     val spark = extra.foldLeft(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         dataSizedInitParts(sfDir, cpus.toInt).toString)

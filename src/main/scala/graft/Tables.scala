@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
-  * One parquet file per table under `sfDir`. All reads are plain
-  * `spark.read.parquet` so Catalyst owns pushdown + pruning.
+  * One parquet file per table under `sfDir`, read by [[table]] with a
+  * schema inferred once per table version; Catalyst owns pushdown + pruning.
   */
 object Tables {
 

@@ -180,7 +180,7 @@ case class BloomContains(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object BloomAgg {
+object BloomAgg extends NativeFunction {
   val Info: ExpressionInfo = new ExpressionInfo(
     classOf[BloomAgg].getCanonicalName, null, "graft_bloom_agg",
     "_FUNC_(hash, numBits) - bloom filter over 64-bit hashes as binary", "")
@@ -191,7 +191,7 @@ object BloomAgg {
   }
 }
 
-object BloomContains {
+object BloomContains extends NativeFunction {
   val Info: ExpressionInfo = new ExpressionInfo(
     classOf[BloomContains].getCanonicalName, null, "graft_bloom_contains",
     "_FUNC_(filter, hash) - true if hash may be in the bloom filter (no false negatives)", "")

@@ -110,7 +110,7 @@ case class BottomK(
     copy(keyExpr = newChildren(0), valueExpr = newChildren(1), kExpr = newChildren(2))
 }
 
-object BottomK {
+object BottomK extends NativeFunction {
 
   /** One sample entry: key as RAW UTF-8 BYTES so ordering is unsigned
     * byte-lexicographic — the collation Spark's UTF8String sort and

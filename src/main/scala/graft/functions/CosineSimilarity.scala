@@ -71,7 +71,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object CosineSimilarity {
+object CosineSimilarity extends NativeFunction {
   val Info: ExpressionInfo = new ExpressionInfo(
     classOf[CosineSimilarity].getCanonicalName, null, "graft_cosine",
     "_FUNC_(a, b) - cosine similarity of two float arrays", "")

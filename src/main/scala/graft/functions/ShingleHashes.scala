@@ -64,7 +64,7 @@ case class ShingleHashes(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-object ShingleHashes {
+object ShingleHashes extends NativeFunction {
 
   /** `xxhash64`'s default seed. */
   private val Seed = 42L

@@ -69,7 +69,7 @@ case class TextScanCounts(child: Expression)
     copy(child = newChild)
 }
 
-object TextScanCounts {
+object TextScanCounts extends NativeFunction {
 
   val Schema: StructType = StructType(Seq(
     StructField("chars", IntegerType, nullable = false),

@@ -117,7 +117,7 @@ case class TopFreq(
     copy(itemExpr = newChildren(0), kExpr = newChildren(1))
 }
 
-object TopFreq {
+object TopFreq extends NativeFunction {
 
   /** Item bytes are raw UTF-8 so tie-break ordering is unsigned
     * byte-lexicographic (Spark's binary comparator) — the collation of

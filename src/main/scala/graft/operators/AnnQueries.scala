@@ -32,7 +32,6 @@ object AnnQueries {
     * this corpus). */
   def annBruteforceTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     topKPerQuery(scoreAll(emb, querySet(emb)))
   }
@@ -51,7 +50,6 @@ object AnnQueries {
     * list_cosine_similarity with the label filter — hash-exact. */
   def embedHardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding", $"label")
     val queries = querySet(emb, $"label".as("qlabel"))
     topKPerQuery(scoreAll(emb, queries, $"label" =!= $"qlabel"))
@@ -64,7 +62,6 @@ object AnnQueries {
     * approximate recall is not SQL-expressible). */
   def annLshTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val bucketed = Similarity.hyperplaneBucketsDf(emb, "vec_id", "embedding", 16, 4)
       .join(emb, "vec_id")
@@ -99,7 +96,6 @@ object AnnQueries {
     * SQL-expressible). */
   def annMmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val base = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val corpus = base.union(Tables.nearDupTwins(base))
     // pool = exact top-MmrPool, ranked on scoreAll's scalars

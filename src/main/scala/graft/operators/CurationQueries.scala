@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{BottomK, GraftExtensions}
 import graft.text.TextFunctions
 
 /** Round-4 corpus-curation operators: RAG chunking, exact-substring
@@ -312,7 +313,6 @@ object CurationQueries {
     */
   def docsSourceCap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val Pack = 10000000000L // quality_bp * Pack + doc_id, both recoverable
     Tables.widened(Tables.documents(spark, dir))
       .select($"source", $"doc_id", TextFunctions.qualityScoreBp($"text").as("q_bp"))
@@ -329,7 +329,7 @@ object CurationQueries {
           lpad($"doc_id".cast("string"), 10, "0")).as("key"),
         ($"q_bp" * Pack + $"doc_id").as("packed"))
       .groupBy($"source")
-      .agg(call_function("graft_bottomk", $"key", $"packed", lit(3)).as("top"))
+      .agg(GraftExtensions.column(BottomK, $"key", $"packed", lit(3)).as("top"))
       .select($"source", posexplode($"top").as(Seq("pos", "s")))
       .select($"source", ($"pos" + 1).cast("long").as("rk"),
         ($"s.value" % Pack).as("doc_id"),

@@ -63,7 +63,6 @@ object DedupQueries {
     * gram-less docs. PlanSpec pins the shape. */
   private[graft] def explodedShingles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     Tables.widened(Tables.documents(spark, dir))
       .select($"doc_id", Similarity.shingleHashes($"text", 3).as("h"))
       .select($"doc_id", size($"h").as("s"), explode_outer($"h").as("gram"))
@@ -731,7 +730,6 @@ object DedupQueries {
     * with exact cosine. */
   def dedupEmbeddingCosine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val tau = 0.99
 
     val base = Tables.widened(Tables.embeddings(spark, dir)).select($"vec_id", $"embedding")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{BloomAgg, BloomContains, GraftExtensions, TopFreq}
 import graft.text.TextFunctions
 
 /** Frequency-sketch operators: SpaceSaving heavy hitters and
@@ -36,11 +37,10 @@ object HeavyHitterQueries {
     */
   def qHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val summary = Tables.widened(Tables.documents(spark, dir))
       .filter(length(trim($"text")) > 0)
       .select(explode(TextFunctions.wsTokens($"text")).as("token"))
-      .agg(expr("graft_topfreq(token, 4096)").as("hh"))
+      .agg(GraftExtensions.column(TopFreq, $"token", lit(4096)).as("hh"))
     summary
       .select(explode(slice($"hh", 1, 10)).as("e"))
       .select($"e.item".as("token"), $"e.cnt".as("cnt"))
@@ -64,18 +64,17 @@ object HeavyHitterQueries {
     */
   def qBloomPruneJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
 
     val cust = Tables.customer(spark, dir)
       .filter($"c_mktsegment" === "BUILDING")
       .select($"c_custkey")
 
     val bloom: Array[Byte] = cust
-      .agg(expr("graft_bloom_agg(xxhash64(c_custkey), 1048576)"))
+      .agg(GraftExtensions.column(BloomAgg, xxhash64($"c_custkey"), lit(1048576)))
       .head.getAs[Array[Byte]](0)
 
     val pruned = Tables.orders(spark, dir)
-      .filter(call_function("graft_bloom_contains", lit(bloom), xxhash64($"o_custkey")))
+      .filter(GraftExtensions.column(BloomContains, lit(bloom), xxhash64($"o_custkey")))
 
     pruned.join(cust, pruned("o_custkey") === cust("c_custkey"))
       .groupBy($"o_orderpriority")

@@ -60,7 +60,6 @@ object IvfQueries {
   def annIvfTopkWith(
       spark: SparkSession, dir: String, centroids: Array[Array[Float]]): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
 
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
 

@@ -113,7 +113,6 @@ object PipelineQueries {
     * equality with all-pairs brute force at sf0.001. */
   def textDecontaminateSemantic(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val tau = 0.99
     val base = Tables.widened(Tables.embeddings(spark, dir)).select($"vec_id", $"embedding")
     val eval = base.filter($"vec_id" % 20 === 0)

@@ -152,7 +152,6 @@ object PqQueries {
     // exact re-rank: fetch floats for shortlist vectors ONLY, score
     // with the codegen cosine kernel, report exact sims (unit-norm:
     // same convention as the other ANN queries)
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val reranked = shortlist
       .join(emb.select($"vec_id".as("vid"), $"embedding".as("cvec")), "vid")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{BottomK, GraftExtensions}
 
 /** Deterministic group-wise sampling (SURVEY §2 item 37): the k rows
   * per group with the smallest cryptographic-hash key — a consistent
@@ -20,10 +21,9 @@ object SampleQueries {
     * full SQL hash gate despite the custom aggregate. */
   def qSampleDeterministic(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     Tables.events(spark, dir)
       .groupBy($"event_type")
-      .agg(call_function("graft_bottomk",
+      .agg(GraftExtensions.column(BottomK,
         sha2($"event_id".cast("string"), 256), $"event_id", lit(5)).as("sample"))
       .select($"event_type", posexplode($"sample").as(Seq("pos", "s")))
       .select($"event_type", ($"pos" + 1).cast("long").as("rk"), $"s.value".as("event_id"))

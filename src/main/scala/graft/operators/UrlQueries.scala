@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{BottomK, GraftExtensions}
 import graft.text.UrlFunctions
 
 /** URL/domain curation (round 9) — the FIRST filter a real crawl
@@ -94,7 +95,6 @@ object UrlQueries {
     * (doc_id, source, n_chars). */
   def urlDomainStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     // n_chars rides the bottom-k value packed under the doc_id; the
     // pack requires n_chars in [0, 1e5) and doc_id in [0, 9.2e13) —
     // fail loudly instead of silently mis-summing (docs_source_cap
@@ -138,7 +138,7 @@ object UrlQueries {
         count(lit(1)).as("n_docs"),
         countDistinct($"host").as("n_hosts"),
         max($"is_ip").as("is_ip"),
-        call_function("graft_bottomk", $"key", $"packed", lit(DomainCap)).as("top"))
+        GraftExtensions.column(BottomK, $"key", $"packed", lit(DomainCap)).as("top"))
       .select($"domain",
         UrlFunctions.domainTld($"domain", $"is_ip").as("tld"),
         $"n_docs", $"n_hosts",

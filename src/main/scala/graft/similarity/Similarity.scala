@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.{CosineSimilarity, GraftExtensions, ShingleHashes}
+
 /** Similarity / sketching primitives for dedup and ANN, all as pure
   * Column expressions (no UDFs — everything stays inside whole-stage
   * codegen and scales map-side).
@@ -65,11 +67,9 @@ object Similarity {
   /** Distinct `xxhash64` values of the word n-grams of `text` under
     * `wordNgrams(TextFunctions.wsTokens(text), n)`, as `array<bigint>`
     * — the native expression graft.functions.ShingleHashes (one byte
-    * walk, no gram strings; distinct is taken on the hashes). Requires
-    * the graft extensions or `GraftExtensions.ensureRegistered`, like
-    * [[cosine]]. */
+    * walk, no gram strings; distinct is taken on the hashes). */
   def shingleHashes(text: Column, n: Int): Column =
-    call_function("graft_shingle_hashes", text, lit(n))
+    GraftExtensions.column(ShingleHashes, text, lit(n))
 
   /** k-permutation MinHash signature: element i is
     * min over grams of xxhash64(i, gram) — one draw per "permutation"
@@ -90,13 +90,9 @@ object Similarity {
   /** Exact cosine similarity of two FLOAT arrays — the native Catalyst
     * expression graft.functions.CosineSimilarity (codegen'd primitive
     * loop; bit-identical to `cosineHof`, which runs ~200 interpreted
-    * lambda calls per 64-dim pair). Resolved through the function
-    * registry: sessions built with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` have it;
-    * other sessions call `GraftExtensions.ensureRegistered(spark)` once
-    * (the graft operators do this themselves). */
+    * lambda calls per 64-dim pair). */
   def cosine(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
+    GraftExtensions.column(CosineSimilarity, a, b)
 
   /** Declarative (higher-order-function) cosine — kept as the
     * reference formulation the native expression is spec-checked

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.{GraftExtensions, TopFreq}
+
 /** Structured Streaming twins of the batch event operators (SURVEY
   * §2.7 item 30). The transformations are source-agnostic: they accept
   * any streaming (or batch) DataFrame with the events schema, so specs
@@ -137,9 +139,8 @@ object EventStreams {
     * overestimate bounds hold for the union of all batches. */
   def topFreq(events: DataFrame, itemCol: String, k: Int = 64): DataFrame = {
     import events.sparkSession.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(events.sparkSession)
     events
-      .agg(expr(s"graft_topfreq($itemCol, $k)").as("hh"))
+      .agg(GraftExtensions.column(TopFreq, col(itemCol), lit(k)).as("hh"))
       .select(explode($"hh").as("e"))
       .select($"e.item".as("item"), $"e.cnt".as("cnt"))
   }

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.{GraftExtensions, TextScanCounts}
+
 /** Text-analysis primitives for large-scale training-data pipelines.
   *
   * Everything here is a pure codegen'd Column expression (builtins +
@@ -28,10 +30,9 @@ object TextFunctions {
     * below projects a field of this struct, so a query using several of
     * them (qualityScoreBp + languageId in text_curate) pays ONE string
     * walk per row — whole-stage codegen's subexpression elimination
-    * dedups the identical struct calls. Requires the graft extensions
-    * (GraftExtensions / ensureRegistered), like Similarity.cosine. */
+    * dedups the identical struct calls. */
   private[graft] def scanCounts(text: Column): Column =
-    call_function("graft_text_counts", text)
+    GraftExtensions.column(TextScanCounts, text)
 
   /** Whitespace token count. Exactly `size(wsTokens(text))` including
     * the edges: Spark's `trim` removes only 0x20 spaces and

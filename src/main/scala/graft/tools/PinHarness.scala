@@ -31,7 +31,6 @@ object PinHarness {
     val dir = args(0)
     val spark = Harness.buildSession(dir, Harness.cpus)
     import spark.implicits._
-    graft.functions.GraftExtensions.ensureRegistered(spark)
 
     var failures = 0
     def pin(name: String)(body: => String): Unit = {

@@ -4,15 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftExtensions
-
 /** BottomK aggregate: equivalence with the rank-window formulation,
   * partitioning invariance (merge correctness), and null handling. */
 class BottomKSpec extends AnyFunSuite with SparkSpec {
 
   test("equals the rank-window formulation on real events; partitioning-invariant") {
     import spark.implicits._
-    GraftExtensions.ensureRegistered(spark)
     // (g, key, v) inputs: real events under sha2 hex keys, and
     // adversarial keys on one value where only the UTF-8 byte order
     // decides — the U+FF61 / U+1F600 pair (UTF-16 order would keep the
@@ -53,7 +50,6 @@ class BottomKSpec extends AnyFunSuite with SparkSpec {
 
   test("groups smaller than k return all rows; null keys/values skipped") {
     import spark.implicits._
-    GraftExtensions.ensureRegistered(spark)
     val df = Seq(
       ("a", Some(3L)), ("a", Some(1L)),
       ("b", Some(9L)), ("b", None)).toDF("g", "v")
@@ -68,7 +64,6 @@ class BottomKSpec extends AnyFunSuite with SparkSpec {
 
   test("k must be a positive literal") {
     import spark.implicits._
-    GraftExtensions.ensureRegistered(spark)
     val df = Seq(("a", 1L)).toDF("g", "v")
     assertThrows[Exception] {
       df.groupBy($"g")

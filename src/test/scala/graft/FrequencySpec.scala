@@ -13,12 +13,7 @@ import graft.operators.HeavyHitterQueries
 class FrequencySpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered(): Unit = {
-    graft.functions.GraftExtensions.ensureRegistered(spark)
-  }
-
   test("topfreq with capacity >= distinct is exact with zero error, any partitioning") {
-    registered()
     val items = (1 to 500).map(i => s"item${i % 13}")
     // adversarial keys tied on count, so only the UTF-8 byte order
     // decides their output order: the U+FF61 / U+1F600 pair (UTF-16
@@ -42,7 +37,6 @@ class FrequencySpec extends SparkSpec {
   }
 
   test("topfreq under eviction keeps SpaceSaving bounds: true <= cnt <= true + err") {
-    registered()
     // skewed stream: item0 x 400, item1 x 100, 200 singletons
     val items = Seq.fill(400)("hot0") ++ Seq.fill(100)("hot1") ++
       (1 to 200).map(i => s"rare$i")
@@ -64,7 +58,6 @@ class FrequencySpec extends SparkSpec {
   }
 
   test("bloom has no false negatives and prunes most non-members") {
-    registered()
     val members = (0L until 2000L).map(_ * 7L)
     val bloom = members.toDF("x")
       .agg(expr("graft_bloom_agg(xxhash64(x), 262144)"))
@@ -81,7 +74,6 @@ class FrequencySpec extends SparkSpec {
   }
 
   test("bloom merge across partitions equals single-partition build") {
-    registered()
     val df = (0L until 1000L).toDF("x")
     val one = df.coalesce(1).agg(expr("graft_bloom_agg(xxhash64(x), 65536)"))
       .head.getAs[Array[Byte]](0)

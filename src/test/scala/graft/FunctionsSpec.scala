@@ -45,17 +45,14 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(interp - expected) < 1e-15)
   }
 
-  test("null input yields null; ensureRegistered is idempotent") {
+  test("null input yields null") {
     import spark.implicits._
     val df = Seq((Some(Seq(1.0f, 2.0f)), Option.empty[Seq[Float]])).toDF("a", "b")
     val r = df.select(Similarity.cosine($"a", $"b").as("c")).collect()(0)
     assert(r.isNullAt(0))
-    GraftExtensions.ensureRegistered(spark)
-    GraftExtensions.ensureRegistered(spark) // second call is a no-op
   }
 
-  test("one ensureRegistered call restores all seven functions; a second changes nothing") {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+  test("operators run in a session without the seven functions and register none") {
     val session = spark.newSession()
     val registry = session.sessionState.functionRegistry
     val ids = GraftExtensions.Functions.map(_._1)
@@ -67,22 +64,16 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sessionState.functionRegistry.functionExists(ids.head),
       "dropping from the new session must not touch the shared one")
 
-    GraftExtensions.ensureRegistered(session)
-    ids.foreach(id => assert(registry.functionExists(id), s"$id not restored"))
-    val cos = session.sql("SELECT graft_cosine(array(CAST(1.0 AS FLOAT)), " +
-      "array(CAST(2.0 AS FLOAT)))").collect()(0).getDouble(0)
-    assert(cos === 1.0)
-
-    // a second call leaves every registered builder as it is — even
-    // one a caller replaced in between
-    val sentinel: Seq[Expression] => Expression = _ => Literal(42)
-    registry.registerFunction(ids.head, GraftExtensions.Functions.head._2, sentinel)
-    val builders = ids.map(id => registry.lookupFunctionBuilder(id).get)
-    val listed = registry.listFunction().size
-    GraftExtensions.ensureRegistered(session)
-    assert(ids.map(id => registry.lookupFunctionBuilder(id).get) === builders)
-    assert(registry.lookupFunctionBuilder(ids.head).get eq sentinel)
-    assert(registry.listFunction().size === listed)
+    // between them these reach every Column built from a graft
+    // function, and all seven functions
+    Seq("text_quality_score", "text_curate", "dedup_cluster_rep", "ann_bruteforce_topk",
+      "q_heavy_hitters", "q_bloom_prune_join", "url_domain_stats", "docs_source_cap",
+      "q_sample_deterministic").foreach { name =>
+      try SparkEntry.queries(name)(session, sf)
+        .write.format("noop").mode("overwrite").save()
+      finally CacheLedger.releaseAll()
+    }
+    ids.foreach(id => assert(!registry.functionExists(id), s"$id was registered"))
   }
 
   test("text scan counts: interpreted eval matches codegen; null yields null") {
@@ -98,7 +89,7 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
       (row.getInt(0), row.getInt(1), row.getInt(2), row.getInt(3), row.getInt(4),
         row.getArray(5).toIntArray.toSeq)
     }
-    // codegen path: through the registered function in a projection
+    // codegen path: through the built Column in a projection
     val fromDf = cases.toDF("t")
       .select(graft.text.TextFunctions.scanCounts(col("t")).as("c"))
       .collect().map { r =>
@@ -110,7 +101,5 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     val nullRow = Seq(Option.empty[String]).toDF("t")
       .select(graft.text.TextFunctions.scanCounts(col("t"))).collect()(0)
     assert(nullRow.isNullAt(0))
-    GraftExtensions.ensureRegistered(spark)
-    GraftExtensions.ensureRegistered(spark) // second call is a no-op
   }
 }

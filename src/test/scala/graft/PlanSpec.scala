@@ -144,7 +144,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bottom-k sample aggregates partially before the shuffle") {
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val s = fmt(graft.operators.SampleQueries.qSampleDeterministic(spark, sf))
     // TypedImperativeAggregate plans as ObjectHashAggregate; the
     // partial/final pair proves map-side combine (only k rows per
@@ -213,7 +212,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("heavy-hitters summary aggregates partially before the shuffle") {
-    graft.functions.GraftExtensions.ensureRegistered(spark)
     val s = fmt(graft.operators.HeavyHitterQueries.qHeavyHitters(spark, sf))
     assert(s.contains("partial_graft_topfreq"), s"no partial aggregation:\n$s")
   }

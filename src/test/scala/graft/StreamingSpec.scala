@@ -391,20 +391,23 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("streaming heavy hitters track exact counts across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[String]
-    val q = EventStreams.topFreq(in.toDF().toDF("item"), "item").writeStream
-      .format("memory").queryName("stream_hh").outputMode(OutputMode.Complete).start()
-    try {
-      def counts() = spark.table("stream_hh").as[(String, Long)].collect().toMap
-      in.addData("a", "b", "a", "c")
-      q.processAllAvailable()
-      assert(counts() === Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
-      // the stored summary merges with the next batch's partials —
-      // counts accumulate, they don't reset
-      in.addData("b", "b", "d")
-      q.processAllAvailable()
-      assert(counts() === Map("a" -> 2L, "b" -> 3L, "c" -> 1L, "d" -> 1L))
-    } finally q.stop()
+    // a column name that is not a SQL identifier is a name, not SQL text
+    for ((itemCol, sink) <- Seq("item" -> "stream_hh", "item id" -> "stream_hh_spaced")) {
+      val in = MemoryStream[String]
+      val q = EventStreams.topFreq(in.toDF().toDF(itemCol), itemCol).writeStream
+        .format("memory").queryName(sink).outputMode(OutputMode.Complete).start()
+      try {
+        def counts() = spark.table(sink).as[(String, Long)].collect().toMap
+        in.addData("a", "b", "a", "c")
+        q.processAllAvailable()
+        assert(counts() === Map("a" -> 2L, "b" -> 1L, "c" -> 1L), itemCol)
+        // the stored summary merges with the next batch's partials —
+        // counts accumulate, they don't reset
+        in.addData("b", "b", "d")
+        q.processAllAvailable()
+        assert(counts() === Map("a" -> 2L, "b" -> 3L, "c" -> 1L, "d" -> 1L), itemCol)
+      } finally q.stop()
+    }
   }
 
   test("session_window agg recovers state across a checkpoint restart; sink converges under redelivery") {
