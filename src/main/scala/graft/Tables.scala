@@ -103,17 +103,18 @@ object Tables {
     * serializing all downstream map work onto one core. Only widens when
     * the scan has FEWER splits than cores — at real scale the input
     * already has thousands of splits and this is an exact no-op (no
-    * shuffle); locally it costs one tiny exchange of the raw rows.
-    *
-    * The split count comes from the physical plan's RDD, which builds
-    * no job: `Dataset.rdd` would start a SQL execution per call (listener
-    * events, a formatted explain, a deserializer plan) to read the same
-    * number. */
+    * shuffle); locally it costs one tiny exchange of the raw rows. */
   def widened(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val splits = df.queryExecution.executedPlan.execute().getNumPartitions
-    if (splits >= target) df else df.repartition(target)
+    if (splits(df) >= target) df else df.repartition(target)
   }
+
+  /** The split count of a scan-rooted `df`, read from the physical
+    * plan's RDD, which builds no job: `Dataset.rdd` would start a SQL
+    * execution per call (listener events, a formatted explain, a
+    * deserializer plan) to read the same number. */
+  private[graft] def splits(df: DataFrame): Int =
+    df.queryExecution.executedPlan.execute().getNumPartitions
 
   /** Id offset for gate-corpus synthetic variants (planted copies,
     * mutants, upscales). Round 10 found the old 1e6 offset COLLIDING

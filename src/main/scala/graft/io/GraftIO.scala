@@ -340,6 +340,16 @@ object GraftIO {
     }
   }
 
+  /** Global (min, max) of `c` over a stats index, folded on the driver
+    * (a select over the local index runs no Spark job; an agg would).
+    * Null bounds are skipped, as min/max skip nulls; None if none are left. */
+  private[graft] def indexBounds(index: DataFrame, c: String): Option[(Long, Long)] = {
+    val rows = index.select(col(s"min_$c").cast("long"), col(s"max_$c").cast("long")).collect()
+    val mins = rows.filterNot(_.isNullAt(0)).map(_.getLong(0))
+    val maxs = rows.filterNot(_.isNullAt(1)).map(_.getLong(1))
+    if (mins.isEmpty || maxs.isEmpty) None else Some((mins.min, maxs.max))
+  }
+
   /** Flat data files of `path` — no subdirectories, underscore/dot
     * metadata names excluded: the ONE definition of what the
     * footer-based metadata readers may enumerate. None when the layout

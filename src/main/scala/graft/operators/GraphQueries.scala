@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Checkpoints
 import graft.similarity.ConnectedComponents
 
 /** Graph operators: connected components as a first-class query,
@@ -54,6 +55,19 @@ object GraphQueries {
   val PagerankIters = 5
   val PagerankTopN = 100
 
+  /** Above this edge count each round's rank frame takes a reliable
+    * checkpoint and nudges the cleaner: a 5-round chain otherwise keeps
+    * EVERY round's shuffle files live until the final action (shuffle
+    * files are freed only when the ContextCleaner sees their dependency
+    * GC'd, and mid-query nothing is collectible while the lineage
+    * references them) — at 1000x bench scale the accumulated rounds
+    * (~7 GB each) plus the layout build ran the disk out. Ranks are
+    * (id, long) scalars — node-count-sized, cheap to snapshot. Below
+    * the threshold the extra per-round job + GC would dominate the
+    * sub-second rounds, so small corpora skip it; GraphSpec pins both
+    * paths equal. */
+  private val PagerankCheckpointMinEdges: Long = 10_000_000L
+
   /** PageRank over the customer–supplier interaction graph (who
     * bought from whom, via orders ⋈ lineitem), the standard importance
     * signal for entity-centric curation (which suppliers/domains
@@ -71,8 +85,8 @@ object GraphQueries {
     * inside Long: total rank mass is ~n·10⁶ ≈ 1.6e13 at sf100.
     *
     * Plan at 100 TB: the canonical distributed PageRank — the edge
-    * list (with outdeg pre-joined) is persisted ONCE and hash-shuffled
-    * on src; each round is one co-partitioned join (ranks are keyed by
+    * list is persisted ONCE and hash-shuffled on src (outdeg is a
+    * node-sized cache of its own); each round is one co-partitioned join (ranks are keyed by
     * the same id) plus one partial-agg shuffle on dst, where map-side
     * combine absorbs hot-node skew (a popular supplier's incoming
     * contributions reduce inside each task before the exchange). Rank
@@ -82,19 +96,6 @@ object GraphQueries {
     * on this graph's ~2-hop diameter. The final top-N is
     * TakeOrderedAndProject (per-partition N, merge on the driver —
     * never a global sort). */
-  /** Above this edge count each round's rank frame takes a reliable
-    * checkpoint and nudges the cleaner: a 5-round chain otherwise keeps
-    * EVERY round's shuffle files live until the final action (shuffle
-    * files are freed only when the ContextCleaner sees their dependency
-    * GC'd, and mid-query nothing is collectible while the lineage
-    * references them) — at 1000x bench scale the accumulated rounds
-    * (~7 GB each) plus the layout build ran the disk out. Ranks are
-    * (id, long) scalars — node-count-sized, cheap to snapshot. Below
-    * the threshold the extra per-round job + GC would dominate the
-    * sub-second rounds, so small corpora skip it; GraphSpec pins both
-    * paths equal. */
-  private val PagerankCheckpointMinEdges: Long = 10_000_000L
-
   def graphPagerank(spark: SparkSession, dir: String): DataFrame =
     graphPagerank(spark, dir, PagerankCheckpointMinEdges)
 
@@ -113,12 +114,8 @@ object GraphQueries {
     * long; same arithmetic either way. */
   private def pagerankKeyType(spark: SparkSession, dir: String): String = {
     def keyBounds(path: String, c: String): (Long, Long) =
-      graft.io.GraftIO.footerStatsIndex(spark, path, Seq(c)).flatMap { idx =>
-        val rows = idx.collect()
-        val mins = rows.map(_.getAs[Any](s"min_$c")).collect { case n: Number => n.longValue }
-        val maxs = rows.map(_.getAs[Any](s"max_$c")).collect { case n: Number => n.longValue }
-        if (mins.isEmpty || maxs.isEmpty) None else Some((mins.min, maxs.max))
-      }.getOrElse {
+      graft.io.GraftIO.footerStatsIndex(spark, path, Seq(c))
+        .flatMap(graft.io.GraftIO.indexBounds(_, c)).getOrElse {
         val r = spark.read.parquet(path)
           .agg(min(col(c)).cast("long").as("mn"), max(col(c)).cast("long").as("mx")).first()
         if (r.isNullAt(0)) (Long.MinValue, Long.MaxValue) else (r.getLong(0), r.getLong(1))
@@ -216,27 +213,10 @@ object GraphQueries {
     deg.count()
     val checkpointRounds = edgeCount >= ckptMinEdges
 
-    val sc = spark.sparkContext
-    if (checkpointRounds && sc.getCheckpointDir.isEmpty) {
-      // same contract as ConnectedComponents: clusters must point the
-      // checkpoint dir at durable SHARED storage; local sessions fall
-      // back to a session-temp dir
-      require(sc.isLocal,
-        "pagerank checkpoints each round above " + ckptMinEdges + " edges: call " +
-          "SparkContext.setCheckpointDir on durable SHARED storage before running on a cluster")
-      sc.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_pr_ckpt").toString)
-    }
-    def deleteCheckpoint(file: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-
     // r0 over all nodes: distinct on the cache's own partitioning key —
     // no exchange (every node appears as a src in the undirected layout)
     var ranks = edges.select($"src".as("id")).distinct()
       .select($"id", lit(1000000L).as("r"))
-    var prevCheckpoint: Option[String] = None
     (1 to PagerankIters).foreach { _ =>
       // per-NODE contribution first: r div outdeg on the rank table —
       // a node-sized shuffle_hash join against the cached degree
@@ -267,25 +247,21 @@ object GraphQueries {
       // memory-resident (see above) — on a single box the rounds are
       // CPU-bound on the two hash-aggregate passes, which is exactly
       // the axis a multi-executor cluster parallelizes away.
-      ranks = edges
+      val round = edges
         .join(contribs.hint("shuffle_hash"), "src")
         .groupBy($"dst".as("id"))
         .agg(sum($"c").as("s"))
         .select($"id", (lit(150000L) + expr("(85 * s) div 100")).as("r"))
-      if (checkpointRounds) {
-        val cached = ranks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val next = cached.checkpoint() // eager; cache keeps the write pass from re-running the round
-        cached.unpersist()
-        prevCheckpoint.foreach(deleteCheckpoint)
-        prevCheckpoint = graft.similarity.ConnectedComponents.checkpointFileOf(
-          next.queryExecution.toRdd)
+      ranks = if (!checkpointRounds) round else {
+        val next = Checkpoints.cut(round)
+        Checkpoints.retire(ranks) // the round before: last read by the cut
         // the now-dead round's shuffle dependency is only reclaimed when
         // the driver GC notices it — on a mostly-empty multi-GB bench
         // heap that never happens inside one query, so nudge it (the
         // cleaner then deletes the files asynchronously); costs one
         // driver GC per round, noise next to a checkpointed round
         System.gc()
-        ranks = next
+        next
       }
     }
     // every node keeps outdeg >= 1 in the undirected graph, so each
@@ -302,7 +278,7 @@ object GraphQueries {
     deg.unpersist()
     // the result is on the driver now — the final round's checkpoint
     // files no longer back anything
-    prevCheckpoint.foreach(deleteCheckpoint)
+    Checkpoints.retire(ranks)
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       .orderBy($"rank_u".desc, $"id")
   }

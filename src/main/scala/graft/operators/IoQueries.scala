@@ -37,7 +37,7 @@ object IoQueries {
     val li = Tables.lineitem(spark, dir).select(cols.map(col): _*)
     val out = tmpDir("dsv", dir)
     val cores = spark.sparkContext.defaultParallelism
-    val chunks = if (li.rdd.getNumPartitions >= cores) 0 else cores
+    val chunks = if (Tables.splits(li) >= cores) 0 else cores
     GraftIO.write(li, out, GraftIO.Dsv, gzip = true, sep = "|",
       chunks = chunks)
     GraftIO.read(spark, out, GraftIO.Dsv, sep = "|", schema = Some(li.schema))
@@ -73,21 +73,15 @@ object IoQueries {
     // metadata-sized (file count grows linearly, as any real lake
     // layout does). Pruning SELECTIVITY only sharpens with more files;
     // the returned rows are identical either way.
-    val files = math.max(16, li.rdd.getNumPartitions / 2)
+    val files = math.max(16, Tables.splits(li) / 2)
     GraftIO.writeZOrdered(li, out, Seq("l_orderkey", "l_partkey"), files = files)
     val index = GraftIO.buildStatsIndex(spark, out, Seq("l_orderkey", "l_partkey"))
 
     // the middle fifth of the part-key space — a selective range on the
     // NON-leading z dimension, where a linear layout couldn't skip.
-    // Global min/max come from the stats index (min of file minima =
-    // global min): the index is a local frame on the driver, so this
-    // replaces a full extra scan of the source with arithmetic over
-    // file rows — a select over it runs no Spark job, an agg would.
-    // Null bounds (an all-null file) are skipped, as min/max skip them.
-    val bounds = index.select($"min_l_partkey".cast("long"), $"max_l_partkey".cast("long"))
-      .collect()
-    val lo = bounds.filterNot(_.isNullAt(0)).map(_.getLong(0)).min
-    val hi = bounds.filterNot(_.isNullAt(1)).map(_.getLong(1)).max
+    // Global min/max come from the stats index, not a scan of the source.
+    val (lo, hi) = GraftIO.indexBounds(index, "l_partkey")
+      .getOrElse(throw new IllegalStateException("io_stats_prune_scan: l_partkey is all null"))
     val (qLo, qHi) = (lo + (hi - lo) * 2 / 5, lo + (hi - lo) * 3 / 5)
 
     GraftIO.readPruned(spark, index, "l_partkey", qLo, qHi)

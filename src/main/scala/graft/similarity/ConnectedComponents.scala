@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.plans.Checkpoints
+
 /** Bounded label-propagation connected components over an undirected
   * edge list — the cluster-assembly step of the dedup pipelines.
   *
@@ -17,8 +19,9 @@ import org.apache.spark.storage.StorageLevel
   * high-diameter 100 TB graph's round count bounded. Duplicate
   * clusters are near-cliques (diameter 1-2), so a small fixed bound
   * is exact in practice AND caps cost at scale — an unbounded loop on
-  * 100 TB would be a runaway job. Each round is persisted and the
-  * previous round unpersisted so lineage stays flat.
+  * 100 TB would be a runaway job. Each round cuts its lineage with
+  * [[graft.plans.Checkpoints]], which also frees the round before it,
+  * so plan and DAG stay flat.
   */
 object ConnectedComponents {
 
@@ -122,40 +125,13 @@ object ConnectedComponents {
     // string for the SQL listener. An RDD-only re-root fixes the plan
     // but still deepens the RDD DAG ~10 nodes per round until task
     // deserialization overflows the stack on deep graphs. A reliable
-    // checkpoint per round — the GraphX/GraphFrames approach — cuts
-    // both: O(1) plan and DAG at any iteration count. Clusters MUST
-    // setCheckpointDir on durable shared storage (executors on other
-    // nodes cannot read a driver-local path — fail fast rather than
-    // file-not-found deep in the loop); local sessions fall back to a
-    // session-temp dir.
-    val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty) {
-      require(sc.isLocal,
-        "connected components takes a reliable checkpoint per iteration: call " +
-          "SparkContext.setCheckpointDir on durable SHARED storage before labeling " +
-          "on a cluster (a driver-local fallback dir would be unreadable from executors)")
-      sc.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString)
-    }
-    def deleteCheckpoint(file: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    var seedPersist: Option[DataFrame] = Some(labels)
-    // the previous round's checkpoint files: dead once `labels` is
-    // reassigned, and the ContextCleaner does NOT collect checkpoints
-    // (spark.cleaner.referenceTracking.cleanCheckpoints defaults to
-    // false) — without eager deletion a long loop strands one full
-    // labels snapshot per round for the session lifetime
-    var prevCheckpoint: Option[String] = None
+    // checkpoint per round (Checkpoints.cut) — the GraphX/GraphFrames
+    // approach — cuts both: O(1) plan and DAG at any iteration count.
     var converged = false
     var i = 0
     while (i < maxIter && !converged) {
       // candidate labels flowing along edges, then keep the min per id.
-      // Persisted: the pointer jump below references this frame twice
-      // (and the checkpoint's write pass re-reads blocks instead of
-      // re-running the join+union+aggregation stage — the documented
-      // RDD.checkpoint recompute caveat).
+      // Persisted: the pointer jump below references this frame twice.
       val prop = adj
         .join(labels.withColumnRenamed("id", "dst"), "dst")
         .select($"src".as("id"), $"component")
@@ -175,21 +151,15 @@ object ConnectedComponents {
       // extra NODE-sized self-join (trivial next to the edge join).
       // Dup-cluster callers (diameter 1-2, seed-converged) still run
       // their single confirming pass.
-      val cached = prop
+      val next = Checkpoints.cut(prop
         .join(prop.select($"id".as("jid"), $"component".as("jc")),
           $"component" === $"jid", "left")
         .select($"id",
-          least($"component", coalesce($"jc", $"component")).as("component"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val next = cached.checkpoint() // eager: materializes this round and cuts lineage
+          least($"component", coalesce($"jc", $"component")).as("component")))
       prop.unpersist()
       val changed = next.join(labels.withColumnRenamed("component", "old"), "id")
         .filter($"component" =!= $"old").limit(1).count()
-      cached.unpersist() // checkpoint files back `next` from here on
-      seedPersist.foreach(_.unpersist())
-      seedPersist = None
-      prevCheckpoint.foreach(deleteCheckpoint)
-      prevCheckpoint = checkpointFileOf(next.queryExecution.toRdd)
+      Checkpoints.retire(labels) // last read above: the seed or the previous round
       labels = next
       converged = changed == 0
       i += 1
@@ -200,8 +170,7 @@ object ConnectedComponents {
       val msg = s"connected components did not converge within $maxIter iterations; " +
         "labels are partially propagated (some high-diameter component is still split)"
       if (strict) {
-        labels.unpersist()
-        prevCheckpoint.foreach(deleteCheckpoint) // result discarded — free its files too
+        Checkpoints.retire(labels) // result discarded — free its files too
         throw new IllegalStateException(msg)
       }
       org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
@@ -211,13 +180,6 @@ object ConnectedComponents {
     // storage lifecycle)
     Result(labels, converged, i)
   }
-
-  /** The checkpoint file backing an RDD, if any — walks dependencies to
-    * the ReliableCheckpointRDD a checkpointed Dataset wraps. Shared by
-    * the other per-round-checkpointing iterative operator (PageRank). */
-  private[graft] def checkpointFileOf(rdd: org.apache.spark.rdd.RDD[_]): Option[String] =
-    rdd.getCheckpointFile.orElse(
-      rdd.dependencies.iterator.flatMap(d => checkpointFileOf(d.rdd)).nextOption())
 
   /** Exact union-find over a collected edge list: component = minimum
     * reachable id (path compression + union by min keeps the invariant

@@ -50,15 +50,20 @@ object PinHarness {
     }
 
     // ---- exact near-dup ground truth shared by the minhash pin ----
+    // A pair sharing no 3-gram has Jaccard 0 < tau, so a join on shared
+    // (distinct) grams counts `inter` for every pair that can pass, and
+    // uni = |a| + |b| - inter. Independent of dedup_ngram_jaccard.
     def exactJaccardPairs(tau: Double): Set[(Long, Long)] = {
-      val docs = Tables.documents(spark, dir)
+      val grams = Tables.documents(spark, dir)
         .select($"doc_id", Similarity.wordNgrams(TextFunctions.wsTokens($"text"), 3).as("g"))
-        .filter(size($"g") > 0)
-      docs.as("a").crossJoin(docs.as("b"))
-        .filter($"a.doc_id" < $"b.doc_id")
-        .withColumn("inter", size(array_intersect($"a.g", $"b.g")).cast("double"))
-        .filter($"inter" / (size($"a.g") + size($"b.g") - $"inter") >= tau)
-        .select($"a.doc_id", $"b.doc_id")
+        .select($"doc_id", size($"g").as("n"), explode($"g").as("gram"))
+      val a = grams.toDF("id_a", "n_a", "gram")
+      val b = grams.toDF("id_b", "n_b", "gram")
+      a.join(b, "gram").filter($"id_a" < $"id_b")
+        .groupBy($"id_a", $"id_b", $"n_a", $"n_b")
+        .agg(count(lit(1)).cast("double").as("inter"))
+        .filter($"inter" / ($"n_a" + $"n_b" - $"inter") >= tau)
+        .select($"id_a", $"id_b")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
 

@@ -25,6 +25,16 @@ class GraphSpec extends SparkSpec {
     20L -> 20L, 21L -> 20L, 22L -> 20L,
     30L -> 30L, 31L -> 30L)
 
+  /** The `rdd-*` checkpoint dirs now in the session's checkpoint dir. */
+  private def rddDirs(): Set[String] = {
+    // getCheckpointDir is fs-qualified ("file:/tmp/...") — strip the
+    // scheme for the local listing
+    val dir = spark.sparkContext.getCheckpointDir
+      .map(s => new java.io.File(new java.net.URI(s).getPath))
+    dir.flatMap(d => Option(d.list())).map(_.filter(_.startsWith("rdd-")).toSet)
+      .getOrElse(Set.empty)
+  }
+
   test("driver union-find labels every vertex with its component minimum") {
     val r = ConnectedComponents.labelWithStatus(edges)
     assert(r.converged)
@@ -71,14 +81,6 @@ class GraphSpec extends SparkSpec {
     // pointer jumping converges diameter 30 in a handful of rounds —
     // use a longer chain so several checkpointed rounds actually run
     val chain = (0L until 3000L).map(i => (i, i + 1)).toDF("src", "dst")
-    def rddDirs(): Set[String] = {
-      // getCheckpointDir is fs-qualified ("file:/tmp/...") — strip the
-      // scheme for the local listing
-      val dir = spark.sparkContext.getCheckpointDir
-        .map(s => new java.io.File(new java.net.URI(s).getPath))
-      dir.flatMap(d => Option(d.list())).map(_.filter(_.startsWith("rdd-")).toSet)
-        .getOrElse(Set.empty)
-    }
     val before = rddDirs()
     val r = ConnectedComponents.labelWithStatus(chain, maxIter = 64, driverThreshold = -1L)
     assert(r.iterations >= 5)
@@ -94,10 +96,13 @@ class GraphSpec extends SparkSpec {
     val r = ConnectedComponents.labelWithStatus(path, maxIter = 2, driverThreshold = -1L)
     assert(!r.converged)
     r.labels.unpersist()
+    // the discarded result frees its checkpoint files too
+    val before = rddDirs()
     assertThrows[IllegalStateException] {
       ConnectedComponents.labelWithStatus(path, maxIter = 2, strict = true,
         driverThreshold = -1L)
     }
+    assert((rddDirs() -- before).isEmpty, "strict failure left a round's checkpoint behind")
   }
 
   test("graph_components gate query: components of the doubling graph") {
@@ -138,9 +143,12 @@ class GraphSpec extends SparkSpec {
     assert(got == expectedTop)
 
     // the large-graph path (per-round reliable checkpoints, threshold
-    // forced to 0) must produce the identical ranking
+    // forced to 0) must produce the identical ranking, and free every
+    // round's checkpoint: the result is on the driver
+    val before = rddDirs()
     val gotCkpt = operators.GraphQueries.graphPagerank(spark, sf, ckptMinEdges = 0L)
       .as[(Long, Long)].collect().toSeq
     assert(gotCkpt == expectedTop)
+    assert((rddDirs() -- before).isEmpty, "pagerank left a round's checkpoint behind")
   }
 }
