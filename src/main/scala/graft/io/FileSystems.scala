@@ -134,7 +134,7 @@ class FileSystems(conf: Configuration) {
   def create(path: String, overwrite: Boolean = true): java.io.OutputStream =
     fs(path).create(new Path(path), overwrite)
 
-  /** Read a whole file as UTF-8 text (test/debug convenience). */
+  /** Read a whole file as UTF-8 text. */
   def readString(path: String): String = {
     val in = open(path)
     try new String(in.readAllBytes(), "UTF-8") finally in.close()

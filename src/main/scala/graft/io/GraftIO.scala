@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -107,10 +107,7 @@ object GraftIO {
     // SaveMode.Ignore on an existing target is a NO-OP save — the
     // sidecar must not be rewritten with the ignored frame's schema
     // (it describes data that was never written)
-    val ignoredNoop = mode == SaveMode.Ignore && {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).exists(p)
-    }
+    val ignoredNoop = mode == SaveMode.Ignore && FileSystems(df.sparkSession).exists(path)
     applyFormat(withMax, format, gzip, sep, header).options(options).save(path)
     if (partitionBy.nonEmpty && !ignoredNoop) writeSchemaSidecar(df, path, partitionBy)
   }
@@ -129,42 +126,42 @@ object GraftIO {
     * One driver-side metadata file per write — no data-path cost. */
   private val SchemaSidecar = "_graft_schema.json"
 
+  private def sidecarPath(path: String): String =
+    new org.apache.hadoop.fs.Path(path, SchemaSidecar).toString
+
   private def writeSchemaSidecar(
       df: DataFrame, path: String, partitionBy: Seq[String]): Unit = {
     val jq = graft.logging.JsonLogger.quote _
-    val payload =
-      s"""{"partitionBy":${partitionBy.map(jq).mkString("[", ",", "]")},"schema":${df.schema.json}}"""
-    val p = new org.apache.hadoop.fs.Path(path, SchemaSidecar)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    FileSystems(df.sparkSession).writeString(sidecarPath(path),
+      s"""{"partitionBy":${partitionBy.map(jq).mkString("[", ",", "]")},"schema":${df.schema.json}}""")
   }
 
   /** Read-side half of the sidecar contract: the writer's schema and
     * partition-column list, if a sidecar exists at `path`. */
   private def readSchemaSidecar(
       spark: SparkSession, path: String): Option[(StructType, Seq[String])] = {
-    val p = new org.apache.hadoop.fs.Path(path, SchemaSidecar)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val fss = FileSystems(spark)
+    if (!fss.exists(sidecarPath(path))) return None
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val j = JsonMethods.parse(text)
+    val j = JsonMethods.parse(fss.readString(sidecarPath(path)))
     val parts = (j \ "partitionBy").children.collect { case JString(s) => s }
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(JsonMethods.compact(j \ "schema")).asInstanceOf[StructType]
+    val schema = DataType.fromJson(JsonMethods.compact(j \ "schema")).asInstanceOf[StructType]
     Some((schema, parts))
   }
 
+  /** The timestamp text of graft's dsv and jsonlines bytes: one
+    * pattern for both, microsecond precision. */
+  private val TimestampPattern = "yyyy-MM-dd HH:mm:ss[.SSSSSS]"
+
+  /** The dsv options the writer and both read paths share. */
+  private def dsvOptions(sep: String): Map[String, String] =
+    Map("sep" -> sep, "escape" -> "\\", "timestampFormat" -> TimestampPattern)
+
   /** The per-format writer configuration — the SINGLE definition of
     * what this library's dsv/jsonlines/parquet/orc bytes look like,
-    * shared by `write` and `writeBucketed` so a bucketed dsv table is
-    * byte-compatible with every other dsv written here.
+    * shared by `write` and the parquet layout writers (`writeBucketed`,
+    * `writeZOrdered`). `sep` and `header` apply to dsv only.
     *
     * Dsv defaults quote an empty string as `""` and write null as an
     * unquoted empty field — which is exactly what makes the roundtrip
@@ -172,7 +169,7 @@ object GraftIO {
     * codec; zlib is the same DEFLATE stream. */
   private def applyFormat[T](
       w: org.apache.spark.sql.DataFrameWriter[T],
-      format: Format, gzip: Boolean, sep: String, header: Boolean)
+      format: Format, gzip: Boolean, sep: String = "", header: Boolean = false)
       : org.apache.spark.sql.DataFrameWriter[T] = format match {
     case Parquet => w.format("parquet")
       .option("compression", if (gzip) "gzip" else "snappy")
@@ -182,12 +179,12 @@ object GraftIO {
     // but the member index makes the READ side splittable, which
     // plain one-stream gzip text can never be (guide §6)
     case Dsv => w.format("csv")
-      .option("sep", sep).option("header", header.toString)
-      .option("escape", "\\")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+      .options(dsvOptions(sep)).option("header", header.toString)
       .option("compression", if (gzip) classOf[MemberGzipCodec].getName else "none")
+    // reads leave timestampFormat unset: Spark's default parser reads
+    // this pattern, and stays lenient for foreign jsonlines
     case JsonLines => w.format("json")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+      .option("timestampFormat", TimestampPattern)
       .option("compression", if (gzip) classOf[MemberGzipCodec].getName else "none")
     case Orc => w.format("orc")
       .option("compression", if (gzip) "zlib" else "snappy")
@@ -204,7 +201,8 @@ object GraftIO {
     * At 100 TB this is the difference between re-shuffling the fact
     * table on every join and shuffling it ONCE at ingest: size
     * `buckets` so a bucket's largest key-slice fits an executor
-    * (buckets × target-file-size ≈ table size).
+    * (buckets × target-file-size ≈ table size). Writes snappy parquet,
+    * replacing any existing table data.
     */
   def writeBucketed(
       df: DataFrame,
@@ -212,12 +210,7 @@ object GraftIO {
       path: String,
       bucketCols: Seq[String],
       buckets: Int,
-      sortCols: Seq[String] = Nil,
-      format: Format = Parquet,
-      gzip: Boolean = false,
-      sep: String = "\t",
-      header: Boolean = true,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
+      sortCols: Seq[String] = Nil): Unit = {
     require(bucketCols.nonEmpty, "`bucketCols` must not be empty")
     // Align write tasks with buckets (repartition uses the same
     // Murmur3 HashPartitioning as the bucket-id function): each bucket
@@ -226,10 +219,10 @@ object GraftIO {
     // files per bucket Spark must re-sort before a merge join, which
     // forfeits half the point of the layout.
     val aligned = df.repartition(buckets, bucketCols.map(col): _*)
-    val w0 = aligned.write.mode(mode).option("path", path)
+    val w0 = aligned.write.mode(SaveMode.Overwrite).option("path", path)
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
     val w1 = if (sortCols.nonEmpty) w0.sortBy(sortCols.head, sortCols.tail: _*) else w0
-    applyFormat(w1, format, gzip, sep, header).saveAsTable(table)
+    applyFormat(w1, Parquet, gzip = false).saveAsTable(table)
   }
 
   /** Z-order clustered write — multi-dimensional data clustering for
@@ -246,18 +239,15 @@ object GraftIO {
     * pass, codegen'd `width_bucket` per row. Heavily skewed columns
     * would want quantile boundaries instead; the interleave is
     * unchanged. ZOrderSpec measures the actual file-skipping: both
-    * clustered dimensions prune, and the linear layout doesn't.
+    * clustered dimensions prune, and the linear layout doesn't. Writes
+    * snappy parquet (the format [[buildStatsIndex]] and [[readPruned]]
+    * read), replacing anything at `path`.
     */
   def writeZOrdered(
       df: DataFrame,
       path: String,
       zCols: Seq[String],
-      files: Int,
-      format: Format = Parquet,
-      gzip: Boolean = false,
-      sep: String = "\t",
-      header: Boolean = true,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
+      files: Int): Unit = {
     require(zCols.size >= 2,
       s"z-ordering needs >= 2 columns (one column is a plain range sort), got $zCols")
     // 8 dims x 8 bits is the 64-bit ceiling: bit j of dimension d lands
@@ -301,7 +291,7 @@ object GraftIO {
       .repartitionByRange(files, col("__zorder"))
       .sortWithinPartitions("__zorder")
       .drop("__zorder")
-    applyFormat(out.write.mode(mode), format, gzip, sep, header).save(path)
+    applyFormat(out.write.mode(SaveMode.Overwrite), Parquet, gzip = false).save(path)
   }
 
   /** Per-file min/max statistics index over `statCols` — the metadata
@@ -350,28 +340,27 @@ object GraftIO {
     if (mins.isEmpty || maxs.isEmpty) None else Some((mins.min, maxs.max))
   }
 
-  /** Flat data files of `path` — no subdirectories, underscore/dot
-    * metadata names excluded: the ONE definition of what the
-    * footer-based metadata readers may enumerate. None when the layout
-    * has real subdirectories (a flat listing would silently SUBSET a
+  /** Whether a listed name is a data file: underscore/dot names are
+    * metadata (`_SUCCESS`, the schema sidecar, Hadoop's `.name.crc`
+    * checksums, staging directories). */
+  private def isDataName(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  private def fileName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  /** Flat data files of `path` (a directory, or a single file) — the
+    * ONE definition of what the footer-based metadata readers and the
+    * member-split gzip read may enumerate. None when the layout has
+    * real subdirectories (a flat listing would silently SUBSET a
     * partitioned/appended tree), cannot be listed, or holds no data
     * files. */
   private def flatDataFiles(
-      spark: SparkSession, path: String): Option[Array[org.apache.hadoop.fs.FileStatus]] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, path: String): Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
     val entries =
-      try fs.listStatus(root)
+      try FileSystems(spark).ls(path)
       catch { case _: java.io.FileNotFoundException => return None }
-    if (entries.exists(st => st.isDirectory &&
-        !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))) {
-      return None
-    }
-    val files = entries.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (files.isEmpty) None else Some(files)
+    val data = entries.filter(st => isDataName(st.getPath.getName))
+    if (data.isEmpty || data.exists(_.isDirectory)) None else Some(data)
   }
 
   /** Total row count of a flat parquet directory from FOOTER metadata
@@ -607,16 +596,10 @@ object GraftIO {
       s"outPath must differ from path ($path): Overwrite would delete the source before reading it")
     val fss = FileSystems(spark)
     // one listing pass carries the lengths — no per-file RPC.
-    // Metadata files (_SUCCESS, checksums, the schema sidecar — any
-    // underscore/dot-prefixed name) must not count as data: their
-    // bytes would inflate the file-count math at a targetBytes
-    // boundary.
+    // Metadata files must not count as data: their bytes would
+    // inflate the file-count math at a targetBytes boundary.
     val totalBytes = fss.findStatus(path)
-      .filterNot { case (f, _) =>
-        val name = f.substring(f.lastIndexOf('/') + 1)
-        name.startsWith("_") || name.startsWith(".") || f.endsWith(".crc")
-      }
-      .map(_._2).sum
+      .collect { case (f, len) if isDataName(fileName(f)) => len }.sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
     require(nFiles <= Int.MaxValue,
       s"targetBytes $targetBytes implies $nFiles output files; raise the target")
@@ -727,10 +710,7 @@ object GraftIO {
     // repaired by the retry, not here)
     try {
     // manifest pass: map each written part file to its target name
-    val partFiles = fss.find(tmp).filter { f =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      name.startsWith("part-") && !name.endsWith(".crc")
-    }
+    val partFiles = fss.find(tmp).filter(f => isDataName(fileName(f)))
     val renames = partFiles.map { f =>
       // only our own key dirs (robust to '=' in user path segments and
       // to scheme-prefixed paths from find)
@@ -757,38 +737,34 @@ object GraftIO {
       require(fs.size == 1,
         s"${fs.size} part files map to $target — one task wrote several files for one chunk")
     }
-    renames.foreach { case (f, _, _, target) =>
+    def place(src: String, target: String, put: (String, String) => Boolean): Unit = {
       fss.mkdirs(new org.apache.hadoop.fs.Path(target).getParent.toString)
       fss.rm(target)
-      require(fss.mv(f, target), s"rename failed: $f -> $target")
+      require(put(src, target), s"placing failed: $src -> $target")
     }
+    renames.foreach { case (f, _, _, target) => place(f, target, fss.mv) }
 
     // a (tuple, chunk) with no rows produces no file in a partitioned
     // write; the per-tuple version wrote an empty file — preserve that
     // for every tuple that appeared at all (and for the root when
-    // unpartitioned, so a single-dir export always yields all names)
-    val seenTuples: Set[Seq[Any]] =
-      if (partitionBy.isEmpty) Set(Nil) else renames.map(_._2).toSet
+    // unpartitioned, so a single-dir export always yields all names).
+    // Every such file is the same empty write of the same frame, so
+    // ONE template is written and copied to each missing name.
+    val seenTuples: Seq[Seq[Any]] =
+      if (partitionBy.isEmpty) Seq(Nil) else renames.map(_._2).distinct
     val seenFiles = renames.map { case (_, values, chunkIdx, _) => (values, chunkIdx) }.toSet
-    val emptySchema = (if (dropPartitions) df.drop(partitionBy: _*) else df).limit(0)
-    for {
+    val missing = for {
       values <- seenTuples
       i <- 0 until n
       if !seenFiles.contains((values, i))
-    } {
-      val target = transformer(path, partitionBy, values, suffixes(i))
-      val etmp = target + s".__graft_tmp_$i"
-      write(emptySchema.coalesce(1), etmp, format, gzip, sep, header)
-      val partFile = fss.find(etmp)
-        .filter { f =>
-          val name = f.substring(f.lastIndexOf('/') + 1)
-          name.startsWith("part-") && !name.endsWith(".crc")
-        }
-        .ensuring(_.nonEmpty, s"no part file written under $etmp").head
-      fss.mkdirs(new org.apache.hadoop.fs.Path(target).getParent.toString)
-      fss.rm(target)
-      require(fss.mv(partFile, target), s"rename failed: $partFile -> $target")
-      fss.rm(etmp)
+    } yield transformer(path, partitionBy, values, suffixes(i))
+    if (missing.nonEmpty) {
+      val etmp = s"$tmp/_empty"
+      val emptyFrame = (if (dropPartitions) df.drop(partitionBy: _*) else df).limit(0)
+      write(emptyFrame.coalesce(1), etmp, format, gzip, sep, header)
+      val template = fss.find(etmp).find(f => isDataName(fileName(f)))
+        .getOrElse(throw new IllegalStateException(s"no part file written under $etmp"))
+      missing.foreach(place(template, _, fss.cp))
     }
     } finally fss.rm(tmp)
   }
@@ -820,7 +796,8 @@ object GraftIO {
     * flat directory (driver-side, one listing — same cost the normal
     * reader pays), probe ONE file for the MemberGzip framing, then
     * index and decode the members in TASKS: indexing hops headers with
-    * one positioned read per member (no decompression), and decoded
+    * one positioned read per member (no decompression; the local file
+    * list already scans as min(files, cores) slices), and decoded
     * members are spread round-robin so read parallelism is bounded by
     * member count (~1 MiB each), not file count. None whenever the
     * layout is not a flat directory of framed .gz files — the caller
@@ -830,26 +807,16 @@ object GraftIO {
       spark: SparkSession, path: String, dropHeader: Boolean): Option[Dataset[String]] = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    if (!fs.exists(root)) return None
-    val st = fs.getFileStatus(root)
-    val all = if (st.isDirectory) fs.listStatus(root).toSeq else Seq(st)
-    if (all.exists(_.isDirectory)) return None // hive layout: fall back
-    val data = all.filter { f =>
-      val n = f.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (data.isEmpty || !data.forall(_.getPath.getName.endsWith(".gz"))) return None
+    val data = flatDataFiles(spark, path).getOrElse(return None)
+    if (!data.forall(_.getPath.getName.endsWith(".gz"))) return None
     // all-or-nothing probe: one header read decides for the directory
     // (write() produces uniform files; a foreign mixed directory falls
     // back whole rather than half-splitting)
-    if (MemberGzip.memberIndex(fs, data.head.getPath).isEmpty) return None
-    val names = data.map(_.getPath.toString)
+    val probe = data.head.getPath
+    if (MemberGzip.memberIndex(probe.getFileSystem(hconf), probe).isEmpty) return None
     val bc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(hconf))
-    val members = spark.createDataset(names)
-      .repartition(math.min(names.size, spark.sparkContext.defaultParallelism))
+    val members = spark.createDataset(data.map(_.getPath.toString))
       .flatMap { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         val tfs = p.getFileSystem(bc.value.value)
@@ -874,16 +841,12 @@ object GraftIO {
     Some(lines)
   }
 
-  /** The DSV read options both read paths share. The writer quotes
+  /** The dsv null sentinel of both read paths. The writer quotes
     * empty strings (`""`) and leaves nulls as unquoted empty fields;
     * with the default nullValue="" BOTH would collapse to null on read,
     * so nullValue moves to a sentinel no real field contains and `""`
     * survives as "". */
-  private def dsvOptions(r: DataFrameReader, sep: String): DataFrameReader =
-    r.option("sep", sep)
-      .option("escape", "\\")
-      .option("nullValue", "__graft_reserved_null__")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
+  private val DsvReadNull = "__graft_reserved_null__"
 
   /** Read a dataset (single file, directory tree, or glob) written by
     * `write` — or by anything else speaking the same formats. The
@@ -911,41 +874,35 @@ object GraftIO {
       options: Map[String, String] = Map.empty): DataFrame = {
 
     def load(recursive: Boolean): DataFrame = {
-      val reader0 = spark.read
-      val reader1 = schema.map(reader0.schema).getOrElse(reader0)
+      val reader0 = schema.fold(spark.read)(spark.read.schema)
       // recursiveFileLookup=true disables hive partition discovery, so
       // the resolved schema contains only data-file columns.
-      val reader = if (recursive) reader1.option("recursiveFileLookup", "true") else reader1
+      val reader = if (recursive) reader0.option("recursiveFileLookup", "true") else reader0
       // member-framed gzip text reads member-PARALLEL (r12, guide §6):
       // a one-stream .gz is one task per file no matter the size; the
       // MemberGzip framing turns each ~1 MiB member into its own unit
       // of read work. Engages only for flat directories of framed .gz
       // files with an explicit schema — everything else (plain gzip,
       // uncompressed, hive layouts, schema inference) falls through to
-      // the standard reader unchanged.
-      def memberSplit: Option[DataFrame] =
+      // the standard reader with the same format options.
+      def memberSplit: Option[Dataset[String]] =
         if (recursive || schema.isEmpty) None
-        else memberSplitLines(spark, path, dropHeader = header && format == Dsv).map { lines =>
-          format match {
-            case Dsv =>
-              dsvOptions(spark.read.schema(schema.get), sep)
-                .options(options).csv(lines) // header already stripped per file
-            case _ =>
-              spark.read.schema(schema.get)
-                .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
-                .options(options).json(lines)
-          }
-        }
+        else memberSplitLines(spark, path, dropHeader = header && format == Dsv)
       format match {
         case Parquet => reader.options(options).parquet(path)
-        case Dsv => memberSplit.getOrElse {
-          dsvOptions(reader, sep)
-            .option("header", header.toString)
-            .option("inferSchema", inferSchema.toString)
-            .options(options).csv(path)
-        }
-        case JsonLines => memberSplit.getOrElse(reader.options(options).json(path))
-        case Orc       => reader.options(options).orc(path)
+        case Dsv =>
+          val dsv = reader.options(dsvOptions(sep)).option("nullValue", DsvReadNull)
+          memberSplit match {
+            case Some(lines) => dsv.options(options).csv(lines) // header stripped per file
+            case None => dsv
+              .option("header", header.toString)
+              .option("inferSchema", inferSchema.toString)
+              .options(options).csv(path)
+          }
+        case JsonLines =>
+          val json = reader.options(options)
+          memberSplit.fold(json.json(path))(json.json)
+        case Orc => reader.options(options).orc(path)
       }
     }
 

@@ -580,7 +580,7 @@ object CorpusQueries {
     * so the shared gram frame keeps `g`. */
   def textLmScoreHeadServed(spark: SparkSession, dir: String, minCount: Long = 2L): DataFrame = {
     import spark.implicits._
-    val path = s"/tmp/graft_io/lm_head_${math.abs(dir.hashCode)}"
+    val path = IoQueries.tmpDir("lm_head", dir)
     val docGrams = stringDocGramCounts(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.io.ModelIO.saveLmHead(lmModelFromCounts(

@@ -14,7 +14,12 @@ import graft.io.{GraftIO, Merge}
   */
 object IoQueries {
 
-  private def tmpDir(name: String, sfDir: String): String =
+  /** The scratch path of a query's own written artifact, one per
+    * (name, input dir): the single place a query chooses where graft
+    * writes. perfbench's `RedirectFS` relies on this prefix (the
+    * `graft_io` root under /tmp) to move these writes and count their
+    * bytes. */
+  private[operators] def tmpDir(name: String, sfDir: String): String =
     s"/tmp/graft_io/${name}_${math.abs(sfDir.hashCode)}"
 
   /** Gzip-compressed pipe-separated values roundtrip of lineitem.

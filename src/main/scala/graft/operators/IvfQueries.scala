@@ -34,7 +34,7 @@ object IvfQueries {
     * centroids ([[graft.io.ModelIO]] round-trips floats bit-exact, so
     * this is bit-identical to [[annIvfTopk]] — IvfSpec pins that). */
   def annIvfTopkServed(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_io/ivf_centroids_${math.abs(dir.hashCode)}"
+    val path = IoQueries.tmpDir("ivf_centroids", dir)
     graft.io.ModelIO.saveCentroids(spark, trainCentroids(spark, dir), path)
     annIvfTopkWith(spark, dir, graft.io.ModelIO.loadCentroids(spark, path))
   }

@@ -13,8 +13,9 @@ package graft.text
   * candidate and an `isin` over thousands of literals optimizes to a
   * codegen'd InSet hash probe — O(1) per width per row, independent of
   * table size, and the table itself compiles once per query, not per
-  * row. UrlSpec pins the lookup form equal to the embedded regex form
-  * on every host shape the gate corpus and the embedded rule classes
+  * row. The embedded subset goes through the same lookup, parsed by
+  * [[parse]]; UrlSpec pins the full table equal to the embedded one on
+  * every host shape the gate corpus and the embedded rule classes
   * produce.
   */
 object Psl {
@@ -45,17 +46,22 @@ object Psl {
         .foldLeft(1)(math.max)
   }
 
-  /** Parse the list: one rule per line, `//` comments and blanks
+  /** Read and [[parse]] the list file at `path`. */
+  def load(path: String = SystemPath): Rules = {
+    import scala.jdk.CollectionConverters._
+    parse(java.nio.file.Files
+      .readAllLines(java.nio.file.Paths.get(path), java.nio.charset.StandardCharsets.UTF_8)
+      .asScala.toSeq)
+  }
+
+  /** Parse list lines: one rule per line, `//` comments and blanks
     * skipped, rules lowercased (the PSL algorithm is case-insensitive
     * and [[UrlFunctions.urlHost]] lowercases hosts). Unicode IDN rules
     * are kept verbatim — ASCII hosts simply never match them, and a
     * pipeline feeding punycode hosts treats xn-- labels as ordinary
     * labels exactly as the algorithm specifies. */
-  def load(path: String = SystemPath): Rules = {
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(path), java.nio.charset.StandardCharsets.UTF_8)
-      .asScala.iterator
+  def parse(rawLines: Seq[String]): Rules = {
+    val lines = rawLines.iterator
       .map(_.trim.toLowerCase(java.util.Locale.ROOT))
       .filter(l => l.nonEmpty && !l.startsWith("//"))
       .toVector

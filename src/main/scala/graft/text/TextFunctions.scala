@@ -121,24 +121,10 @@ object TextFunctions {
   private[graft] def punctCountRegex(text: Column): Column =
     regexp_count(text, lit("[^A-Za-z0-9\\s]")).cast("int")
 
-  /** Punctuation character ratio. */
-  def punctRatio(text: Column): Column =
-    punctCount(text) / greatest(length(text), lit(1)).cast("double")
-
-  /** Heuristic quality score in [0,1]:
-    * 0.4·min(1, chars/500) + 0.3·stopword-ratio + 0.3·(1 − punct-ratio).
+  /** Heuristic quality score in integer basis points (0..10000):
+    * 10000·(0.4·min(1, chars/500) + 0.3·stopword-ratio + 0.3·(1 − punct-ratio)).
     * Length rewards substance, stopwords reward natural prose, heavy
-    * punctuation (markup/code debris) penalizes. */
-  def qualityScore(text: Column): Column = {
-    val ct = scanCounts(text)
-    val lenTerm = least(length(text) / lit(500.0), lit(1.0))
-    val stopTerm = ct.getField("hits").getItem(0) /
-      greatest(ct.getField("toks"), lit(1)).cast("double")
-    val punctTerm = ct.getField("punct") / greatest(length(text), lit(1)).cast("double")
-    round(lit(0.4) * lenTerm + lit(0.3) * stopTerm + lit(0.3) * (lit(1.0) - punctTerm), 4)
-  }
-
-  /** `qualityScore` in integer basis points (0..10000), computed with
+    * punctuation (markup/code debris) penalizes. Computed with
     * EXACT integer arithmetic: q_bp = round(10000·N/D) where
     * N = 2·m·t·c + 750·h·c + 750·(c−p)·t  and  D = 2500·t·c
     * (m = min(chars,500), t = max(tokens,1), c = max(chars,1),
@@ -180,7 +166,8 @@ object TextFunctions {
     floor((lit(10000L) * n + d / lit(2L)) / d).cast("long")
   }
 
-  /** `punctRatio` in exact integer basis points (see qualityScoreBp). */
+  /** Punctuation character ratio in exact integer basis points (see
+    * qualityScoreBp). */
   def punctRatioBp(text: Column): Column = {
     val ct = scanCounts(text)
     val c = greatest(ct.getField("chars"), lit(1)).cast("long")

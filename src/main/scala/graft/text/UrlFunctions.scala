@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
   * (domain blocklists, per-domain caps, TLD stats all key on the
   * registrable domain, not the raw host).
   *
-  * Everything here is a regexp/string expression, so it runs inside
-  * whole-stage codegen at the scan with zero UDF or shuffle cost, and
-  * restates verbatim in the DuckDB oracle (RE2-safe patterns only: no
-  * backreferences, no lookaround).
+  * Everything here is a regexp/string/set-membership expression, so
+  * it runs inside whole-stage codegen at the scan with zero UDF or
+  * shuffle cost. The DuckDB oracle restates each one in SQL (RE2-safe
+  * patterns only: no backreferences, no lookaround); for the
+  * registrable domain it states the same rules as a regex chain
+  * ([[SqlAlts]]), so the gate checks the lookup against a second
+  * formulation.
   *
   * The public-suffix table implements all THREE PSL rule classes
   * (publicsuffix.org/list, public data): normal multi-label rules
@@ -20,15 +23,14 @@ import org.apache.spark.sql.functions._
   * the named host is registrable despite a covering wildcard).
   * Precedence follows the PSL algorithm: exceptions beat wildcards
   * beat normal rules beat the implicit `*` default, and within a
-  * class the longest (most-label) match wins — the when-chain below
-  * is ordered by exactly that precedence. The embedded table is a
+  * class the longest (most-label) match wins. The embedded table is a
   * representative subset (~200 normal rules, every wildcard/exception
   * rule class); a production deployment swaps in the full generated
-  * list — same expression SHAPE, the lists only change alternation
-  * literals compiled once per query, not per row. Bracketed IPv6
-  * hosts are out of scope (return '' from [[urlHost]]'s host class)
-  * and punycode (xn--) labels are treated as ordinary labels, which
-  * is exactly what the PSL algorithm specifies.
+  * list ([[Psl.load]]) — same per-width lookup, only the membership
+  * sets grow. Bracketed IPv6 hosts are out of scope (return '' from
+  * [[urlHost]]'s host class) and punycode (xn--) labels are treated
+  * as ordinary labels, which is exactly what the PSL algorithm
+  * specifies.
   */
 object UrlFunctions {
 
@@ -129,89 +131,71 @@ object UrlFunctions {
   def isIpv4(host: Column): Column =
     host.rlike("^((25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])\\.){3}(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])$")
 
+  /** The embedded rule lists as a [[Psl.Rules]] table, parsed exactly
+    * as the full list file is. */
+  private val EmbeddedRules: Psl.Rules = Psl.parse(
+    MultiLabelSuffixes ++ WildcardSuffixBases.map("*." + _) ++ ExceptionRules.map("!" + _))
+
   private def alt(xs: Seq[String]): String =
     xs.map(_.replace(".", "\\.")).mkString("|")
 
-  private val multiSuffixAlt = alt(MultiLabelSuffixes)
-  private val exc2Alt = alt(ExceptionRules.filter(_.count(_ == '.') == 1))
-  private val exc3Alt = alt(ExceptionRules.filter(_.count(_ == '.') == 2))
-  private val wild1Alt = alt(WildcardSuffixBases.filter(!_.contains('.')))
-  private val wild2Alt = alt(WildcardSuffixBases.filter(_.contains('.')))
-
-  /** The alternation literals, exposed so the DuckDB oracle SQL is
-    * BUILT from the same lists the Spark expression compiles — the
-    * two engines cannot drift. */
+  /** The embedded lists as regex alternations, from which the DuckDB
+    * oracle SQL is BUILT — the oracle states the rules as a precedence
+    * chain of suffix regexes over the same lists the Spark lookup
+    * parses, so the two engines cannot drift. */
   object SqlAlts {
-    val multi: String = multiSuffixAlt
-    val exc2: String = exc2Alt
-    val exc3: String = exc3Alt
-    val wild1: String = wild1Alt
-    val wild2: String = wild2Alt
+    val multi: String = alt(MultiLabelSuffixes)
+    val exc2: String = alt(ExceptionRules.filter(_.count(_ == '.') == 1))
+    val exc3: String = alt(ExceptionRules.filter(_.count(_ == '.') == 2))
+    val wild1: String = alt(WildcardSuffixBases.filter(!_.contains('.')))
+    val wild2: String = alt(WildcardSuffixBases.filter(_.contains('.')))
   }
 
   /** Registrable domain (eTLD+1) under the PSL algorithm over the
-    * embedded rule table. Precedence top to bottom (first match wins =
-    * PSL's exception-beats-wildcard-beats-normal, longest first):
-    *
-    *  - IP literals pass through whole;
-    *  - exception rules: the rule itself is the registrable domain —
-    *    keep the host's last `labels(rule)` labels;
-    *  - wildcard rules `*.base`: every label under the base is a
-    *    public suffix — keep `labels(base) + 2` labels;
-    *  - normal 2-label rules: keep the last three labels;
-    *  - default `*` rule: keep the last two.
-    *
-    * A host that IS a public suffix (or has fewer labels than the
-    * matched rule wants) returns itself — no registrable part exists
-    * below it. */
-  def registrableDomain(host: Column): Column = {
-    val last2 = regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
-    val last3 = regexp_extract(host, "([^.]+\\.[^.]+\\.[^.]+)$", 1)
-    val last4 = regexp_extract(host, "([^.]+\\.[^.]+\\.[^.]+\\.[^.]+)$", 1)
-    def orHost(c: Column): Column = when(c === "", host).otherwise(c)
-    when(isIpv4(host), host)
-      .when(host.rlike(s"(^|\\.)($exc3Alt)$$"), orHost(last3))
-      .when(host.rlike(s"(^|\\.)($exc2Alt)$$"), orHost(last2))
-      .when(host.rlike(s"\\.($wild2Alt)$$"), orHost(last4))
-      .when(host.rlike(s"\\.($wild1Alt)$$"), orHost(last3))
-      .when(host.rlike(s"(^|\\.)($multiSuffixAlt)$$"), orHost(last3))
-      .otherwise(orHost(last2))
-  }
+    * embedded rule table ([[registrableDomainFull]] over the embedded
+    * lists). IP literals pass through whole; a host that IS a public
+    * suffix (or has fewer labels than the matched rule wants) returns
+    * itself — no registrable part exists below it. */
+  def registrableDomain(host: Column): Column = registrableDomainFull(host, EmbeddedRules)
 
-  /** Registrable domain under the COMPLETE public-suffix table — the
-    * production swap the embedded-subset docs promise, in the form
-    * that survives the swap: per-width membership probes instead of a
+  /** Registrable domain under a parsed rule table — the embedded
+    * subset ([[registrableDomain]]) or the COMPLETE public-suffix list
+    * ([[Psl.load]]). Per-width membership probes instead of a
     * ~9.5k-literal alternation regex (pattern size is not free in
     * codegen; a hash-set probe is O(1) per row regardless of table
     * size — Catalyst rewrites a >10-literal `isin` to a codegen'd
     * InSet).
     *
-    * Same PSL algorithm and precedence as [[registrableDomain]]:
-    * exceptions (longest first) beat everything; then the longest
-    * matching rule, where a normal w-label rule keeps w+1 labels and a
-    * wildcard `*.base` (base w-1 labels) is a w-label rule keeping
-    * w+1; then the implicit `*` default keeps 2. `substring_index`
-    * returns the WHOLE host when it has fewer labels than asked —
-    * exactly the "host IS a public suffix → return itself" fallback
-    * the regex form gets from orHost, and a k-label rule can never
-    * spuriously match a shorter host (string equality implies equal
-    * dot counts). UrlSpec pins this equal to the regex form on every
-    * embedded rule class and on the gate corpus's host shapes. */
-  def registrableDomainFull(host: Column, rules: graft.text.Psl.Rules): Column = {
+    * PSL precedence: exceptions (longest first) beat everything; then
+    * the longest matching rule, where a normal w-label rule keeps w+1
+    * labels and a wildcard `*.base` (base w-1 labels) is a w-label rule
+    * keeping w+1; then the implicit `*` default keeps 2. A kept suffix
+    * is the host's last k labels; when the host has fewer, or one of
+    * those labels is empty (`a..co.uk`, a trailing dot), the whole host
+    * is returned — the oracle's regex chain answers the same. A k-label
+    * rule can never spuriously match a shorter host (string equality
+    * implies equal dot counts). UrlSpec pins the full table equal to
+    * the embedded one on every embedded rule class and on the gate
+    * corpus's host shapes. */
+  def registrableDomainFull(host: Column, rules: Psl.Rules): Column = {
     def lastK(k: Int): Column = substring_index(host, ".", -k)
+    def keep(k: Int): Column = {
+      val s = lastK(k)
+      when(s.startsWith(".") || s.endsWith(".") || s.contains(".."), host).otherwise(s)
+    }
     val excBranches = rules.exceptions.toSeq.sortBy(-_._1).map { case (w, hs) =>
-      (lastK(w).isin(hs: _*), lastK(w))
+      (lastK(w).isin(hs: _*), keep(w))
     }
     val ruleBranches = (rules.maxWidth to 1 by -1).flatMap { w =>
       val conds = Seq(
         rules.normal.get(w).map(ns => lastK(w).isin(ns: _*)),
         rules.wildcardBases.get(w - 1).map(bs => lastK(w - 1).isin(bs: _*))
       ).flatten
-      conds.reduceOption(_ || _).map(c => (c, lastK(w + 1)))
+      conds.reduceOption(_ || _).map(c => (c, keep(w + 1)))
     }
     (excBranches ++ ruleBranches)
       .foldLeft(when(isIpv4(host), host)) { case (acc, (c, v)) => acc.when(c, v) }
-      .otherwise(lastK(2))
+      .otherwise(keep(2))
   }
 
   private val TrackingParam = "(utm_[A-Za-z0-9_]*|fbclid|gclid)"

@@ -101,6 +101,23 @@ class MemberGzipSpec extends AnyFunSuite with SparkSpec {
     assert(back.orderBy($"id").collect().toSeq === df.orderBy($"id").collect().toSeq)
   }
 
+  test("member-split and plain reads agree on microsecond timestamps, nulls and empty strings") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    val df = Seq(
+      (1L, Some(Timestamp.valueOf("2024-01-02 03:04:05.123456")), Some("a")),
+      (2L, None, Some("")),
+      (3L, Some(Timestamp.valueOf("2024-12-31 23:59:59")), None))
+      .toDF("id", "ts", "s")
+    for (format <- Seq(GraftIO.Dsv, GraftIO.JsonLines); gzip <- Seq(true, false)) {
+      val dir = tmp()
+      GraftIO.write(df, dir, format, gzip = gzip)
+      val back = GraftIO.read(spark, dir, format, schema = Some(df.schema))
+      assert(back.orderBy($"id").collect().toSeq === df.orderBy($"id").collect().toSeq,
+        s"${format.name} gzip=$gzip")
+    }
+  }
+
   test("foreign (one-stream) gzip falls back to the standard reader") {
     import spark.implicits._
     val dir = tmp()

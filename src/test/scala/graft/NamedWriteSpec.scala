@@ -15,6 +15,26 @@ class NamedWriteSpec extends AnyFunSuite with SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft_named").toString
 
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // the listener bus is async: wait until the count stops moving
+      var last = -1
+      var spins = 0
+      while (jobs.get() != last && spins < 50) {
+        last = jobs.get(); Thread.sleep(100); spins += 1
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   test("writeNamed: named chunk files per hive partition, lossless roundtrip") {
     import spark.implicits._
     val df = (1 to 100).map(i => (i.toLong, s"u$i", if (i % 2 == 0) "a" else "b"))
@@ -38,28 +58,39 @@ class NamedWriteSpec extends AnyFunSuite with SparkSpec {
   test("writeNamed: a multi-partition export runs exactly one scan job") {
     import spark.implicits._
     val df = (1 to 60).map(i => (i.toLong, s"v$i", s"p${i % 6}")).toDF("id", "v", "k")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      GraftIO.writeNamed(df, tmp(), GraftIO.Dsv,
-        partitionBy = Seq("k"), suffixes = Seq("c1.tsv", "c2.tsv"))
-      // the listener bus is async: wait until the count stops moving
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 50) {
-        last = jobs.get(); Thread.sleep(100); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsDuring(GraftIO.writeNamed(df, tmp(), GraftIO.Dsv,
+      partitionBy = Seq("k"), suffixes = Seq("c1.tsv", "c2.tsv")))
     // 6 partition tuples × 2 chunks, all non-empty: the round-4
     // per-tuple loop ran a distinct-collect plus one write job per
     // (tuple, chunk) — 13 jobs. The single-pass write is O(1) jobs
     // regardless of directory count (AQE runs the repartition's map
     // stage as its own job, hence <= 2, not == 1).
-    assert(jobs.get() <= 2, s"expected O(1) jobs, saw ${jobs.get()}")
+    assert(jobs <= 2, s"expected O(1) jobs, saw $jobs")
+  }
+
+  test("writeNamed: (tuple, chunk) pairs with no rows get empty files in O(1) jobs") {
+    import spark.implicits._
+    // 3 rows over 2 tuples and 4 suffixes: at least 5 of the 8 named
+    // files get no rows
+    val df = Seq((1L, "x", "a"), (2L, "y", "a"), (3L, "z", "b")).toDF("id", "v", "k")
+    val suffixes = Seq("c1.parquet", "c2.parquet", "c3.parquet", "c4.parquet")
+    val out = tmp()
+    val jobs = jobsDuring(GraftIO.writeNamed(df, out, partitionBy = Seq("k"), suffixes = suffixes))
+    // the one-scan write (<= 2, see above) plus ONE empty-template
+    // write, however many names are missing
+    assert(jobs <= 3, s"expected O(1) jobs, saw $jobs")
+
+    val named = for (k <- Seq("a", "b"); s <- suffixes) yield s"$out/k=$k/$s"
+    val fss = FileSystems(spark)
+    named.foreach(f => assert(fss.exists(f), s"missing $f"))
+    val counts = named.map { f =>
+      val back = spark.read.parquet(f)
+      assert(back.schema.map(c => c.name -> c.dataType) ===
+        df.drop("k").schema.map(c => c.name -> c.dataType), s"schema of $f")
+      back.count()
+    }
+    assert(counts.sum === 3L)
+    assert(counts.count(_ == 0L) >= 5, s"per-file row counts $counts")
   }
 
   test("writeNamed: custom partition transformer controls layout") {

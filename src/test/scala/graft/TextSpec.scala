@@ -122,8 +122,8 @@ class TextSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val prose = "the cat sat on the mat and it is a fine day in the sun"
     val soup = "@#$% ^&*() !!!! ;;;; ::::"
-    val qProse = one[java.math.BigDecimal](qualityScore($"t").cast("decimal(10,4)"), prose).doubleValue()
-    val qSoup = one[java.math.BigDecimal](qualityScore($"t").cast("decimal(10,4)"), soup).doubleValue()
+    val qProse = one[Double](qualityScoreBp($"t") / 10000.0, prose)
+    val qSoup = one[Double](qualityScoreBp($"t") / 10000.0, soup)
     assert(qProse > qSoup)
     assert(qProse >= 0.0 && qProse <= 1.0 && qSoup >= 0.0 && qSoup <= 1.0)
   }

@@ -82,6 +82,23 @@ class UrlSpec extends SparkSpec {
     }
   }
 
+  test("registrableDomain: a kept suffix with an empty label returns the whole host") {
+    // the oracle's regex chain keeps only non-empty labels, so an empty
+    // label among the ones kept falls back to the host itself
+    val cases = Seq(
+      "example.com." -> "example.com.",
+      "x..co.uk" -> "x..co.uk",
+      "a..b.example.com" -> "example.com",
+      ".com" -> ".com",
+      "foo..ck" -> "foo..ck")
+    val got = cases.map(_._1).toDF("host")
+      .select($"host", UrlFunctions.registrableDomain($"host").as("d"))
+      .as[(String, String)].collect().toMap
+    cases.foreach { case (h, expect) =>
+      assert(got(h) === expect, s"registrableDomain($h)")
+    }
+  }
+
   test("domainTld: suffix after the first label; null for IPs and single labels") {
     val got = Seq(
       ("example.com", false), ("bbc.co.uk", false),
@@ -207,7 +224,7 @@ class UrlSpec extends SparkSpec {
     assert(domains.exists(_.endsWith(".co.uk")), "multi-label suffix missing")
   }
 
-  test("FULL public-suffix table (9.5k rules) == embedded regex on every gate and rule-class host") {
+  test("FULL public-suffix table (9.5k rules) == embedded table on every gate and rule-class host") {
     import graft.text.{Psl, UrlFunctions}
     val rules = Psl.load()
     assert(rules.ruleCount > 9000, s"full PSL should parse ~9.5k rules, got ${rules.ruleCount}")
@@ -225,11 +242,11 @@ class UrlSpec extends SparkSpec {
         "192.168.3.7", "999.1.1.1", "cdn.xn--src5-4ab.com", "", "localhost")
     val cmp = classHosts.toDF("host")
       .select($"host",
-        UrlFunctions.registrableDomain($"host").as("regex"),
-        UrlFunctions.registrableDomainFull($"host", rules).as("lookup"))
+        UrlFunctions.registrableDomain($"host").as("embedded"),
+        UrlFunctions.registrableDomainFull($"host", rules).as("full"))
       .collect()
     val bad = cmp.filter(r => r.getString(1) != r.getString(2))
-    assert(bad.isEmpty, "full-table lookup diverged from embedded regex on: " +
+    assert(bad.isEmpty, "full-table lookup diverged from the embedded table on: " +
       bad.map(r => s"${r.getString(0)} (${r.getString(1)} vs ${r.getString(2)})").mkString(", "))
     // battery 2: the gate corpus's actual hosts (every urlCol shape)
     val gateCmp = Tables.documents(spark, sf)
@@ -237,8 +254,8 @@ class UrlSpec extends SparkSpec {
         graft.operators.UrlQueries.urlCol(coalesce($"source", lit("")), $"doc_id")).as("host"))
       .distinct()
       .select($"host",
-        UrlFunctions.registrableDomain($"host").as("regex"),
-        UrlFunctions.registrableDomainFull($"host", rules).as("lookup"))
+        UrlFunctions.registrableDomain($"host").as("embedded"),
+        UrlFunctions.registrableDomainFull($"host", rules).as("full"))
       .collect()
     assert(gateCmp.nonEmpty)
     val gateBad = gateCmp.filter(r => r.getString(1) != r.getString(2))
